@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 
 import numpy as np
 import pyarrow as pa
@@ -202,6 +203,70 @@ def write_documents(docs: dict, path: str) -> None:
         }
     )
     pq.write_table(table, path)
+
+
+#: English stopwords of the quality operators (``text.STOPWORDS["en"]``).
+_EN_STOP = frozenset(["the", "a", "and", "of", "to", "in", "is", "it"])
+_PUNCT = re.compile(r"[!-/:-@\[-`{-~]")
+_DIGIT = re.compile(r"[0-9]")
+_SYMBOL = re.compile(r"[#…]|\.\.\.")
+_ALPHA = re.compile(r"[A-Za-z]")
+
+
+def passes_quality(text: str, *, min_score: float, min_words: int, min_stopword_hits: int) -> bool:
+    """Python recomputation of the curate quality filter:
+    ``text.quality_score >= min_score`` and ``text.gopher_rules(...).keep``
+    with the other Gopher thresholds at their defaults."""
+    toks = text.split()
+    n = len(toks)
+    n_chars = max(len(text), 1)
+    stop = sum(t.lower() in _EN_STOP for t in toks)
+    punct = len(_PUNCT.findall(text)) / n_chars
+    digit = len(_DIGIT.findall(text)) / n_chars
+    len_score = n / 5.0 if n < 5 else (0.5 if n > 5000 else 1.0)
+    score = (
+        len_score
+        * (1.0 - min(punct * 2, 1.0))
+        * (1.0 - min(digit * 2, 1.0))
+        * (0.5 + min(stop / max(n, 1) * 2, 0.5))
+    )
+    mean_wl = sum(len(t) for t in toks) / n if n else 0.0
+    gopher = (
+        min_words <= n <= 100_000
+        and 3.0 <= mean_wl <= 10.0
+        and (len(_SYMBOL.findall(text)) / n if n else 0.0) <= 0.1
+        and (sum(bool(_ALPHA.search(t)) for t in toks) / n if n else 0.0) >= 0.8
+        and stop >= min_stopword_hits
+    )
+    return round(score, 6) >= min_score and gopher
+
+
+def near_dup_survivors(ids: list[int], texts: list[str], threshold: float, n: int = 3) -> set[int]:
+    """Python recomputation of ``ngram_jaccard_pairs`` + ``dedup_survivors``:
+    docs linked by word ``n``-gram Jaccard >= ``threshold`` form clusters
+    (transitively); each cluster keeps its minimum id."""
+    shingles = {}
+    postings: dict[str, list[int]] = {}
+    for i, t in zip(ids, texts):
+        w = t.split()
+        shingles[i] = {" ".join(w[k : k + n]) for k in range(len(w) - n + 1)}
+        for s in shingles[i]:
+            postings.setdefault(s, []).append(i)
+    parent = {i: i for i in ids}
+
+    def root(i: int) -> int:
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    candidates = {(a, b) for p in postings.values() for a in p for b in p if a < b}
+    for a, b in candidates:
+        inter = len(shingles[a] & shingles[b])
+        if inter / (len(shingles[a]) + len(shingles[b]) - inter) >= threshold:
+            ra, rb = root(a), root(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i for i in ids if root(i) == i}
 
 
 def make_embeddings(seed: int, n_vecs: int, n_twins: int, dim: int = 64) -> dict:

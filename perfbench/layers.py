@@ -47,13 +47,17 @@ def per_layer(run, session_s: float) -> dict[str, tuple[float, str]]:
             if s["name"] != "store.serve_features":
                 continue
             ch = kids[s["id"]]
-            if any(c["name"] == "cache.get" and not c.get("result") for c in ch):
+            if any(c["name"] == "cache.get" and c.get("result") is False for c in ch):
                 resolve = sum(c["end"] - c["start"] for c in ch if c["name"] == "store.latest_version")
                 total += (s["end"] - s["start"]) - resolve
         return total
 
-    gets = [s for r in traced for s in by_req[r] if s["name"] == "cache.get"]
-    hits = sum(1 for s in gets if s.get("result"))
+    def lookups(r: int, hit: bool) -> int:
+        """Serving-index cache lookups of request ``r`` that hit (or missed)."""
+        return sum(1 for s in by_req[r] if s["name"] == "cache.get" and s.get("result") is hit)
+
+    hits = sum(lookups(r, True) for r in traced)
+    misses = sum(lookups(r, False) for r in traced)
     m: dict[str, tuple[float, str]] = {
         "session.get_spark_s": (session_s, "s"),
         "extractors.extract_calls": (req_count("extractors.extract"), "count"),
@@ -75,9 +79,9 @@ def per_layer(run, session_s: float) -> dict[str, tuple[float, str]]:
         "store.bytes_per_version": (float(run.gauges.get("store.bytes_per_version", 0)), "B"),
         "readers.read_table_s": (req_sum("readers.read_table"), "s"),
         "cache.get_us": (per_call("cache.get", "self_s") * 1e6, "us"),
-        "cache.hits": (_median(sum(1 for s in by_req[r] if s["name"] == "cache.get" and s.get("result")) for r in traced), "count"),
-        "cache.misses": (_median(sum(1 for s in by_req[r] if s["name"] == "cache.get" and not s.get("result")) for r in traced), "count"),
-        "cache.hit_ratio": (hits / len(gets) if gets else 0.0, "ratio"),
+        "cache.hits": (_median(lookups(r, True) for r in traced), "count"),
+        "cache.misses": (_median(lookups(r, False) for r in traced), "count"),
+        "cache.hit_ratio": (hits / (hits + misses) if hits + misses else 0.0, "ratio"),
         "monitor.log_calls": (req_count("monitor.log"), "count"),
     }
     for st in CURATE_STAGES:

@@ -1,6 +1,6 @@
 """Feature-store benchmark: one command, one workload per invocation.
 
-    python3 perfbench/run.py --workload publish --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload publish --seed 1 --seconds 4 --trace 0
 
 Run from the repository root. The inputs are generated from ``--seed``;
 the program under test is the ``ml_feature_store_pipeline_spark`` package
@@ -44,8 +44,11 @@ def configure_env(work: str) -> None:
     os.environ["TZ"] = "UTC"  # collected timestamps are naive local times
     time.tzset()
     os.environ["TMPDIR"] = tmp
-    os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
+    # local[N] with N half the CPUs: the other half runs the Spark driver's
+    # threads (the Python client, the JVM's scheduler, JIT and GC); on a
+    # host shared with other tenants runs repeated better than with all
+    # CPUs (README, "Steadiness")
+    os.environ["SPARK_GRAFT_CPUS"] = str(max(1, len(os.sched_getaffinity(0)) // 2))
     os.environ["PYSPARK_SUBMIT_ARGS"] = (
         "--conf spark.ui.showConsoleProgress=false "
         f"--conf spark.local.dir={os.path.join(work, 'spark-local')} "
@@ -91,6 +94,7 @@ def main(argv=None) -> int:
     from ml_feature_store_pipeline_spark.session import get_spark
 
     spark = None
+    samples: dict[str, int] = {}
     try:
         t0 = time.perf_counter()
         spark = get_spark("perfbench")
@@ -106,17 +110,21 @@ def main(argv=None) -> int:
             os.makedirs(spans_dir, exist_ok=True)
             run.tracer.dump(os.path.join(spans_dir, f"{args.workload}-{args.seed}.jsonl"))
         else:
+            # the report prints each with its sample count: setup_s is a
+            # median over the repeated ready steps, request_p50_ms over the
+            # timed requests
             metrics = {
                 "setup_s": (run.setup_s(session_s), "s"),
                 "request_p50_ms": (run.request_p50_ms(), "ms"),
                 "driver_peak_rss_mb": (resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, "MB"),
             }
+            samples = {"setup_s": len(run.ready_s), "request_p50_ms": len(run.latency)}
     finally:
         if spark is not None:
             stop_spark(spark)
         shutil.rmtree(work, ignore_errors=True)
 
-    print_report(args, run, metrics, session_s)
+    print_report(args, run, metrics, samples, session_s)
     correct = bool(run.checks) and all(ok for _, ok, _ in run.checks) and bool(run.latency)
     print(
         json.dumps(
@@ -131,7 +139,7 @@ def main(argv=None) -> int:
     return 0
 
 
-def print_report(args, run, metrics, session_s: float) -> None:
+def print_report(args, run, metrics, samples, session_s: float) -> None:
     print(f"== perfbench {args.workload} seed={args.seed} seconds={args.seconds:g} trace={args.trace}")
     for name, ok, detail in run.checks:
         if not ok or len(run.checks) < 40:
@@ -143,7 +151,7 @@ def print_report(args, run, metrics, session_s: float) -> None:
     for name, (value, unit, n) in run.report.items():
         print(f"{name} {value:.6g} {unit}" + (f" (n={n})" if n is not None else ""))
     for name, (value, unit) in metrics.items():
-        print(f"{name} {value:.6g} {unit}")
+        print(f"{name} {value:.6g} {unit}" + (f" (n={samples[name]})" if name in samples else ""))
 
 
 if __name__ == "__main__":

@@ -69,7 +69,8 @@ class Tracer:
 
     def wrap(self, owner: object, attr: str, name: str, *, spark: bool = True, result=None) -> None:
         """Replace ``owner.attr`` by a wrapper that opens span ``name``.
-        ``result`` maps the return value to a value kept on the span."""
+        ``result(out, *args, **kwargs)`` maps the return value and the
+        call's arguments to a value kept on the span."""
         orig = getattr(owner, attr)
         tracer = self
 
@@ -78,7 +79,7 @@ class Tracer:
             with tracer.span(name, spark=spark) as rec:
                 out = orig(*args, **kwargs)
                 if rec is not None and result is not None:
-                    rec["result"] = result(out)
+                    rec["result"] = result(out, *args, **kwargs)
                 return out
 
         self._patches.append((owner, attr, orig))

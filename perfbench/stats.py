@@ -46,8 +46,3 @@ def summary(values: list[float]) -> dict:
         "tail": percentile(values, p) if p is not None else None,
     }
 
-
-def spread(values: list[float]) -> float:
-    """Interquartile distance as a share of the median."""
-    q1, q2, q3 = statistics.quantiles(values, n=4)
-    return (q3 - q1) / q2

@@ -98,3 +98,32 @@ def test_topk_cosine_orders_by_similarity_then_id():
     corpus = np.array([[1, 0], [1, 0], [0, 1], [1, 1]], dtype=np.float32)
     out = gen.topk_cosine(np.array([[1, 0]], np.float32), np.array([9]), corpus, np.array([5, 3, 8, 1]), 3)
     assert [c for c, _ in out[9]] == [3, 5, 1]
+
+
+def test_quality_recomputation_keeps_prose_and_drops_junk():
+    q = {"min_score": 0.3, "min_words": 10, "min_stopword_hits": 1}
+    prose = "the spark table is a feature store of user events and the cache serves them"
+    assert gen.passes_quality(prose, **q)
+    assert not gen.passes_quality("the spark table is short", **q)  # fewer than 10 words
+    assert not gen.passes_quality(" ".join(f"{i}#{i}" for i in range(20)), **q)  # digits and symbols
+    no_stop = "spark table feature store user events cache serves them quickly every day"
+    assert not gen.passes_quality(no_stop, **q)
+    assert gen.passes_quality(no_stop, **{**q, "min_stopword_hits": 0})
+
+
+def test_near_dup_survivors_keep_the_min_id_of_each_linked_cluster():
+    a = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
+    a2 = a.replace("w10", "x")  # 7 of 9 shingles shared with a
+    a3 = a2.replace("w1 ", "y ")  # linked to a2, so to a, transitively
+    b = "v1 v2 v3 v4 v5 v6"
+    assert gen.near_dup_survivors([3, 7, 9, 4], [a, a2, a3, b], 0.5) == {3, 4}
+    assert gen.near_dup_survivors([3, 7], [a, a2], 0.9) == {3, 7}
+
+
+def test_planted_near_copies_link_and_originals_do_not():
+    d = gen.make_documents(11, 300, 0, 10)
+    ids = d["doc_id"].tolist()
+    survivors = gen.near_dup_survivors(ids, d["text"], 0.3)
+    long_src = {int(c) for c, s in zip(d["near_ids"], d["near_src"]) if len(d["text"][s].split()) >= 10}
+    assert set(ids) - survivors >= long_src
+    assert set(ids) - survivors <= set(d["near_ids"].tolist())

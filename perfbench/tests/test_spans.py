@@ -33,7 +33,7 @@ def test_nested_spans_record_parent_request_and_self_time(tmp_path):
     t = Tracer()
     t.enabled = True
     t.request = 7
-    t.wrap(_Thing, "work", "thing.work", result=lambda v: v)
+    t.wrap(_Thing, "work", "thing.work", result=lambda v, thing, x: v + x)
     with t.span("outer"):
         assert _Thing().work(3) == 6
         assert _Thing().work(4) == 8
@@ -42,7 +42,7 @@ def test_nested_spans_record_parent_request_and_self_time(tmp_path):
     outer = next(s for s in t.spans if s["name"] == "outer")
     inner = [s for s in t.spans if s["name"] == "thing.work"]
     assert [s["parent"] for s in inner] == [outer["id"], outer["id"]]
-    assert [s["result"] for s in inner] == [6, 8]
+    assert [s["result"] for s in inner] == [9, 12]
     assert all(s["request"] == 7 for s in t.spans)
     covered = sum(s["end"] - s["start"] for s in inner)
     assert outer["self_s"] == pytest.approx(outer["end"] - outer["start"] - covered)

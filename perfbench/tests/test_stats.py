@@ -1,7 +1,7 @@
 import numpy as np
 import pytest
 
-from stats import percentile, spread, summary, tail_percentile
+from stats import percentile, summary, tail_percentile
 
 
 @pytest.mark.parametrize(
@@ -35,6 +35,3 @@ def test_summary_reports_count_and_omits_unsupported_tail():
     assert s["tail"] == pytest.approx(np.percentile(range(200), 95))
     assert summary([])["n"] == 0
 
-
-def test_spread_is_iqr_over_median():
-    assert spread([1.0, 2.0, 3.0, 4.0, 5.0]) == pytest.approx((4.5 - 1.5) / 3.0)
