@@ -62,9 +62,10 @@ def main() -> None:
 
     # staleness SLA in the lifecycle: register → serve → re-register →
     # serve must flip to v2 IMMEDIATELY (the serving index is
-    # version-scoped and latest_version() is never cached — unlike the
-    # reference's TTL cache, whose entries are never invalidated on
-    # re-registration and can lag a version's DB rows by up to 3600 s).
+    # version-scoped and latest_version() re-reads the manifest whenever
+    # it changed — unlike the reference's TTL cache, whose entries are
+    # never invalidated on re-registration and can lag a version's DB rows
+    # by up to 3600 s).
     v2_rows = store.get_features(v2, use_cache=False)
     fresh_user = v2_rows.select("user_id").limit(1).collect()[0][0]
     served_now = store.serve_features(fresh_user)  # version=None -> latest

@@ -1,9 +1,9 @@
 """Sinks: CSV/parquet writers + atomic small-table overwrite (SURVEY §2.A).
 
-``atomic_overwrite_parquet`` implements the A5 metadata-upsert pattern:
-parquet has no ``INSERT OR REPLACE`` (`ML Feature Store Pipeline.py:329-341`),
-so the (tiny) metadata table is rewritten via temp-path + rename — readers
-never observe a half-written table.
+``atomic_overwrite_parquet`` rewrites a small table (the streaming sinks'
+state tables) via temp-path + rename — parquet has no ``INSERT OR
+REPLACE`` (`ML Feature Store Pipeline.py:329-341`), and readers never
+observe a half-written table.
 """
 
 from __future__ import annotations
@@ -33,8 +33,8 @@ def atomic_overwrite_parquet(
     df: DataFrame, path: str, *, extra_files: dict[str, str] | None = None
 ) -> None:
     """Overwrite a SMALL table via a temp-dir write + two-rename swap.
-    Only for driver-managed small tables (metadata); big tables use
-    partition-level operations instead.
+    Only for driver-managed small tables; big tables use partition-level
+    operations instead.
 
     ``extra_files`` maps ``_``-prefixed sidecar names to text contents
     written into the temp dir BEFORE the swap, so markers (e.g. a

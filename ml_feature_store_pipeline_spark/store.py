@@ -4,39 +4,157 @@ Re-expresses the reference's ``AdvancedFeatureStore`` (`ML Feature Store
 Pipeline.py:229-541`) on Spark:
 
 - the SQLite ``features`` table (`:262-280`) → a parquet table partitioned
-  by ``feature_version``: append = write one new partition directory,
-  version reads prune to one subtree, retention = drop directories. At
-  100 TB the intended-but-broken SQLite indexes (`:277-278`) become
-  partition pruning (version) + parquet row-group min/max stats (user_id,
-  helped by sorting within partitions at write).
-- the ``feature_metadata`` table (`:282-292`) → a tiny typed parquet table,
-  upserted read-modify-write through an atomic directory swap (A5 has no
-  parquet INSERT OR REPLACE).
+  by ``feature_version``: each version is written to its own partition
+  directory, version reads prune to one subtree, retention = drop
+  directories. At 100 TB the intended-but-broken SQLite indexes
+  (`:277-278`) become partition pruning (version) + parquet row-group
+  min/max stats (user_id, helped by sorting within partitions at write).
+- the ``feature_metadata`` table (`:282-292`) → one JSON manifest,
+  ``{path}/_manifest.json``, with one entry per version:
+  ``FeatureMetadata.to_dict()`` plus a monotonic registration ``seq``.
+  Every metadata operation (latest / as-of resolution, point lookup,
+  listing, upsert, retention) runs on the driver over the parsed entries,
+  with no Spark job. Readers re-parse the file only when its stat changed,
+  so a publish from another store object or process is seen on the next
+  call. Writers hold an ``O_EXCL`` lock file for each read-modify-write
+  and swap the new file in with ``os.replace``.
 - asyncio/aiosqlite (`:261, :317, :373`) → not replicated: Spark supplies
   the parallelism; the public API is synchronous (SURVEY §3.4).
 """
 
 from __future__ import annotations
 
+import contextlib
+import copy
 import datetime as _dt
+import json
 import os
+import time
+import uuid
+from collections.abc import Iterator
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from .cache import CacheBackend, InMemoryTTLCache, cache_key
-from .config import DataQualityMetrics, FeatureMetadata
+from .config import DataQualityMetrics, FeatureConfig, FeatureMetadata
 from .monitor import FeatureMonitor
 from .quality import DataQualityValidator
-from .schemas import CREATED_AT_COLUMN, METADATA_SCHEMA, VERSION_COLUMN
-from .sources.writers import atomic_overwrite_parquet, drop_partition_dirs, list_partition_values
+from .schemas import CREATED_AT_COLUMN, VERSION_COLUMN
+from .sources.writers import drop_partition_dirs, list_partition_values
+from .sources.writers import atomic_overwrite_parquet  # noqa: F401 - perfbench's traced mode patches it here
 from .versioning import content_version
+
+MANIFEST_NAME = "_manifest.json"
+#: Seconds a writer waits for another writer's manifest lock before failing.
+LOCK_TIMEOUT_S = 60.0
 
 
 def _utc_now_iso() -> str:
     """ISO-8601 UTC stamp (reference H2 `:634`) — lexicographic == chronological."""
     return _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None).isoformat()
+
+
+class _Manifest:
+    """The store's version metadata as one JSON document,
+    ``{"seq": <last registration seq>, "versions": [entry, ...]}``.
+
+    Reads re-parse the file only when its (mtime_ns, size, inode) changed.
+    Each update re-reads the file under an ``O_EXCL`` lock file beside it,
+    writes a temp file and swaps it in with ``os.replace``: readers see the
+    old document or the new one, never a partial one, and concurrent
+    writers cannot lose each other's updates."""
+
+    def __init__(self, path: str) -> None:
+        self.path = path
+        self.lock_path = path + ".lock"
+        self._cached: tuple[tuple[int, int, int], dict] | None = None
+
+    def entries(self) -> list[dict]:
+        """The current entries; callers must not mutate them."""
+        try:
+            st = os.stat(self.path)
+        except FileNotFoundError:
+            return []
+        cached = self._cached
+        if cached is None or cached[0] != (st.st_mtime_ns, st.st_size, st.st_ino):
+            cached = self._parse()
+        return cached[1]["versions"]
+
+    def _parse(self) -> tuple[tuple[int, int, int], dict]:
+        try:
+            fh = open(self.path)
+        except FileNotFoundError:
+            return ((0, 0, 0), {"seq": 0, "versions": []})
+        with fh:
+            # the stat of the file actually read: a swap between a reader's
+            # os.stat and this open only causes one more parse later
+            st = os.fstat(fh.fileno())
+            parsed = ((st.st_mtime_ns, st.st_size, st.st_ino), json.load(fh))
+        self._cached = parsed
+        return parsed
+
+    @contextlib.contextmanager
+    def update(self) -> Iterator[dict]:
+        """Yield a private copy of the document, re-read under the writer
+        lock; it is committed if the block changed it and left normally."""
+        with self._locked():
+            current = self._parse()[1]
+            doc = copy.deepcopy(current)
+            yield doc
+            if doc != current:
+                tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
+                with open(tmp, "w") as fh:
+                    json.dump(doc, fh, indent=1)
+                    fh.flush()
+                    os.fsync(fh.fileno())
+                os.replace(tmp, self.path)
+                # make the swap itself durable before the caller acts on it
+                # (cleanup drops partition directories next)
+                dir_fd = os.open(os.path.dirname(self.path), os.O_RDONLY)
+                try:
+                    os.fsync(dir_fd)
+                finally:
+                    os.close(dir_fd)
+
+    @contextlib.contextmanager
+    def _locked(self) -> Iterator[None]:
+        deadline = time.monotonic() + LOCK_TIMEOUT_S
+        while True:
+            try:
+                os.close(os.open(self.lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+                break
+            except FileExistsError:
+                if time.monotonic() > deadline:
+                    raise TimeoutError(
+                        f"manifest lock {self.lock_path} held for over {LOCK_TIMEOUT_S:g} s; "
+                        "remove it if no writer is running"
+                    ) from None
+                time.sleep(0.005)
+        try:
+            yield
+        finally:
+            os.unlink(self.lock_path)
+
+
+def _recency(entry: dict) -> tuple[str, int]:
+    """Newest = latest ``created_at``; equal stamps resolve by registration order."""
+    return entry[CREATED_AT_COLUMN], entry["seq"]
+
+
+def _metadata_from_entry(entry: dict) -> FeatureMetadata:
+    d = copy.deepcopy(entry)
+    return FeatureMetadata(
+        feature_version=d[VERSION_COLUMN],
+        description=d["description"],
+        created_at=d[CREATED_AT_COLUMN],
+        features_config=[FeatureConfig(**c) for c in d["features_config"]],
+        data_quality_metrics=DataQualityMetrics(**d["data_quality_metrics"]),
+        lineage=d["lineage"],
+        tags=d["tags"],
+    )
 
 
 class FeatureStore:
@@ -57,7 +175,7 @@ class FeatureStore:
         self.spark = spark
         self.path = path
         self.features_path = os.path.join(path, "features")
-        self.metadata_path = os.path.join(path, "feature_metadata")
+        self._manifest = _Manifest(os.path.join(path, MANIFEST_NAME))
         self.cache = cache or InMemoryTTLCache()
         self.validator = validator or DataQualityValidator()
         self.cache_ttl = cache_ttl  # reference hardcodes 3600 (`:350, :412`)
@@ -70,7 +188,7 @@ class FeatureStore:
     def register_features(
         self, features: DataFrame, metadata: FeatureMetadata, *, enforce_schema: bool = True
     ) -> str:
-        """Validate → content-hash → stamp → append partition → metadata upsert
+        """Validate → content-hash → stamp → write partition → metadata upsert
         → monitor → cache (reference `:295-353`).
 
         Unlike the reference — which inserts whatever columns the frame has
@@ -78,23 +196,33 @@ class FeatureStore:
         entries are checked against the actual schema (SURVEY §1.3: strictly
         more checking, flagged as such). ``enforce_schema=False`` restores the
         reference's trusting behavior.
+
+        Registering content whose version is already in the store is a
+        no-op: it returns that version and writes neither rows nor
+        metadata, so the existing entry (and ``latest_version()``) stays as
+        it was.
         """
         if enforce_schema and metadata.features_config:
             self._check_schema(features, metadata)
         # Register runs SEVERAL separate actions over the same (often
         # aggregate-shaped) feature lineage — the validator's profile
-        # jobs, the content hash, the partitioned write, the monitor
-        # count. Unpersisted, each re-computes the extractor from the
-        # source scan (guide §5; measured ~2.5-2.9 s warm for the
-        # serving-parity fixture, dominated by these recomputes). Persist
-        # for the register's duration only — a within-run pin of an
-        # intermediate (the ivf_build pattern), never a cross-run cache —
-        # and unpersist in finally so the store never holds storage
-        # memory past the call.
-        features = features.persist()
+        # jobs, the content hash, the partition write. Unpersisted, each
+        # re-computes the extractor from the source scan (guide §5;
+        # measured ~2.5-2.9 s warm for the serving-parity fixture,
+        # dominated by these recomputes). Persist for the register's
+        # duration only — a within-run pin of an intermediate (the
+        # ivf_build pattern), never a cross-run cache — and unpersist in
+        # finally so the store never holds storage memory past the call.
+        # A frame the caller already cached is used as it is and left
+        # cached: its storage level is the caller's to manage.
+        owned = features.storageLevel == StorageLevel.NONE
+        if owned:
+            features = features.persist()
         try:
-            metrics, _prof = self.validator.validate(features)
+            metrics, prof = self.validator.validate(features)
             version = content_version(features)
+            if self._entry(version) is not None:
+                return version
 
             # one stamp for BOTH the feature rows and the metadata copy
             # below: a backfill's explicit metadata.created_at must also be
@@ -102,17 +230,19 @@ class FeatureStore:
             # time-travels to rows that self-describe a different creation
             # time (r9 review).
             created_at = metadata.created_at or _utc_now_iso()
-            stamped = features.withColumn(VERSION_COLUMN, F.lit(version)).withColumn(
-                CREATED_AT_COLUMN, F.lit(created_at)
-            )
+            stamped = features.withColumn(CREATED_AT_COLUMN, F.lit(created_at))
             if self.sort_col and self.sort_col in features.columns:
                 # sort within output files so parquet row-group min/max
                 # stats make later user_id point-lookups skip row groups
                 # (the scalable stand-in for the reference's intended
                 # INDEX(user_id))
                 stamped = stamped.sortWithinPartitions(self.sort_col)
-            stamped.write.mode("append").partitionBy(VERSION_COLUMN).parquet(
-                self.features_path
+            # The version's own partition directory: concurrent writers of
+            # different versions never share a Spark output path, and a
+            # directory a crashed registration left unlisted is replaced,
+            # not appended to.
+            stamped.write.mode("overwrite").parquet(
+                os.path.join(self.features_path, f"{VERSION_COLUMN}={version}")
             )
 
             # stamp a COPY — mutating the caller's object made a REUSED
@@ -122,11 +252,8 @@ class FeatureStore:
             # exact staleness mode this store claims a zero window for (found
             # by the demo's register→serve→re-register→serve assertion, r9).
             # An EXPLICITLY pre-set created_at is still honored (backfill /
-            # time-travel) — give CORRECTED backfills a strictly later stamp:
-            # two different-content registrations with an EQUAL explicit
-            # created_at are genuinely unordered in this schema, and
-            # latest_version() resolves the tie by version hash
-            # (deterministic, but not registration order).
+            # time-travel); registrations with an equal created_at resolve
+            # by registration order.
             import dataclasses
 
             stamped_meta = dataclasses.replace(
@@ -137,15 +264,15 @@ class FeatureStore:
             )
             self._upsert_metadata(stamped_meta)
 
-            n_rows = features.count()
-            self.monitor.log_feature_creation(version, n_rows, metrics.overall_score)
+            self.monitor.log_feature_creation(version, prof.row_count, metrics.overall_score)
             # The reference eagerly caches the whole frame at register
             # (`:349-350`); at scale that collect is wrong, so the serving
             # cache fills lazily on first read instead (same hit behavior
             # from the second access on).
             return version
         finally:
-            features.unpersist()
+            if owned:
+                features.unpersist()
 
     def _check_schema(self, features: DataFrame, metadata: FeatureMetadata) -> None:
         """Declared configs must exist in the frame with the declared dtype."""
@@ -167,61 +294,38 @@ class FeatureStore:
             raise ValueError("feature schema mismatch: " + "; ".join(problems))
 
     def _upsert_metadata(self, metadata: FeatureMetadata) -> None:
-        """A5: INSERT OR REPLACE ≈ filter-out + union + atomic overwrite."""
-        d = metadata.to_dict()
-        new_row = self.spark.createDataFrame([d], schema=METADATA_SCHEMA)
-        existing = self._read_metadata()
-        if existing is not None:
-            merged = existing.filter(
-                F.col(VERSION_COLUMN) != metadata.feature_version
-            ).unionByName(new_row)
-        else:
-            merged = new_row
-        # materialize before the swap — the plan must not read the dir being replaced
-        rows = merged.collect()
-        merged_df = self.spark.createDataFrame(rows, schema=METADATA_SCHEMA)
-        atomic_overwrite_parquet(merged_df, self.metadata_path)
+        """A5 INSERT OR REPLACE: drop the version's entry, if any, and append
+        the new one with the next registration ``seq``."""
+        with self._manifest.update() as doc:
+            doc["seq"] += 1
+            doc["versions"] = [
+                e for e in doc["versions"] if e[VERSION_COLUMN] != metadata.feature_version
+            ]
+            doc["versions"].append({**metadata.to_dict(), "seq": doc["seq"]})
 
-    def _read_metadata(self) -> DataFrame | None:
-        if not os.path.isdir(self.metadata_path):
-            return None
-        return self.spark.read.schema(METADATA_SCHEMA).parquet(self.metadata_path)
+    def _entry(self, version: str) -> dict | None:
+        return next(
+            (e for e in self._manifest.entries() if e[VERSION_COLUMN] == version), None
+        )
 
     # ------------------------------------------------------------------ K2
     def latest_version(self) -> str | None:
-        """F1 `:373-380`: top-1 by created_at (TakeOrderedAndProject, no full
-        sort). Version hash desc breaks created_at ties (two registrations
-        in one microsecond, or an explicit backfilled timestamp) so
-        resolution is deterministic rather than partition-order luck — but
-        it is NOT registration order: two different-content registrations
-        carrying an EQUAL explicit created_at are unordered in this
-        schema, so give corrected backfills a strictly later stamp (a
-        monotonic registration sequence column is the schema-vNext fix)."""
-        meta = self._read_metadata()
-        if meta is None:
-            return None
-        head = (
-            meta.orderBy(F.desc(CREATED_AT_COLUMN), F.desc(VERSION_COLUMN))
-            .limit(1)
-            .collect()
-        )
-        return head[0][VERSION_COLUMN] if head else None
+        """F1 `:373-380`: the entry with the latest created_at; equal stamps
+        (two registrations in one microsecond, or an explicit backfilled
+        timestamp) resolve to the one registered last. Read from the
+        manifest with no Spark job; the file is re-parsed only when it
+        changed, so a registration by any other store object or process
+        is seen on the next call."""
+        entries = self._manifest.entries()
+        return max(entries, key=_recency)[VERSION_COLUMN] if entries else None
 
     def version_as_of(self, as_of: str) -> str | None:
         """Time-travel resolution: the version that was latest at ``as_of``
         (ISO-8601 UTC, same format as the stamped created_at) — what a
         training job reads to reproduce the features a past run saw.
-        Top-1 over the filtered metadata table; no data-scale scan."""
-        meta = self._read_metadata()
-        if meta is None:
-            return None
-        head = (
-            meta.filter(F.col(CREATED_AT_COLUMN) <= as_of)
-            .orderBy(F.desc(CREATED_AT_COLUMN), F.desc(VERSION_COLUMN))
-            .limit(1)
-            .collect()
-        )
-        return head[0][VERSION_COLUMN] if head else None
+        Resolved from the manifest; no Spark job."""
+        entries = [e for e in self._manifest.entries() if e[CREATED_AT_COLUMN] <= as_of]
+        return max(entries, key=_recency)[VERSION_COLUMN] if entries else None
 
     def get_features(
         self,
@@ -381,10 +485,11 @@ class FeatureStore:
         invalidated on re-registration — TTL-only expiry (reference
         `:350,412`) — so a version's cached frames can lag the DB's rows
         for that version by up to 3600 s. Here that window is ZERO: the
-        serving index is version-scoped, ``latest_version()`` is never
-        cached, and re-registration rebuilds the index — a stale index
-        can only be served if it is planted under the new version's key,
-        which this audit detects as a full-sample mismatch
+        serving index is version-scoped, ``latest_version()`` re-reads the
+        manifest whenever it changed, and re-registration rebuilds the
+        index — a stale index can only be served if it is planted under
+        the new version's key, which this audit detects as a full-sample
+        mismatch
         (``test_serving_parity_audit_detects_stale_cache_epoch``)."""
         version = version or self.latest_version()
         if version is None:
@@ -419,70 +524,36 @@ class FeatureStore:
     # ------------------------------------------------------------------ K4
     def get_feature_metadata(self, version: str) -> FeatureMetadata | None:
         """A7 point lookup (reference `:456-475`)."""
-        meta = self._read_metadata()
-        if meta is None:
-            return None
-        rows = meta.filter(F.col(VERSION_COLUMN) == version).limit(1).collect()
-        if not rows:
-            return None
-        return self._metadata_from_row(rows[0])
-
-    @staticmethod
-    def _metadata_from_row(row: Row) -> FeatureMetadata:
-        from .config import FeatureConfig
-
-        d = row.asDict(recursive=True)
-        return FeatureMetadata(
-            feature_version=d[VERSION_COLUMN],
-            description=d.get("description") or "",
-            created_at=d.get(CREATED_AT_COLUMN) or "",
-            features_config=[FeatureConfig(**c) for c in (d.get("features_config") or [])],
-            data_quality_metrics=DataQualityMetrics(**d["data_quality_metrics"])
-            if d.get("data_quality_metrics")
-            else None,
-            lineage=d.get("lineage") or {},
-            tags=d.get("tags") or [],
-        )
+        entry = self._entry(version)
+        return None if entry is None else _metadata_from_entry(entry)
 
     # ------------------------------------------------------------------ K5
     def list_feature_versions(self) -> list[dict[str, Any]]:
-        """A8/F2 ordered listing (reference `:481-497`)."""
-        meta = self._read_metadata()
-        if meta is None:
-            return []
-        rows = meta.orderBy(F.desc(CREATED_AT_COLUMN)).collect()
+        """A8/F2 ordered listing, newest first (reference `:481-497`)."""
         return [
             {
-                "feature_version": r[VERSION_COLUMN],
-                "description": r["description"],
-                "created_at": r[CREATED_AT_COLUMN],
-                "quality_score": (
-                    r["data_quality_metrics"]["overall_score"]
-                    if r["data_quality_metrics"] is not None
-                    else None
-                ),
-                "tags": list(r["tags"] or []),
+                "feature_version": e[VERSION_COLUMN],
+                "description": e["description"],
+                "created_at": e[CREATED_AT_COLUMN],
+                "quality_score": e["data_quality_metrics"]["overall_score"],
+                "tags": list(e["tags"]),
             }
-            for r in rows
+            for e in sorted(self._manifest.entries(), key=_recency, reverse=True)
         ]
 
     # ------------------------------------------------------------------ K6
     def cleanup_old_versions(self, keep_n: int = 5) -> list[str]:
-        """Keep newest N versions (reference `:503-528`). Physical delete is a
-        partition-directory drop — no data rewrite; metadata rows filtered via
-        the same atomic overwrite as the upsert."""
-        versions = [v["feature_version"] for v in self.list_feature_versions()]  # newest first
-        doomed = versions[keep_n:]
+        """Keep newest N versions (reference `:503-528`). The manifest drops
+        the older entries first; then their partition directories are
+        removed (no data rewrite). A crash in between leaves unlisted
+        directories, never a listed version whose rows are gone."""
+        with self._manifest.update() as doc:
+            newest_first = sorted(doc["versions"], key=_recency, reverse=True)
+            doomed = [e[VERSION_COLUMN] for e in newest_first[keep_n:]]
+            doc["versions"] = [e for e in doc["versions"] if e[VERSION_COLUMN] not in doomed]
         if not doomed:
             return []
         drop_partition_dirs(self.features_path, VERSION_COLUMN, doomed)
-        meta = self._read_metadata()
-        if meta is not None:
-            kept = meta.filter(~F.col(VERSION_COLUMN).isin(doomed))
-            rows = kept.collect()
-            atomic_overwrite_parquet(
-                self.spark.createDataFrame(rows, schema=METADATA_SCHEMA), self.metadata_path
-            )
         for v in doomed:
             delete_prefix = getattr(self.cache, "delete_prefix", None)
             if delete_prefix is not None:

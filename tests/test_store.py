@@ -136,6 +136,9 @@ def test_register_identical_content_is_idempotent_version(store, features):
     v1 = store.register_features(features, _meta("one"))
     v2 = store.register_features(features, _meta("two"))
     assert v1 == v2  # content-addressed: same content ⇒ same id
+    # the second call wrote no second copy of the rows, and no metadata
+    assert store.get_features(v1).count() == features.select("user_id").distinct().count()
+    assert [v["description"] for v in store.list_feature_versions()] == ["one"]
 
 
 def test_dashboard_shape(store, features):
@@ -269,7 +272,7 @@ def test_time_travel_read(spark, tmp_path, features):
 
     store = FeatureStore(spark, str(tmp_path / "fs"))
     v1 = store.register_features(features, _meta("v1"))
-    between = store._read_metadata().agg(F.max("created_at")).collect()[0][0]
+    between = max(v["created_at"] for v in store.list_feature_versions())
     _time.sleep(1.1)  # created_at has second resolution
     more = features.withColumn("total_amount", F.col("total_amount") + 1.0)
     v2 = store.register_features(more, _meta("v2"))
@@ -459,3 +462,117 @@ def test_backfill_created_at_stamps_rows_and_metadata_identically(spark, tmp_pat
     ).collect()
     assert {r["created_at"] for r in raw} == {back}
     assert store.version_as_of("2023-07-01T00:00:00") == v
+
+
+def _jobs_run_by(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"jobs-run-by-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cache_hit_serve_of_latest_runs_no_spark_job(spark, store, features):
+    store.register_features(features, _meta())
+    assert store.serve_features(1)["total_events"] == 3  # builds the index
+    row, jobs = _jobs_run_by(spark, lambda: store.serve_features(2))
+    assert row["total_events"] == 2
+    assert jobs == 0
+
+
+def test_second_store_sees_a_newer_registration_at_once(spark, tmp_path, features):
+    path = str(tmp_path / "shared")
+    writer, reader = FeatureStore(spark, path), FeatureStore(spark, path)
+    v1 = writer.register_features(features, _meta("v1"))
+    assert reader.latest_version() == v1
+    more = features.withColumn("total_amount", F.col("total_amount") + 1.0)
+    v2 = writer.register_features(more, _meta("v2"))
+    latest, jobs = _jobs_run_by(spark, reader.latest_version)
+    assert latest == v2
+    assert jobs == 0
+
+
+def test_equal_created_at_resolves_to_the_later_registration(store, features):
+    stamp = "2024-01-01T00:00:00"
+    frames = [features, features.withColumn("total_amount", F.col("total_amount") + 1.0)]
+    # register the larger content hash first, so a hash tie-break would
+    # pick the earlier registration
+    frames.sort(key=content_version, reverse=True)
+    first = store.register_features(frames[0], FeatureMetadata(description="a", created_at=stamp))
+    second = store.register_features(frames[1], FeatureMetadata(description="b", created_at=stamp))
+    assert first > second
+    assert store.latest_version() == second
+    assert store.version_as_of(stamp) == second
+    assert [v["feature_version"] for v in store.list_feature_versions()] == [second, first]
+
+
+def test_concurrent_writers_on_one_path_lose_no_registration(spark, tmp_path):
+    import sys
+    import threading
+
+    path = str(tmp_path / "shared")
+    frames = [
+        spark.createDataFrame([(u, float(u * 10 + i)) for u in range(5)], "user_id long, x double")
+        for i in range(6)
+    ]
+    results: dict[int, str] = {}
+    errors: list[BaseException] = []
+
+    def register(i: int) -> None:
+        try:
+            store = FeatureStore(spark, path)
+            results[i] = store.register_features(frames[i], _meta(f"writer {i}"))
+        except BaseException as e:  # noqa: BLE001 - reported by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=register, args=(i,)) for i in range(len(frames))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    listed = {v["feature_version"] for v in FeatureStore(spark, path).list_feature_versions()}
+    assert listed == set(results.values()) and len(listed) == len(frames)
+    assert not os.path.exists(os.path.join(path, "_manifest.json.lock"))
+
+
+def test_register_leaves_a_caller_cached_frame_cached(store, features):
+    from pyspark import StorageLevel
+
+    features.persist(StorageLevel.MEMORY_ONLY)
+    try:
+        store.register_features(features, _meta())
+        assert features.storageLevel == StorageLevel.MEMORY_ONLY
+    finally:
+        features.unpersist()
+
+
+def test_cleanup_commits_the_manifest_before_dropping_partitions(store, features, monkeypatch):
+    from ml_feature_store_pipeline_spark import store as store_module
+
+    versions = [
+        store.register_features(features.withColumn("total_amount", F.col("total_amount") + i), _meta())
+        for i in range(3)
+    ]
+
+    def crash(*args, **kwargs):
+        raise OSError("crash before the partition drop")
+
+    monkeypatch.setattr(store_module, "drop_partition_dirs", crash)
+    with pytest.raises(OSError):
+        store.cleanup_old_versions(keep_n=1)
+    # the dropped versions are unlisted although their directories remain
+    assert [v["feature_version"] for v in store.list_feature_versions()] == [versions[2]]
+    assert store.latest_version() == versions[2]
+    assert store.get_features().count() == 5
