@@ -2498,6 +2498,8 @@ def pca_power_embeddings(
     import decimal
     from decimal import ROUND_HALF_UP, Decimal
 
+    from pyspark.errors import ArithmeticException
+
     from ..functions import collect_concurrent
 
     d, dims, pairs = _pairwise_moments(df, vec_col)
@@ -2509,7 +2511,13 @@ def pca_power_embeddings(
     # dims (d rows) and pairs (d(d−1)/2 rows) share the corpus scan but
     # not lineage — overlap the two collect jobs; both go through the
     # pin_rows plan-audit hook
-    pinned = collect_concurrent({"dims": lambda: dims, "pairs": lambda: pairs})
+    try:
+        pinned = collect_concurrent({"dims": lambda: dims, "pairs": lambda: pairs})
+    except ArithmeticException as e:
+        raise ValueError(
+            "pca_power_embeddings: an embedding component is NaN, ±inf or too "
+            f"large for the exact moment sums ({str(e).splitlines()[0]})"
+        ) from e
     moments = {int(r["i"]): r for r in pinned["dims"]}
     idx = sorted(moments)
     cov: dict = {}
@@ -2524,6 +2532,16 @@ def pca_power_embeddings(
         m = moments[i]
         nd = float(m["__n"])
         cov[(i, i)] = m["__sxx"] / nd - (m["__sx"] / nd) * (m["__sx"] / nd)
+
+    # |u_i| ≤ Σ_j |cov_ij| < d·limit keeps every product and square below
+    # the 1e38 that a 12 dp quantize at prec 50 can hold
+    limit = 1e18 / d
+    for (i, j), c in sorted(cov.items()):
+        if not abs(c) < limit:
+            raise ValueError(
+                f"pca_power_embeddings: covariance entry ({i}, {j}) = {c!r} is not "
+                f"finite or too large for the driver fold (|c| < {limit:g} at d={d})"
+            )
 
     lat12, lat9 = Decimal("1e-12"), Decimal("1e-9")
     lat_out = Decimal(1).scaleb(-int(round_digits))

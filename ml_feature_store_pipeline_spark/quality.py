@@ -2,17 +2,18 @@
 
 The reference's ``DataQualityValidator`` (`ML Feature Store
 Pipeline.py:114-160`) makes several full pandas passes (isnull, duplicated,
-per-column quantile + boolean masks). Here the whole profile is ONE action
-regardless of column count (r4 verdict item 8 — it used to be two
-driver-synchronized jobs):
+per-column quantile + boolean masks). Here the profile is at most two
+plain aggregates, whatever the column count:
 
 - exact mode (default; what the oracle gate hash-matches): one combined
-  aggregation (row count, per-column null counts, distinct-row count,
-  per-numeric-column exact quartiles) feeds the IQR-violation count
-  through a 1-row broadcast — bounds never round-trip through the driver,
-  and the violation scan reads ONLY the numeric columns (column-pruned).
-- ``approximate=True`` (the 100 TB variant): a genuinely SINGLE scan —
-  one mergeable aggregate computes a KLL quantile GRID per numeric column
+  aggregate (row count, per-column null counts, distinct-row count,
+  per-numeric-column exact quartiles), then one aggregate of the
+  per-column IQR-violation sums with the collected quartile bounds
+  inlined as literals. Columns without quartiles (empty or all-NULL)
+  get no violation sum, and the second aggregate is skipped when none
+  has one.
+- ``approximate=True`` (the 100 TB variant): a single scan — one
+  mergeable aggregate computes a KLL quantile GRID per numeric column
   alongside HLL distinct, and the outlier counts are derived from the
   grid's empirical CDF at the IQR band edges (no second pass at all; the
   estimate inherits the sketch's rank accuracy).
@@ -43,7 +44,7 @@ _NUMERIC_TYPES = (T.DoubleType, T.FloatType, T.LongType, T.IntegerType, T.ShortT
 
 @dataclass
 class QualityProfile:
-    """Scalar outputs of the two profiling jobs."""
+    """Scalar outputs of :func:`profile`."""
 
     row_count: int
     null_counts: dict[str, int]
@@ -129,36 +130,15 @@ def _bounds_frame(df: DataFrame, *, approximate: bool, percentile_accuracy: int)
     return df.agg(*aggs)
 
 
-def _profile_frame(
-    df: DataFrame, *, approximate: bool, percentile_accuracy: int
-) -> DataFrame:
-    """The single 1-row frame whose collect IS the whole profile.
-
-    Approximate (or numeric-free) mode: the combined aggregate alone — one
-    scan. Exact mode: the aggregate's bounds feed the per-row IQR
-    violation predicate through a 1-row broadcast (no driver round-trip),
-    and the violation side scans ONLY the numeric columns."""
-    numeric = _numeric_columns(df)
-    bounds = _bounds_frame(df, approximate=approximate, percentile_accuracy=percentile_accuracy)
-    if approximate or not numeric:
-        return bounds
-    outs = [
-        F.sum(
-            (
-                (F.col(c) < F.col(f"__q_{c}")[0] - 1.5 * (F.col(f"__q_{c}")[1] - F.col(f"__q_{c}")[0]))
-                | (F.col(c) > F.col(f"__q_{c}")[1] + 1.5 * (F.col(f"__q_{c}")[1] - F.col(f"__q_{c}")[0]))
-            ).cast("long")
-        ).alias(f"__out_{c}")
-        for c in numeric
-    ]
-    carried = [F.first(F.col(b)).alias(b) for b in bounds.columns]
-    return df.select(*numeric).crossJoin(F.broadcast(bounds)).agg(*carried, *outs)
-
-
 def profile(
     df: DataFrame, *, approximate: bool = False, percentile_accuracy: int = 10000
 ) -> QualityProfile:
-    """Run the one-action quality profile.
+    """Run the quality profile.
+
+    Exact mode (the default) is what the oracle gate and the reference's
+    pandas semantics (C10/C11) hash-match against: the combined aggregate
+    of :func:`_bounds_frame`, then one aggregate of exact per-row
+    IQR-violation sums with the collected bounds as literals.
 
     ``approximate=True`` is the 100 TB variant — a SINGLE scan: HLL
     ``approx_count_distinct`` for the duplicate check (no exact-distinct
@@ -166,51 +146,47 @@ def profile(
     GRID per numeric column, from which both the quartiles and the
     IQR-violation counts are derived (the outlier count is the grid CDF at
     the band edges × non-null count — accurate to the sketch's rank error,
-    with no second pass over the data). Exact mode stays the default — it
-    is what the oracle gate and the reference's pandas semantics (C10/C11)
-    hash-match against; its violation count is an exact per-row predicate,
-    so the bounds feed it through a 1-row broadcast (one action, and the
-    predicate scan reads only the numeric columns).
+    with no second pass over the data).
     """
     cols = df.columns
     numeric = _numeric_columns(df)
-    frame = _profile_frame(df, approximate=approximate, percentile_accuracy=percentile_accuracy)
-    row = frame.collect()[0].asDict()
-    if not approximate and numeric and row["__n"] is None:
-        # empty table: the cross join had no rows to carry the bounds —
-        # fall back to the (empty-scan) aggregate itself, a no-op pass
-        row = _bounds_frame(df, approximate=False, percentile_accuracy=percentile_accuracy).collect()[0].asDict()
+    row = _bounds_frame(df, approximate=approximate, percentile_accuracy=percentile_accuracy).collect()[0]
 
-    n = row["__n"] or 0
     quartiles: dict[str, tuple[float, float]] = {}
-    outlier_counts: dict[str, int] = {}
     for c in numeric:
-        q = row.get(f"__q_{c}")
+        q = row[f"__q_{c}"]
         if q is None or q[0] is None:
             continue
         if approximate:
-            vals = [float(v) for v in q]
-            q1, q3 = vals[_GRID_STEPS // 4], vals[3 * _GRID_STEPS // 4]
-            quartiles[c] = (q1, q3)
-            if n:
-                iqr = q3 - q1
-                lo, hi = q1 - 1.5 * iqr, q3 + 1.5 * iqr  # B9 `:133-134`
-                nn = int(row.get(f"__nn_{c}") or 0)
-                below = _grid_cdf(vals, lo, strict=True)
-                above = 1.0 - _grid_cdf(vals, hi, strict=False)
-                outlier_counts[c] = int(round(nn * (below + above)))
+            quartiles[c] = (float(q[_GRID_STEPS // 4]), float(q[3 * _GRID_STEPS // 4]))
         else:
             quartiles[c] = (float(q[0]), float(q[1]))
-            if n:
-                outlier_counts[c] = int(row.get(f"__out_{c}") or 0)
+    # B9 `:133-134`: the IQR band per column
+    bands = {c: (q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1)) for c, (q1, q3) in quartiles.items()}
+
+    outlier_counts: dict[str, int] = {}
+    if approximate:
+        for c, (lo, hi) in bands.items():
+            vals = [float(v) for v in row[f"__q_{c}"]]
+            below = _grid_cdf(vals, lo, strict=True)
+            above = 1.0 - _grid_cdf(vals, hi, strict=False)
+            outlier_counts[c] = int(round(row[f"__nn_{c}"] * (below + above)))
+    elif bands:
+        sums = df.agg(
+            *[
+                F.sum(((F.col(c) < lo) | (F.col(c) > hi)).cast("long"))
+                for c, (lo, hi) in bands.items()
+            ]
+        ).collect()[0]
+        outlier_counts = {c: int(v or 0) for c, v in zip(bands, sums)}
 
     return QualityProfile(
-        row_count=int(n),
+        row_count=int(row["__n"]),
         null_counts={c: int(row[f"__null_{c}"] or 0) for c in cols},
         distinct_rows=int(row["__distinct"] or 0),
         quartiles=quartiles,
         outlier_counts=outlier_counts,
-        numeric_non_null={c: int(row.get(f"__nn_{c}") or 0) for c in numeric},
+        numeric_non_null={c: int(row[f"__nn_{c}"] or 0) for c in numeric},
     )
 
 

@@ -11,7 +11,8 @@ Pipeline.py:229-541`) on Spark:
   min/max stats (user_id, helped by sorting within partitions at write).
 - the ``feature_metadata`` table (`:282-292`) → one JSON manifest,
   ``{path}/_manifest.json``, with one entry per version:
-  ``FeatureMetadata.to_dict()`` plus a monotonic registration ``seq``.
+  ``FeatureMetadata.to_dict()`` plus a monotonic registration ``seq`` and
+  the version's ``n_rows``.
   Every metadata operation (latest / as-of resolution, point lookup,
   listing, upsert, retention) runs on the driver over the parsed entries,
   with no Spark job. Readers re-parse the file only when its stat changed,
@@ -144,6 +145,11 @@ def _recency(entry: dict) -> tuple[str, int]:
     return entry[CREATED_AT_COLUMN], entry["seq"]
 
 
+def _index_key(version: str) -> str:
+    """The cache key of a version's serving index, its only cache entry."""
+    return cache_key(version) + "_serving_index"
+
+
 def _metadata_from_entry(entry: dict) -> FeatureMetadata:
     d = copy.deepcopy(entry)
     return FeatureMetadata(
@@ -262,7 +268,7 @@ class FeatureStore:
                 created_at=created_at,
                 data_quality_metrics=metrics,
             )
-            self._upsert_metadata(stamped_meta)
+            self._upsert_metadata(stamped_meta, prof.row_count)
 
             self.monitor.log_feature_creation(version, prof.row_count, metrics.overall_score)
             # The reference eagerly caches the whole frame at register
@@ -293,15 +299,15 @@ class FeatureStore:
         if problems:
             raise ValueError("feature schema mismatch: " + "; ".join(problems))
 
-    def _upsert_metadata(self, metadata: FeatureMetadata) -> None:
+    def _upsert_metadata(self, metadata: FeatureMetadata, n_rows: int) -> None:
         """A5 INSERT OR REPLACE: drop the version's entry, if any, and append
-        the new one with the next registration ``seq``."""
+        the new one with the next registration ``seq`` and its row count."""
         with self._manifest.update() as doc:
             doc["seq"] += 1
             doc["versions"] = [
                 e for e in doc["versions"] if e[VERSION_COLUMN] != metadata.feature_version
             ]
-            doc["versions"].append({**metadata.to_dict(), "seq": doc["seq"]})
+            doc["versions"].append({**metadata.to_dict(), "seq": doc["seq"], "n_rows": n_rows})
 
     def _entry(self, version: str) -> dict | None:
         return next(
@@ -430,36 +436,33 @@ class FeatureStore:
         driver TTL cache and point lookups are dict hits — same results, one
         job per version instead of one per user (SURVEY §3.3).
 
-        The collect is size-guarded: a version larger than
-        ``max_serving_index_rows`` (checked with a limit-bounded probe, not a
-        full count) is never pulled to the driver — lookups fall back to the
-        pushed-filter path (``get_features(user_ids=[user_id])``), where the
-        B1+B2 predicates reach the parquet scan and row-group stats skip
-        non-matching files. Same dict either way.
+        The collect is size-guarded: a version whose manifest ``n_rows``
+        exceeds ``max_serving_index_rows`` is never pulled to the driver —
+        lookups fall back to the pushed-filter path
+        (``get_features(user_ids=[user_id])``), where the B1+B2 predicates
+        reach the parquet scan and row-group stats skip non-matching files.
+        Same dict either way. A version the manifest does not list serves
+        ``{}`` without a Spark job.
         """
         version = version or self.latest_version()
         if version is None:
             return {}
-        key = cache_key(version) + "_serving_index"
-        too_big_key = key + "_too_big"
+        key = _index_key(version)
         index: dict[int, dict[str, Any]] | None = self.cache.get(key)
-        if index is None:
-            limit = self.max_serving_index_rows
-            if not self.cache.get(too_big_key):
-                slice_df = self.get_features(version=version, use_cache=False)
-                if slice_df.limit(limit + 1).count() <= limit:
-                    rows = slice_df.collect()
-                    index = {r["user_id"]: self._serving_dict(r) for r in rows}
-                    self.cache.set(key, index, ttl=self.cache_ttl)
-                else:
-                    self.cache.set(too_big_key, True, ttl=self.cache_ttl)
-            if index is None:  # oversized version: pushed-filter point lookup
-                rows = self.get_features(
-                    version=version, user_ids=[int(user_id)], use_cache=False
-                ).collect()
-                return self._serving_dict(rows[0]) if rows else {}
-        else:
+        if index is not None:
             self.monitor.log_feature_access(version, 1)
+            return index.get(int(user_id), {})
+        entry = self._entry(version)
+        if entry is None:
+            return {}
+        if entry["n_rows"] > self.max_serving_index_rows:  # pushed-filter point lookup
+            rows = self.get_features(
+                version=version, user_ids=[int(user_id)], use_cache=False
+            ).collect()
+            return self._serving_dict(rows[0]) if rows else {}
+        rows = self.get_features(version=version, use_cache=False).collect()
+        index = {r["user_id"]: self._serving_dict(r) for r in rows}
+        self.cache.set(key, index, ttl=self.cache_ttl)
         return index.get(int(user_id), {})
 
     def validate_serving_parity(
@@ -555,11 +558,7 @@ class FeatureStore:
             return []
         drop_partition_dirs(self.features_path, VERSION_COLUMN, doomed)
         for v in doomed:
-            delete_prefix = getattr(self.cache, "delete_prefix", None)
-            if delete_prefix is not None:
-                delete_prefix(cache_key(v))
-            else:
-                self.cache.delete(cache_key(v))
+            self.cache.delete(_index_key(v))
         return doomed
 
     # ------------------------------------------------------------------ K7

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -13,6 +14,24 @@ from ml_feature_store_pipeline_spark.session import get_spark
 def spark() -> SparkSession:
     s = get_spark("tests", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture()
+def jobs_run_by(spark):
+    """``jobs_run_by(fn)``: ``fn()``'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-run-by-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 def ts(s: str) -> dt.datetime:

@@ -142,28 +142,38 @@ def test_approximate_outlier_estimate_tracks_exact(spark):
 
 
 def test_profile_plan_shape(spark):
-    """r5 fusion: approximate mode scans the input ONCE (quantile grid +
-    CDF-derived outliers, no second pass); exact mode is a single action
-    whose violation side is a second, numeric-only scan fed by a 1-row
-    broadcast of the bounds (no driver round-trip between the passes)."""
+    """Approximate mode scans the input ONCE (quantile grid + CDF-derived
+    outliers, no second pass)."""
     import re
 
-    from ml_feature_store_pipeline_spark.quality import _profile_frame
+    from ml_feature_store_pipeline_spark.quality import _bounds_frame
 
     df = spark.createDataFrame(
         [(i, float(i % 13), str(i % 3)) for i in range(500)], "id long, v double, s string"
     )
+    approx = _bounds_frame(df, approximate=True, percentile_accuracy=10000)
+    approx.collect()
+    plan = approx._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"Scan (?:parquet|ExistingRDD)", plan)) == 1
 
-    def scans(frame) -> int:
-        frame.collect()
-        plan = frame._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==")[0]
-        return len(re.findall(r"Scan (?:parquet|ExistingRDD)", plan))
 
-    approx = _profile_frame(df, approximate=True, percentile_accuracy=10000)
-    assert scans(approx) == 1
-    exact = _profile_frame(df, approximate=False, percentile_accuracy=10000)
-    assert scans(exact) == 2
+def test_profile_of_empty_input_runs_only_the_bounds_aggregate(spark, jobs_run_by):
+    from ml_feature_store_pipeline_spark.quality import _bounds_frame
+
+    df = spark.createDataFrame([], "user_id long, v double, s string")
+    prof, jobs = jobs_run_by(lambda: profile(df))
+    assert prof.row_count == 0 and prof.distinct_rows == 0
+    assert prof.null_counts == {"user_id": 0, "v": 0, "s": 0}
+    assert prof.numeric_non_null == {"user_id": 0, "v": 0}
+    assert prof.quartiles == {} and prof.outlier_counts == {}
+    # NULL quartiles build no violation sum, so no second aggregate runs
+    _, bounds_jobs = jobs_run_by(
+        lambda: _bounds_frame(df, approximate=False, percentile_accuracy=10000).collect()
+    )
+    assert jobs == bounds_jobs
+    metrics, _ = DataQualityValidator().validate(df)
+    assert metrics.schema_violations == 1  # only the non_empty check fails
 
 
 class TestJsDivergence:

@@ -1053,6 +1053,33 @@ def test_pca_power_empty_corpus_is_empty(spark):
     assert pca_power_embeddings(df, "v").count() == 0
 
 
+def test_pca_power_rejects_a_non_finite_embedding_component(spark):
+    from ml_feature_store_pipeline_spark.operators.similarity import pca_power_embeddings
+
+    df = spark.createDataFrame(
+        [([1.0, 2.0, 0.5],), ([float("inf"), 1.0, 3.0],), ([0.2, 0.1, 0.9],)], "v array<double>"
+    )
+    with pytest.raises(ValueError, match="pca_power_embeddings: .*Infinity"):
+        pca_power_embeddings(df, "v")
+
+
+def test_pca_power_fold_names_an_out_of_range_covariance_entry(spark):
+    """Without ANSI casts the corpus pass lets a huge component through;
+    the driver fold must reject its covariance, not fail in ``decimal``."""
+    from ml_feature_store_pipeline_spark.operators.similarity import pca_power_embeddings
+
+    df = spark.createDataFrame(
+        [([1.0, 2.0, 0.5],), ([1e12, 1.0, 3.0],), ([0.2, 0.1, 0.9],)], "v array<double>"
+    )
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        with pytest.raises(ValueError, match=r"pca_power_embeddings: covariance entry \(0, 0\)"):
+            pca_power_embeddings(df, "v")
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+
 def test_pca_power_driver_fold_matches_inplan_loop(spark):
     """r13: the power iteration became a DRIVER fold over the collected
     d²-bounded covariance (guide §8) instead of iterations+2 eager

@@ -76,9 +76,8 @@ def test_serving_size_guard_falls_back_to_pushed_filter(spark, tmp_path, feature
     small.register_features(features, _meta())
     for uid in (1, 2, 99999):
         assert big.serve_features(uid) == small.serve_features(uid)
-    # the oversized decision is cached — no index ever appears under the hood
-    assert all("_serving_index" not in k or "_too_big" in k
-               for k in getattr(big.cache, "_data", {}))
+    # no index ever appears under the hood
+    assert all("_serving_index" not in k for k in getattr(big.cache, "_data", {}))
 
 
 def test_metadata_roundtrip(store, features):
@@ -106,10 +105,13 @@ def test_list_versions_newest_first(store, features):
 
 
 def test_cleanup_keeps_newest_n(store, features):
+    from ml_feature_store_pipeline_spark.cache import cache_key
+
     versions = []
     for i in range(4):
         df = features.withColumn("total_amount", F.col("total_amount") + i)
         versions.append(store.register_features(df, _meta(f"v{i}")))
+    assert store.serve_features(1, version=versions[0])["total_events"] == 3
     doomed = store.cleanup_old_versions(keep_n=2)
     assert set(doomed) == set(versions[:2])
     remaining = [v["feature_version"] for v in store.list_feature_versions()]
@@ -119,6 +121,8 @@ def test_cleanup_keeps_newest_n(store, features):
         assert not os.path.isdir(os.path.join(store.features_path, f"feature_version={v}"))
     # surviving data still readable
     assert store.get_features(versions[3]).count() == 5
+    # the served-then-dropped version's serving index is gone
+    assert store.cache.get(cache_key(versions[0]) + "_serving_index") is None
 
 
 def test_version_hash_order_insensitive(spark, features):
@@ -209,62 +213,6 @@ def test_compact_partition_merges_small_files(spark, tmp_path):
     # idempotent: second run is a no-op
     res2 = compact_partition(spark, path, target_file_bytes=64 * 1024 * 1024)
     assert not res2["compacted"]
-
-
-# ---------------------------------------------------------------- J4: disk cache
-def test_disk_cache_roundtrip_and_expiry(tmp_path):
-    import time as _time
-
-    from ml_feature_store_pipeline_spark.cache import DiskTTLCache
-
-    c = DiskTTLCache(str(tmp_path / "spool"))
-    assert c.get("k") is None  # miss on empty
-    c.set("k", {"a": [1, 2, 3]}, ttl=3600)
-    assert c.get("k") == {"a": [1, 2, 3]}
-    # expiry is lazy-on-get, like the in-memory backend
-    c.set("gone", "x", ttl=0)
-    _time.sleep(0.01)
-    assert c.get("gone") is None
-    info = c.info()
-    assert info["entries"] == 1 and info["hits"] == 1 and info["misses"] >= 2
-
-
-def test_disk_cache_survives_reopen_and_prefix_delete(tmp_path):
-    from ml_feature_store_pipeline_spark.cache import DiskTTLCache, cache_key
-
-    spool = str(tmp_path / "spool")
-    c1 = DiskTTLCache(spool)
-    c1.set(cache_key("v1") + "_serving_index", {1: {"f": 2}})
-    c1.set(cache_key("v1") + "_too_big", True)
-    c1.set(cache_key("v2"), "keep")
-
-    # a fresh instance (new driver process) sees durable entries
-    c2 = DiskTTLCache(spool)
-    assert c2.get(cache_key("v1") + "_serving_index") == {1: {"f": 2}}
-    # version cleanup drops exactly the v1 keys
-    assert c2.delete_prefix(cache_key("v1")) == 2
-    assert c2.get(cache_key("v1") + "_too_big") is None
-    assert c2.get(cache_key("v2")) == "keep"
-    c2.clear()
-    assert c2.info()["entries"] == 0
-
-
-def test_store_with_disk_cache_serves_and_cleans(spark, tmp_path, features):
-    from ml_feature_store_pipeline_spark.cache import DiskTTLCache
-
-    cache = DiskTTLCache(str(tmp_path / "spool"))
-    store = FeatureStore(spark, str(tmp_path / "fs"), cache=cache)
-    store.register_features(features, _meta("v1"))
-    assert store.serve_features(1)["total_events"] == 3
-    info_before = store.cache.info()
-    store.serve_features(2)  # second lookup hits the durable index
-    assert store.cache.info()["hits"] >= info_before["hits"] + 1
-
-    # cleanup path invalidates via duck-typed delete_prefix
-    more = features.withColumn("total_amount", F.col("total_amount") + 1.0)
-    store.register_features(more, _meta("v2"))
-    store.cleanup_old_versions(keep_n=1)
-    assert store.cache.info()["entries"] < info_before["entries"] + 2
 
 
 def test_time_travel_read(spark, tmp_path, features):
@@ -464,35 +412,22 @@ def test_backfill_created_at_stamps_rows_and_metadata_identically(spark, tmp_pat
     assert store.version_as_of("2023-07-01T00:00:00") == v
 
 
-def _jobs_run_by(spark, fn):
-    """``fn()``'s result and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"jobs-run-by-{id(fn)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_cache_hit_serve_of_latest_runs_no_spark_job(spark, store, features):
+def test_cache_hit_serve_of_latest_runs_no_spark_job(jobs_run_by, store, features):
     store.register_features(features, _meta())
     assert store.serve_features(1)["total_events"] == 3  # builds the index
-    row, jobs = _jobs_run_by(spark, lambda: store.serve_features(2))
+    row, jobs = jobs_run_by(lambda: store.serve_features(2))
     assert row["total_events"] == 2
     assert jobs == 0
 
 
-def test_second_store_sees_a_newer_registration_at_once(spark, tmp_path, features):
+def test_second_store_sees_a_newer_registration_at_once(spark, jobs_run_by, tmp_path, features):
     path = str(tmp_path / "shared")
     writer, reader = FeatureStore(spark, path), FeatureStore(spark, path)
     v1 = writer.register_features(features, _meta("v1"))
     assert reader.latest_version() == v1
     more = features.withColumn("total_amount", F.col("total_amount") + 1.0)
     v2 = writer.register_features(more, _meta("v2"))
-    latest, jobs = _jobs_run_by(spark, reader.latest_version)
+    latest, jobs = jobs_run_by(reader.latest_version)
     assert latest == v2
     assert jobs == 0
 
@@ -576,3 +511,53 @@ def test_cleanup_commits_the_manifest_before_dropping_partitions(store, features
     assert [v["feature_version"] for v in store.list_feature_versions()] == [versions[2]]
     assert store.latest_version() == versions[2]
     assert store.get_features().count() == 5
+
+
+def test_first_serve_of_a_new_version_runs_at_most_two_jobs(jobs_run_by, store, features):
+    # the manifest's n_rows decides index vs point lookup: no size probe
+    store.register_features(features, _meta())
+    row, jobs = jobs_run_by(lambda: store.serve_features(1))
+    assert row["total_events"] == 3
+    assert jobs <= 2
+
+
+def test_serve_of_an_unlisted_version_runs_no_spark_job(jobs_run_by, store, features):
+    store.register_features(features, _meta())
+    row, jobs = jobs_run_by(lambda: store.serve_features(1, version="not-a-listed-version"))
+    assert row == {}
+    assert jobs == 0
+
+
+def test_cleanup_drops_the_index_through_the_backend_delete(spark, tmp_path, features):
+    from ml_feature_store_pipeline_spark.cache import CacheBackend
+
+    class DictCache(CacheBackend):
+        """The contract alone: get/set/delete/clear/info over a dict."""
+
+        def __init__(self):
+            self.data = {}
+
+        def get(self, key):
+            return self.data.get(key)
+
+        def set(self, key, value, ttl=3600):
+            self.data[key] = value
+
+        def delete(self, key):
+            self.data.pop(key, None)
+
+        def clear(self):
+            self.data.clear()
+
+        def info(self):
+            return {"entries": len(self.data)}
+
+    store = FeatureStore(spark, str(tmp_path / "fs"), cache=DictCache())
+    v1 = store.register_features(features, _meta("v1"))
+    assert store.serve_features(1)["total_events"] == 3
+    more = features.withColumn("total_amount", F.col("total_amount") + 1.0)
+    v2 = store.register_features(more, _meta("v2"))
+    assert store.serve_features(1)["total_events"] == 3
+    assert store.cleanup_old_versions(keep_n=1) == [v1]
+    assert not any(v1 in k for k in store.cache.data)
+    assert any(v2 in k for k in store.cache.data)

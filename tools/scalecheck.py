@@ -725,8 +725,8 @@ def main() -> None:
         if events is not None and want("quality_profile"):
             from ml_feature_store_pipeline_spark import quality
 
-            # r5 fusion: exact = one action (bounds broadcast), approx =
-            # ONE scan (grid CDF outliers). Timed via profile() itself —
+            # exact = two plain aggregates (bounds, then violation sums),
+            # approx = ONE scan (grid CDF outliers). Timed via profile() itself —
             # the op collects scalars, there is no frame to noop-write.
             if METER is not None:
                 METER.delta()
