@@ -2,7 +2,7 @@
 `ML Feature Store Pipeline.py:70-111`).
 
 Driver-side memoization of materialized results, keyed exactly like the
-reference (`features_{version}[_users_{ids}]`, `:382-384`). The reference's
+reference (`features_{version}`, `:382-384`). The reference's
 async interface collapses to sync — Spark supplies the parallelism. For
 cluster-side reuse of a hot DataFrame use ``df.persist()``; this cache is
 for serving-path results that have already been collected.
@@ -13,7 +13,6 @@ from __future__ import annotations
 import threading
 import time
 from abc import ABC, abstractmethod
-from collections.abc import Iterable
 from typing import Any
 
 
@@ -80,9 +79,6 @@ class InMemoryTTLCache(CacheBackend):
             return {"entries": len(self._data), "hits": self.hits, "misses": self.misses}
 
 
-def cache_key(version: str, user_ids: Iterable[int] | None = None) -> str:
-    """Reference key format (`:382-384`)."""
-    key = f"features_{version}"
-    if user_ids is not None:
-        key += "_users_" + "_".join(map(str, user_ids))
-    return key
+def cache_key(version: str) -> str:
+    """Reference key format for a version (`:382-384`)."""
+    return f"features_{version}"

@@ -45,23 +45,19 @@ def _ensure_loaded() -> None:
 
 
 # The driver hash-verifies only the FIRST 50 ``queries()`` entries, so the
-# registry is emitted in an explicit priority order. Round-13 rotation
-# (the r12 verdict's item 7 + the standing policy): after this window no
-# registry query's newest driver green predates r8.
+# registry is emitted in an explicit priority order: the window below, then
+# the other oracle-backed queries, then the rows-only ones (registration
+# order within each). The window favours the queries whose newest verified
+# run is oldest, plus those whose function text changed since that run:
 #
-# - EIGHTEEN r7-era anchors (tests/test_registry.py::
-#   R13_ANCHOR_CANDIDATES — the unconsumed tail of the r12 pool;
-#   cube_orders through negative_sample_pairs, registry order).
-# - NINETEEN changed-code pulls (function text touched this
-#   optimization round, so their prior greens predate the shipped code;
-#   the per-change mapping is documented at
-#   tests/test_registry.py::CHANGED_IN_R13 and OPTIMIZATION_r13.md).
-# - THIRTEEN anchors from the FRONT of tests/test_registry.py::
-#   R13_R8_POOL (the 45 queries whose newest driver green is r8 — the
-#   oldest signal once the r7 anchors above land); the remaining 32
-#   roll to r14.
+# - eighteen anchors last verified in round 7 (registry order);
+# - nineteen queries whose code the round-13 optimizations touched;
+# - thirteen anchors last verified in round 8 (registry order).
+#
+# tests/test_registry.py pins the invariants: the window is exactly the
+# first 50 entries, every entry has an oracle, and no name repeats.
 DRIVER_WINDOW: tuple[str, ...] = (
-    # R13_ANCHOR_CANDIDATES — all 18 remaining r7-era greens
+    # anchors last verified in round 7
     "cube_orders",
     "tpch_q4_like",
     "tpch_q18_like",
@@ -80,7 +76,7 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "top3_orders_per_priority",
     "distinct_users_per_type_2stage",
     "negative_sample_pairs",
-    # changed-code pulls (function text touched this round)
+    # code touched by the round-13 optimizations
     "item_item_cosine_topk",
     "bpe_train_merges",
     "lm_quality_score_docs",
@@ -100,7 +96,7 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "ml_quality_filter_docs",
     "random_projection_embeddings",
     "serving_parity_audit",
-    # anchors — R13_R8_POOL front, registry order (r8 greens)
+    # anchors last verified in round 8
     "semantic_decontaminate_embeddings",
     "dedup_survivors_priority_docs",
     "hard_negative_pairs",

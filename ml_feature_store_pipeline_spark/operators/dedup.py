@@ -107,29 +107,6 @@ def word_shingles(text: Column, n: int) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(text: Column, num_hashes: int, shingle_n: int = 3) -> Column:
-    """Row-local MinHash signature: per seed i, the lexicographic min of
-    ``md5(i | shingle)`` over the doc's shingles; empty docs get nulls.
-
-    Hex-string minima are order-isomorphic to integer minima of the same
-    hash, so collision behavior matches classic integer MinHash.
-
-    NOTE: higher-order functions run interpreted (outside codegen) — the
-    explode-based :func:`minhash_signatures` is ~2.4× faster and is the
-    default pipeline; this Column form exists for contexts that need the
-    signature without an aggregation (e.g. appending to an existing row).
-    """
-    sh = word_shingles(text, shingle_n)
-
-    def min_for_seed(i: int) -> Column:
-        # NOTE: the lambda must stay single-argument — a second parameter
-        # (even defaulted) makes PySpark pass the array INDEX into it.
-        prefix = F.lit(f"{i}|")
-        return F.array_min(F.transform(sh, lambda s: F.md5(F.concat(prefix, s))))
-
-    return F.array(*[min_for_seed(i) for i in range(num_hashes)])
-
-
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, num_hashes: int = 8, shingle_n: int = 3
 ) -> DataFrame:
@@ -138,8 +115,8 @@ def minhash_signatures(
     The md5+min work runs inside whole-stage codegen (measured ~2.4× the
     interpreted transform/array_min form); partial aggregation collapses
     each doc to one row map-side, so the shuffle carries ~num_hashes×32
-    bytes per document. ``explode_outer`` keeps shingle-less docs with a
-    null signature, matching the row-local form.
+    bytes per document. ``explode_outer`` keeps shingle-less docs, with a
+    null signature.
     """
     sh = df.select(
         F.col(id_col),
@@ -745,25 +722,35 @@ def connected_components(
     label) rows; ``localCheckpoint`` cuts the lineage so round N's plan
     doesn't replay rounds 1..N-1.
 
-    Edge sets at or below ``local_threshold`` solve on the driver instead
-    (union-find over the collected (src, dst) ids — bounded at 2 small
-    values × threshold rows): identical output, one job instead of
-    2-per-round, which dominates wall-clock on the tiny pair graphs real
-    thresholds produce. The distributed loop is the ≥ threshold path; pass
+    Pair graphs of at most ``local_threshold`` input pair ROWS (duplicates
+    and both directions counted as given) solve on the Spark driver instead:
+    one ``limit(local_threshold + 1)`` collect of the checkpointed
+    (src, dst) ids — bounded at 2 small values × threshold rows — goes
+    straight into union-find, which needs neither the symmetrized nor the
+    de-duplicated edge set. Identical output, one collect instead of
+    2-per-round jobs, which dominates wall-clock on the tiny pair graphs
+    real thresholds produce. Only the distributed loop (above the
+    threshold) builds the symmetrized ``distinct()`` edge set; pass
     ``local_threshold=0`` to force it (the loop is the code under test in
     the equivalence suite).
     """
+    # materialize ONCE: the local collect and, above the threshold, the
+    # edge set both read the pairs, whose lineage is the whole upstream
+    # candidate-pair pipeline (minhash/LSH) — without this cut each reader
+    # re-runs that pipeline from the parquet scan
+    ids = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).localCheckpoint()
+    if local_threshold:
+        rows = ids.limit(local_threshold + 1).collect()
+        if len(rows) <= local_threshold:
+            return _connected_components_local(
+                rows, ids.schema["src"].dataType, ids.sparkSession
+            )
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        ids.union(ids.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        # materialize ONCE: edges join into every round, and their lineage is
-        # the whole upstream candidate-pair pipeline (minhash/LSH) — without
-        # this cut each round re-runs that pipeline from the parquet scan
+        # edges join into every round: checkpoint the symmetrized set once
         .localCheckpoint()
     )
-    if local_threshold and edges.count() <= local_threshold:
-        return _connected_components_local(edges)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -801,11 +788,11 @@ def connected_components(
     return labels.select(F.col("node"), F.col("comp").alias("component"))
 
 
-def _connected_components_local(edges: DataFrame) -> DataFrame:
-    """Driver-side union-find over a SMALL collected edge list (size-gated
-    by the caller): same (node, min-reachable-id) output as the
-    distributed loop, resolved after union by mapping every set to its
-    minimum member."""
+def _connected_components_local(rows: list, node_type, spark) -> DataFrame:
+    """Union-find over a SMALL collected list of (src, dst) pair rows
+    (size-gated by the caller; either direction, duplicates allowed):
+    same (node, min-reachable-id) output as the distributed loop,
+    resolved after union by mapping every set to its minimum member."""
     from pyspark.sql import types as T
 
     parent: dict = {}
@@ -818,9 +805,7 @@ def _connected_components_local(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    rows = edges.collect()
-    for r in rows:
-        a, b = r["src"], r["dst"]
+    for a, b in rows:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -831,12 +816,11 @@ def _connected_components_local(edges: DataFrame) -> DataFrame:
         root = find(n)
         cur = comp_min.get(root)
         comp_min[root] = n if cur is None or n < cur else cur
-    node_type = edges.schema["src"].dataType
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("component", node_type)]
     )
     data = [(n, comp_min[find(n)]) for n in parent]
-    return edges.sparkSession.createDataFrame(data, schema)
+    return spark.createDataFrame(data, schema)
 
 
 def dedup_survivors(

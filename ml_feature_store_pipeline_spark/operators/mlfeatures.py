@@ -193,7 +193,8 @@ def quality_classifier_scores(
     # to ~2000 rows/task, capped at the cluster parallelism, so
     # corpus-scale fits keep full parallelism (the clamp needs a known
     # row count — callers opt in via ``n_docs``); scoring stays on the
-    # caller's partitioning. coalesce only ever NARROWS (no exchange).
+    # caller's partitioning. coalesce only ever NARROWS (no exchange), so
+    # an input already at or under the target keeps its partition count.
     # Coefficients can shift at last-ulp with aggregation order; the
     # registered consumer's outputs are partition-invariant counts plus
     # bounded-margin booleans (see q_ml_quality_filter_docs), and the
@@ -205,8 +206,7 @@ def quality_classifier_scores(
             1,
             min(spark.sparkContext.defaultParallelism, -(-int(n_docs) // 2000)),
         )
-        if fit_input.rdd.getNumPartitions() > target:
-            fit_input = fit_input.coalesce(target)
+        fit_input = fit_input.coalesce(target)
     model = lr.fit(fit_input)
     scored = model.transform(train)
     prob = vector_to_array("probability")[1]

@@ -777,7 +777,9 @@ def semantic_dedup(
     ``threshold``, connect them into duplicate groups, and keep ONE doc
     per group — the member LEAST similar to its centroid (the paper's
     keep-low-centroid-similarity rule: survivors preserve diversity), id
-    tiebreak. Returns the surviving (id, cell) rows.
+    tiebreak. Returns the surviving (id, cell) rows. The grouping and the
+    keep rule are :func:`.dedup.dedup_survivors_by_priority` over the
+    in-cell pairs, with "least cosine to the centroid" as the priority.
 
     Scale shape: centroids broadcast (n_cells×dim floats), so assignment
     is a map-side argmax over one corpus scan; the pairwise stage is
@@ -806,7 +808,7 @@ def semantic_dedup(
     the pairwise cost stays bounded by ``max_cell_size²`` per subcell.
     ``None`` (default) disables the guard — required for the exact
     oracle, safe whenever ``n_cells`` is sized to the corpus."""
-    from .dedup import connected_components
+    from .dedup import dedup_survivors_by_priority
     from .sketches import hash_fraction
 
     if centroids is None:
@@ -859,17 +861,17 @@ def semantic_dedup(
         .filter(cosine_similarity(F.col("__va"), F.col("__vb")) >= threshold)
         .select("id_a", "id_b")
     )
-    comp = connected_components(pairs)
-    mem = assigned.join(comp, assigned[id_col] == comp["node"], "left")
-    kw = Window.partitionBy("component").orderBy(F.asc("cos_c"), F.asc(id_col))
-    in_groups = (
-        mem.filter(F.col("node").isNotNull())
-        .withColumn("__k", F.row_number().over(kw))
-        .filter(F.col("__k") == 1)
-        .select(F.col(id_col), F.col("cell"))
+    # keep-least-central as a highest-wins priority with the exact
+    # ``asc(cos_c)`` order: the rank puts NULL first and NaN last (Spark
+    # sorts NaN above every number, and a NaN vector pairs with its whole
+    # cell), and ``-cos_c`` orders the numbers between
+    cos_c = F.col("cos_c")
+    least_central = F.struct(
+        F.when(cos_c.isNull(), 2).when(F.isnan(cos_c), 0).otherwise(1), -cos_c
     )
-    loners = mem.filter(F.col("node").isNull()).select(F.col(id_col), F.col("cell"))
-    return loners.unionByName(in_groups)
+    return dedup_survivors_by_priority(assigned, pairs, id_col, least_central).select(
+        id_col, "cell"
+    )
 
 
 def quantize_embedding(vec: Column, *, bits: int = 8) -> Column:
@@ -1703,31 +1705,6 @@ def pq_query(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(query_id, corpus_id, F.round("score", 6).alias("score"), "rank")
-    )
-
-
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    *,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    m: int = 8,
-    k_codes: int = 16,
-) -> DataFrame:
-    """PQ ANN top-k in one call (:func:`pq_build` + :func:`pq_query`) —
-    the third classic retrieval scale path next to sign-LSH and IVF, and
-    the one that wins when the INDEX must fit in memory: m small codes
-    per vector instead of dim floats. For repeated query batches, persist
-    ``codes`` (and the codebook next to it) and call :func:`pq_query`."""
-    codebook, codes = pq_build(
-        corpus, corpus_id=corpus_id, vec_col=vec_col, m=m, k_codes=k_codes
-    )
-    return pq_query(
-        queries, codebook, codes,
-        query_id=query_id, corpus_id=corpus_id, vec_col=vec_col, k=k,
     )
 
 

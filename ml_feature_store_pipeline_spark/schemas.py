@@ -93,7 +93,7 @@ TESTDATA_TABLES = (
 )
 
 # ---------------------------------------------------------------------------
-# FeatureConfig dtype ⇄ Spark type mapping (SURVEY §1.2; dtype whitelist `:34-39`)
+# FeatureConfig dtype → Spark type mapping (SURVEY §1.2; dtype whitelist `:34-39`)
 # ---------------------------------------------------------------------------
 
 _DTYPE_TO_SPARK: dict[str, T.DataType] = {
@@ -104,14 +104,6 @@ _DTYPE_TO_SPARK: dict[str, T.DataType] = {
     "bool": T.BooleanType(),
 }
 
-_SPARK_TO_DTYPE: dict[str, str] = {
-    "bigint": "int64",
-    "double": "float64",
-    "string": "object",
-    "timestamp": "datetime64[ns]",
-    "boolean": "bool",
-}
-
 SUPPORTED_DTYPES = tuple(_DTYPE_TO_SPARK)
 
 
@@ -120,10 +112,3 @@ def dtype_to_spark(dtype: str) -> T.DataType:
     if dtype not in _DTYPE_TO_SPARK:
         raise ValueError(f"dtype must be one of {SUPPORTED_DTYPES}, got {dtype!r}")
     return _DTYPE_TO_SPARK[dtype]
-
-
-def spark_to_dtype(dt: T.DataType) -> str:
-    name = dt.simpleString()
-    if name not in _SPARK_TO_DTYPE:
-        raise ValueError(f"no reference dtype for Spark type {name!r}")
-    return _SPARK_TO_DTYPE[name]

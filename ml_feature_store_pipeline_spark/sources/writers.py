@@ -20,15 +20,6 @@ def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("header", "true").csv(path)
 
 
-def write_partitioned(df: DataFrame, path: str, *partition_cols: str, mode: str = "append") -> None:
-    """Feature sink (reference A4 `:317-326`): append = new partition dirs;
-    version reads prune to one directory subtree."""
-    writer = df.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
-
-
 def atomic_overwrite_parquet(
     df: DataFrame, path: str, *, extra_files: dict[str, str] | None = None
 ) -> None:
@@ -85,10 +76,6 @@ def list_partition_values(store_path: str, partition_col: str) -> list[str]:
         for d in os.listdir(store_path)
         if d.startswith(prefix) and os.path.isdir(os.path.join(store_path, d))
     )
-
-
-def spark_for(df: DataFrame) -> SparkSession:
-    return df.sparkSession
 
 
 def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:

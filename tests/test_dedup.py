@@ -398,19 +398,24 @@ def test_incremental_lsh_cap_matches_full_run(spark):
     assert sorted((r["id_a"], r["id_b"]) for r in got.collect()) == expected
 
 
-def test_cc_local_path_equals_distributed_loop(spark):
+def test_cc_local_path_equals_distributed_loop(spark, jobs_run_by):
     """The size-gated driver union-find must be output-identical to the
     distributed min-label loop on the same graph (chain, clique, loners)."""
     from ml_feature_store_pipeline_spark.operators.dedup import connected_components
 
+    # (1, 2) twice: the local path unions raw pair rows, duplicates included
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (11, 10), (20, 21), (21, 22), (22, 20), (30, 31)],
+        [(1, 2), (1, 2), (2, 3), (10, 11), (11, 10), (20, 21), (21, 22), (22, 20), (30, 31)],
         "id_a long, id_b long",
     )
-    local = connected_components(pairs)  # under threshold -> local
-    dist = connected_components(pairs, local_threshold=0)  # forced loop
-    assert sorted(map(tuple, local.collect())) == sorted(map(tuple, dist.collect()))
-    comp = {r["node"]: r["component"] for r in local.collect()}
+    # under threshold -> local: one checkpoint of the pairs, one collect
+    # into union-find (a distinct edge set, its count and a second collect
+    # took 6 jobs)
+    local, jobs = jobs_run_by(lambda: connected_components(pairs).collect())
+    assert jobs <= 4, jobs
+    dist = connected_components(pairs, local_threshold=0).collect()  # forced loop
+    assert sorted(map(tuple, local)) == sorted(map(tuple, dist))
+    comp = {r["node"]: r["component"] for r in local}
     assert comp[3] == 1 and comp[11] == 10 and comp[22] == 20 and comp[31] == 30
 
 

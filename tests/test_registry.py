@@ -1,22 +1,8 @@
 """Driver-window invariants: the driver hash-verifies only the FIRST 50
-``queries()`` entries, so the registry order is load-bearing. Round-8
-rotation (VERDICT r7 item 1): 90 registry queries — every r6/r7
-registration — had never produced a driver-green row; R8_WINDOW_QUEUE
-below pins them in registration order (oldest local verification first);
-r8's window (its first 45 + CHANGED_IN_R8) went 50/50 driver-green.
-Round-9 rotation (VERDICT r8 items 1-2): the window covered ALL 40
-remaining queue names (R9_WINDOW_QUEUE) plus the r9 registrations and
-changed-code pulls — 50/50 green in CORRECTNESS_r09.json.
-Round-10 rotation (VERDICT r9 item 1): the 10-name never-checked queue
-(R10_WINDOW_QUEUE) first, then the single r10 registration (NEW_IN_R10)
-and five changed-code pulls (CHANGED_IN_R10), then 33 stale r4-era
-anchors from R10_ANCHOR_CANDIDATES' front — 50/50 green in
-CORRECTNESS_r10.json; cumulatively every registered query has a
-driver-green row. Round-11 rotation (VERDICT r10 item 1): pure
-provenance refresh — the 13-name r4-era tail (R11_ANCHOR_CANDIDATES)
-first, then six changed-code pulls (CHANGED_IN_R11), then 31 of the 45
-r6-era greens (R11_R6_POOL front); the 14-name tail is the r12 anchor
-pool."""
+``queries()`` entries, so the registry order is load-bearing — the window
+is exactly those entries, every one has an oracle, and neither the
+registry nor the window repeats a name. SURVEY §8's query citations and
+star markers are checked against the live registry too."""
 
 from __future__ import annotations
 
@@ -26,104 +12,6 @@ from ml_feature_store_pipeline_spark.harness import (
     query_registry,
 )
 
-# The 90 r6/r7 registrations that entered round 8 without a driver-green
-# row, in registration order (oldest local verification first) — the r7
-# verdict's rotation queue, kept verbatim as the provenance record from
-# which the r8 window and the r9 queue both derive.
-R8_WINDOW_QUEUE = [
-    "table_profile_orders_approx",
-    "ml_quality_filter_docs",
-    "semantic_decontaminate_embeddings",
-    "training_shard_stats",
-    "dedup_survivors_priority_docs",
-    "hard_negative_pairs",
-    "prototypicality_scores",
-    "vocab_coverage_docs",
-    "quality_calibrated_docs",
-    "source_overlap_docs",
-    "bpe_token_stats_docs",
-    "bpe_pair_stats_docs",
-    "quality_calibrated_sketch_docs",
-    "funnel_view_click_purchase",
-    "trend_slope_user_value",
-    "cohort_retention_weekly",
-    "random_projection_embeddings",
-    "mmr_rerank_embeddings",
-    "maxsim_multivector_topk",
-    "event_type_affinity",
-    "corpus_duplication_rate_docs",
-    "zipf_fit_docs",
-    "active_users_daily",
-    "rfm_segments",
-    "touch_attribution_events",
-    "interpurchase_gaps",
-    "k_anonymity_events",
-    "resample_ffill_user_value",
-    "session_stats_events",
-    "session_window_agg_events",
-    "session_trigrams_events",
-    "user_event_entropy",
-    "benford_orders_totalprice",
-    "ohlc_user_value_daily",
-    "kmv_user_overlap_view_purchase",
-    "weighted_median_price_by_flag",
-    "l_diversity_events",
-    "part_copurchase_lift",
-    "event_transition_matrix",
-    "key_skew_gini_events",
-    "event_value_mutual_info",
-    "weighted_median_price_hist",
-    "pq_ann_topk",
-    "active_users_hll_daily",
-    "daily_value_percentiles",
-    "hourly_seasonality_events",
-    "daily_anomaly_profile_events",
-    "referential_integrity_lineitem_orders",
-    "welch_ttest_view_purchase",
-    "conversion_latency_view_purchase",
-    "ks_value_drift_halves",
-    "ab_assignment_srm_events",
-    "mad_outliers_order_price",
-    "calendar_features_events",
-    "classification_report_embeddings",
-    "part_pagerank_top20",
-    "label_centroid_distances",
-    "copurchase_degree_profile",
-    "bpe_train_merges",
-    "bpe_encode_stats_docs",
-    # late-r7 statistics / retrieval / encodings / clustering / eval waves
-    # (all passed tools/verify_oracle.py at sf0.001/0.01/0.1 this round)
-    "corr_matrix_lineitem",
-    "spearman_price_quantity",
-    "mann_whitney_view_purchase",
-    "acf_daily_value",
-    "bm25_topk_docs",
-    "hybrid_rrf_topk",
-    "quantile_transform_orders",
-    "woe_iv_event_type",
-    "chi2_event_type_hour",
-    "kmeans_embeddings",
-    "triangle_stats_copurchase",
-    "lang_confusion_docs",
-    "ranking_metrics_label_topk",
-    "calibration_curve_embeddings",
-    "roc_auc_embeddings",
-    "kmeans_balanced_sample",
-    "survival_curve_users",
-    "did_event_value",
-    "tfidf_doc_similarity_topk",
-    "seasonal_decompose_daily_value",
-    "bootstrap_mean_ci_value",
-    "cuped_lift_value",
-    "robust_trend_daily_value",
-    "trimmed_mean_order_price",
-    "value_gini_order_price",
-    "cusum_daily_value",
-    "term_pmi_docs",
-    "markov_entropy_rate_events",
-    "completeness_by_day_events",
-    "count_encode_event_type",
-]
 
 def test_window_is_exactly_the_first_50_entries():
     names = list(query_registry())
@@ -135,163 +23,6 @@ def test_every_window_entry_has_an_oracle():
     oracles = oracle_registry()
     missing = [n for n in DRIVER_WINDOW if n not in oracles]
     assert missing == []
-
-
-# Queue members whose code round 8 touched (r7 ADVICE fixes + the
-# PageRank co-partitioned pin) — pulled to the window ahead of queue
-# order because their round-7 local verification no longer covers the
-# shipped code.
-CHANGED_IN_R8 = [
-    "part_pagerank_top20",
-    "spearman_price_quantity",
-    "mann_whitney_view_purchase",
-    "ranking_metrics_label_topk",
-    "count_encode_event_type",
-]
-
-_R8_FRONT = [n for n in R8_WINDOW_QUEUE if n not in CHANGED_IN_R8][:45]
-R8_DRIVER_WINDOW = _R8_FRONT + CHANGED_IN_R8  # provenance: went 50/50 green
-
-# The r9 rotation queue: the five names the changed-code pulls displaced,
-# then the rest of R8_WINDOW_QUEUE in order. All 40 were 3-SF locally
-# verified in r7 AND re-verified at sf0.001/0.01/0.1 in round 8's
-# full-registry sweeps (0 failures); the r9 window rotates onto ALL of
-# them (r8 verdict item 1), zeroing the never-driver-checked debt.
-R9_WINDOW_QUEUE = [
-    n for n in R8_WINDOW_QUEUE if n not in _R8_FRONT and n not in CHANGED_IN_R8
-]
-
-# Round-9 registrations (the freeze lifted per r8 verdict items 2/5) —
-# registered straight into the window, the rule r8 set for mid-round
-# additions.
-NEW_IN_R9 = [
-    "substring_decontaminate_docs",
-    "temporal_split_leakage_audit",
-    "ann_rerank_eval",
-]
-
-# Round-9 batch 2: link prediction, collaborative filtering, forecasting,
-# representation audit, readability, t-closeness — all six 3-SF verified
-# via tools/verify_oracle.py and plan-audited 0 flags. Only FOUR fit the
-# 50-slot window (never-checked new code outranks the stale-but-green r4
-# anchors, which return to the r10 pool); the two simplest oracles roll
-# to the r10 rotation queue.
-NEW_IN_R9B = [
-    "adamic_adar_parts_topk",
-    "holt_forecast_daily_value",
-    "dim_correlation_topk_embeddings",
-    "t_closeness_events",
-]
-NEW_IN_R9B_QUEUED = [
-    "item_item_cosine_topk",
-    "readability_docs",
-]
-
-# Round-9 batch 3 (registered after the window filled): single best
-# changepoint by variance reduction, the min/max scan-pruning layout
-# simulator, and the top principal component via unrolled power
-# iteration — all 3-SF verified and plan-audited (best_split's |days|
-# windows carry a written ALLOW entry, the cusum class).
-NEW_IN_R9C = [
-    "best_split_daily_value",
-    "layout_pruning_audit_orders",
-    "pca_power_embeddings",
-    # batch 4: RAKE keyphrase extraction and isotonic (PAV) calibration
-    # via the exact minimax closed form — 3-SF verified, plan-audited
-    # (isotonic's n_bins-row windows carry an ALLOW entry)
-    "rake_keyphrases_docs",
-    "isotonic_calibration_embeddings",
-    # batch 5: Holt-vs-seasonal-naive backtest (MAE/MAPE/MASE)
-    "forecast_backtest_daily_value",
-    # batch 6: per-source unigram KL mixture diagnostic; seasonally-
-    # adjusted anomaly days (decompose residual under modified-z)
-    "unigram_kl_sources_docs",
-    "stl_anomaly_days_value",
-]
-
-# The r10 rotation queue: every registered query without a driver-green
-# row once CORRECTNESS_r09 lands — exactly the batch-2 overflow plus
-# batch 3. r10 must window these FIRST (the standing
-# never-checked-debt rule).
-R10_WINDOW_QUEUE = NEW_IN_R9B_QUEUED + NEW_IN_R9C
-
-# Round-10 registration: the unigram-KL→mixture-weights loop closer
-# (r9 verdict item 6) — the only r10 addition (item 8 froze growth).
-NEW_IN_R10 = [
-    "kl_reweighted_mixture_docs",
-]
-
-# Function text touched in round 10 (beyond the queue names that double
-# as changed-code pulls): the _pairwise_moments decimal partial sums,
-# the corpus-aware LSH/PQ route-default signatures, the tfidf
-# rank-bounded posting cap (code AND oracle re-registered onto it), and
-# — late-round — the concurrent exact/approx pins in ann_rerank_eval /
-# lsh_ann_topk / pq_ann_topk (functions.pin_concurrent; bit-identical
-# results, 3-SF re-verified, names already in this list).
-CHANGED_IN_R10 = [
-    "dim_correlation_topk_embeddings",
-    "lsh_ann_topk",
-    "pq_ann_topk",
-    "ivf_ann_topk",
-    "ann_rerank_eval",
-    "tfidf_doc_similarity_topk",
-]
-
-
-# R10_DRIVER_WINDOW (the round-10 window exactly as it went 50/50
-# driver-green in CORRECTNESS_r10.json — the R8/R9_DRIVER_WINDOW
-# pattern) is defined below R10_ANCHOR_CANDIDATES, which it derives from.
-
-
-def test_round10_rotation_provenance():
-    assert len(R10_DRIVER_WINDOW) == 50
-    # debt-zero criterion: every name ever registered without a driver
-    # green was covered by some window through r10
-    assert set(R10_WINDOW_QUEUE) <= set(R10_DRIVER_WINDOW)
-    oracles = oracle_registry()
-    assert all(n in oracles for n in R10_DRIVER_WINDOW)
-
-
-
-# Function text touched this round — their previous greens (r8 for
-# pagerank, r7 for the serving audit and the LSH recall gate) predate
-# the shipped code: the ADVICE fixes, the register_features
-# metadata-copy fix, and hyperplane_signature's single-F.expr build
-# (bit-identical signatures, but changed code is changed code).
-CHANGED_IN_R9 = [
-    "part_pagerank_top20",
-    "serving_parity_audit",
-    "lsh_ann_topk",
-]
-
-
-# Provenance: the round-9 window exactly as it went 50/50 driver-green
-# in CORRECTNESS_r09.json (the R8_DRIVER_WINDOW pattern).
-R9_DRIVER_WINDOW = R9_WINDOW_QUEUE + NEW_IN_R9 + NEW_IN_R9B + CHANGED_IN_R9
-
-
-def test_round9_rotation_provenance():
-    assert len(R9_DRIVER_WINDOW) == 50
-    assert len(R9_WINDOW_QUEUE) == 40
-    # debt-zero criterion: every name that has EVER lacked a driver green
-    # (the r7 queue) was covered by the r8 or r9 window
-    assert set(R8_WINDOW_QUEUE) <= set(R8_DRIVER_WINDOW) | set(R9_DRIVER_WINDOW)
-
-
-def test_freeze_lifted_with_exactly_the_r9_registrations():
-    """The r8 freeze held at 232 oracle-backed queries; r9 lifted it with
-    17 operators; r10 adds exactly ONE (the KL→mixture loop closer —
-    r9 verdict item 8 pins registry growth to genuine gaps only)."""
-    queries, oracles = query_registry(), oracle_registry()
-    n_new = (
-        len(NEW_IN_R9) + len(NEW_IN_R9B) + len(NEW_IN_R9B_QUEUED) + len(NEW_IN_R9C)
-    )
-    assert len(queries) == 232 + n_new + len(NEW_IN_R10) == 250
-    assert len(oracles) == 250
-    assert all(
-        n in queries and n in oracles
-        for n in NEW_IN_R9 + NEW_IN_R9B + NEW_IN_R9B_QUEUED + NEW_IN_R9C + NEW_IN_R10
-    )
 
 
 def test_every_oracle_has_a_query():
@@ -364,434 +95,3 @@ def test_multimodal_decode_output_is_hashable(spark):
     df = fn(spark, "/root/testdata/sf0.001")
     bad = [f.name for f in df.schema.fields if f.dataType.typeName() in ("array", "map", "struct")]
     assert bad == []
-
-
-# The aging-signal ledger for ROUND 9's ~10 free window slots (the r9
-# window is R9_WINDOW_QUEUE's 40 + 10 anchors): these 47 queries' most
-# recent driver-green row is ROUND 4 — the oldest hard signal in the
-# registry once the r8 window lands (reconstructed from
-# CORRECTNESS_r0{1..7}.json exactly like the r7 rotation did). r9 should
-# fill its free slots from the FRONT of this list (registry order),
-# after any changed-code pulls, and roll the rest forward.
-R9_ANCHOR_CANDIDATES = [
-    "text_stats",
-    "dedup_exact_docs",
-    "minhash_candidate_pairs",
-    "incremental_minhash_pairs",
-    "simhash_docs",
-    "simhash_near_pairs",
-    "ngram_jaccard_pairs",
-    "cosine_topk",
-    "lsh_ann_topk",
-    "multimodal_decode",
-    "windowed_user_counts",
-    "ml_tfidf_vectors",
-    "ml_minhash_near_dup",
-    "ml_brp_ann_topk",
-    "pack_sequences_docs",
-    "token_mixture_sample_docs",
-    "corpus_curation_pipeline",
-    "near_dup_clusters",
-    "bloom_prune_lineitem",
-    "merge_upsert_orders",
-    "audio_decode_stats",
-    "video_frame_stats",
-    "image_resize_stats",
-    "psi_order_price_drift",
-    "tpch_q13_like",
-    "tpch_q17_like",
-    "tpch_q22_like",
-    "tpch_q11_like",
-    "tpch_q16_like",
-    "tpch_q21_like",
-    "tpch_q2_like",
-    "tpch_q8_like",
-    "tpch_q9_like",
-    "tpch_q20_like",
-    "tpch_q1",
-    "tpch_q3_topk",
-    "asof_events_orders",
-    "asof_events_orders_bucketed",
-    "asof_events_orders_auto",
-    "sessionize_events",
-    "training_set_pit",
-    "training_set_pit_bucketed",
-    "training_set_pit_auto",
-    "quantile_bin_orders",
-    "target_encode_events",
-    "hashed_cross_events",
-    "table_profile_orders",
-]
-
-
-# The aging-signal ledger rolls forward UNCONSUMED: batch 2's four window
-# entries displaced the anchor slots r9 had reserved, so the whole
-# R9_ANCHOR_CANDIDATES pool (minus lsh_ann_topk, refreshed via its
-# changed-code pull) remains the oldest driver signal (r4-era greens) and
-# is r10's anchor pool, in order — text_stats back at the front. r10
-# fills its free window slots from R10_WINDOW_QUEUE first (never-checked
-# debt), then changed-code pulls and new registrations, then THIS list's
-# front, and rolls the rest to r11.
-R10_ANCHOR_CANDIDATES = [
-    n for n in R9_ANCHOR_CANDIDATES if n not in CHANGED_IN_R9
-]
-
-# Provenance: the round-10 window exactly as it went 50/50 driver-green
-# in CORRECTNESS_r10.json (the R8/R9_DRIVER_WINDOW pattern).
-R10_DRIVER_WINDOW = (
-    R10_WINDOW_QUEUE
-    + NEW_IN_R10
-    + CHANGED_IN_R10
-    + [n for n in R10_ANCHOR_CANDIDATES if n not in CHANGED_IN_R10][:33]
-)
-
-
-def test_r10_anchor_pool_consumed_from_the_front():
-    assert len(R10_ANCHOR_CANDIDATES) == 46
-    assert R10_ANCHOR_CANDIDATES[0] == "text_stats"
-    names = set(query_registry())
-    assert set(R10_ANCHOR_CANDIDATES) <= names
-    # the r10 window refreshed the pool's FIRST 33 names (registry
-    # order); the 13-name tail rolled to r11 (tpch_q1 was displaced by
-    # the ivf_ann_topk changed-code pull and leads the r11 pool)
-    assert set(R10_ANCHOR_CANDIDATES[:33]) <= set(R10_DRIVER_WINDOW)
-    assert not set(R10_ANCHOR_CANDIDATES[33:]) & set(R10_DRIVER_WINDOW)
-
-
-# The r11 anchor pool: the unrotated tail — after the r10 window landed
-# (50/50 green), the ONLY registry queries whose newest driver green
-# predates r6. The r11 window consumes ALL 13, finishing the refresh the
-# r9/r10 rotations started: no query's newest green older than r6.
-R11_ANCHOR_CANDIDATES = [
-    n for n in R10_ANCHOR_CANDIDATES if n not in set(R10_ANCHOR_CANDIDATES[:33])
-]
-
-
-def test_r11_anchor_pool_is_the_unrotated_tail():
-    assert len(R11_ANCHOR_CANDIDATES) == 13
-    assert R11_ANCHOR_CANDIDATES[0] == "tpch_q1"
-    assert R11_ANCHOR_CANDIDATES[-1] == "table_profile_orders"
-    # consumed by the r11 window (historical; r11 went 50/50 green)
-    assert set(R11_ANCHOR_CANDIDATES) <= set(query_registry())
-
-
-# Function text touched in round 11 — their r10 greens predate the
-# shipped code: pin_concurrent rebuilt on InheritableThread with
-# fail-fast job-group cancellation (bit-identical pins, property-tested)
-# pulls its three consumers; the shared-count ``n_corpus`` parameter
-# landed on lsh_topk/ivf_build/ivf_topk/pq_topk_rerank (signature
-# additions — the registered queries pass explicit params, but changed
-# code is changed code); tfidf_doc_topk's ``max_postings`` now DEFAULTS
-# to the corpus-aware plan-side cap and the registered query + oracle
-# moved onto the auto default; ml_brp_ann_topk is docstring-only (the
-# measured do-NOT-pin finding) but pulled under the same rule.
-CHANGED_IN_R11 = [
-    "lsh_ann_topk",
-    "ivf_ann_topk",
-    "pq_ann_topk",
-    "ann_rerank_eval",
-    "tfidf_doc_similarity_topk",
-    "ml_brp_ann_topk",
-]
-
-# The 45 registry queries whose newest driver green is r6 (reconstructed
-# from CORRECTNESS_r0{1..10}.json exactly like the r7/r9 ledgers) — the
-# oldest hard signal once the r4-era anchors above land. Registry order.
-# r11 consumes the FIRST 31; the 14-name tail is the r12 anchor pool.
-R11_R6_POOL = [
-    "language_id",
-    "doc_quality_scores",
-    "image_phash_dup_groups",
-    "audio_afp_dup_groups",
-    "chunk_documents",
-    "cosine_topk_blas",
-    "scrub_pii_docs",
-    "decontaminate_docs",
-    "decayed_user_spend",
-    "lm_quality_score_docs",
-    "merge_upsert_orders_evolve",
-    "rollup_lineitem",
-    "pivot_event_values",
-    "unpivot_lineitem",
-    "tpch_q6",
-    "tpch_q5_like",
-    "tpch_q12_like",
-    "tpch_q10_like",
-    "order_price_rank_stats",
-    "rolling_hour_user_spend",
-    "scan_filter_project",
-    "iqr_outlier_summary",
-    "quality_null_dup_stats",
-    "topk_latest_events",
-    "latest_event_per_user",
-    "customer_order_counts",
-    "semi_join_customers",
-    "anti_join_customers",
-    "asof_events_orders_stale30d",
-    "asof_prev_order",
-    "band_join_price_tiers",
-    "running_revenue",
-    "lag_lead_events",
-    "set_ops_summary",
-    "json_props_extract",
-    "doc_fingerprints",
-    "backfill_snapshots",
-    "incremental_distinct_users_per_type",
-    "robust_scale_orders",
-    "target_encode_oof_events",
-    "jsd_event_type_drift",
-    "standard_scale_events",
-    "group_scale_events",
-    "winsorize_orders",
-    "index_encode_event_types",
-]
-
-# The r12 anchor pool: the unconsumed r6-green tail.
-R12_ANCHOR_CANDIDATES = R11_R6_POOL[31:]
-
-# The r11 window as shipped (50/50 green in CORRECTNESS_r11.json) —
-# historical record, the R8/R9/R10_DRIVER_WINDOW pattern.
-R11_DRIVER_WINDOW = R11_ANCHOR_CANDIDATES + CHANGED_IN_R11 + R11_R6_POOL[:31]
-
-
-def test_round11_rotation_landed_as_planned():
-    # r10 verdict item 1: ALL 13 r4-era anchors first (finishing the
-    # provenance refresh), then the changed-code pulls, then 31 r6-era
-    # anchors from the R11_R6_POOL front; the 14-name tail rolled to r12.
-    assert len(R11_DRIVER_WINDOW) == 50
-    assert len(R11_R6_POOL) == 45
-    assert len(R12_ANCHOR_CANDIDATES) == 14
-    assert R12_ANCHOR_CANDIDATES[0] == "running_revenue"
-    assert R12_ANCHOR_CANDIDATES[-1] == "index_encode_event_types"
-    names = set(query_registry())
-    assert set(R11_R6_POOL) <= names
-
-
-# Function text touched in round 12 — their r11 greens predate the
-# shipped code: similarity._nearest_cells gained the empty-centers
-# short-circuit and ivf_query the pre-collected-centers pass-through
-# (r11 verdict item 5 / ADVICE — bit-identical, two-probe/one-collect
-# plan-probed in test_similarity), pulling ivf_ann_topk and
-# ann_rerank_eval; pin_concurrent now restores
-# spark.job.interruptOnCancel alongside jobGroup.id/description (r11
-# ADVICE), pulling its three consumers lsh_ann_topk / pq_ann_topk /
-# ann_rerank_eval; and the inline driver-pin copies in
-# quality.mad_outlier_profile and windows.weighted_quantile_hist were
-# folded into functions.pin_local (r11 verdict item 7 — identical
-# collect→LocalRelation idiom, now under the _PIN_PLAN_SINK audit),
-# pulling mad_outliers_order_price and weighted_median_price_hist.
-CHANGED_IN_R12 = [
-    "lsh_ann_topk",
-    "ivf_ann_topk",
-    "pq_ann_topk",
-    "ann_rerank_eval",
-    "mad_outliers_order_price",
-    "weighted_median_price_hist",
-]
-
-# The 48 registry queries whose newest driver green is r7 (reconstructed
-# from CORRECTNESS_r0{1..11}.json exactly like the r7/r9/r11 ledgers) —
-# the oldest hard signal once the r6-era anchors above land. Registry
-# order. r12 consumes the FIRST 30; the 18-name tail is the r13 pool.
-R12_R7_POOL = [
-    "user_features",
-    "minhash_signatures",
-    "embedding_near_dup",
-    "video_vhash_dup_groups",
-    "embedding_quantization_stats",
-    "mixture_epochs_docs",
-    "repetition_stats_docs",
-    "ewma_user_spend_prior",
-    "sliding_window_counts",
-    "dedup_survivors_docs",
-    "stratified_sample_counts",
-    "key_skew_profile_events",
-    "interval_join_price_buckets",
-    "tfidf_terms_docs",
-    "scd2_event_type_history",
-    "pit_scd2_orders_state",
-    "embedding_norm_stats",
-    "token_histogram_docs",
-    "kmv_distinct_orderkeys",
-    "weighted_sample_events",
-    "incremental_user_value_stats",
-    "near_dup_edit_distance",
-    "hist_quantile_prices",
-    "cms_heavy_hitters_events",
-    "semantic_dedup_embeddings",
-    "knn_label_audit",
-    "gopher_filter_docs",
-    "dsir_select_docs",
-    "budget_select_docs",
-    "chunk_dedup_docs",
-    "cube_orders",
-    "tpch_q4_like",
-    "tpch_q18_like",
-    "tpch_q14",
-    "tpch_q7_like",
-    "tpch_q15_like",
-    "tpch_q19_like",
-    "filter_in_list",
-    "lineitem_quartiles",
-    "events_per_type",
-    "distinct_parts_per_flag",
-    "revenue_by_region",
-    "sample_events_10pct",
-    "train_test_split_counts",
-    "quartiles_by_priority",
-    "top3_orders_per_priority",
-    "distinct_users_per_type_2stage",
-    "negative_sample_pairs",
-]
-
-# The r13 anchor pool: the unconsumed r7-green tail.
-R13_ANCHOR_CANDIDATES = R12_R7_POOL[30:]
-
-# The r12 window as shipped (50/50 green in CORRECTNESS_r12.json) —
-# historical record, the R8..R11_DRIVER_WINDOW pattern.
-R12_DRIVER_WINDOW = R12_ANCHOR_CANDIDATES + CHANGED_IN_R12 + R12_R7_POOL[:30]
-
-
-def test_round12_rotation_landed_as_planned():
-    # r11 verdict item 1: ALL 14 remaining r6-era anchors first
-    # (finishing the provenance refresh — after this window no registry
-    # query's newest driver green predates r7), then the changed-code
-    # pulls, then 30 r7-era anchors from the R12_R7_POOL front; the
-    # 18-name tail rolled to r13.
-    assert len(R12_DRIVER_WINDOW) == 50
-    assert len(R12_R7_POOL) == 48
-    assert len(R13_ANCHOR_CANDIDATES) == 18
-    assert R13_ANCHOR_CANDIDATES[0] == "cube_orders"
-    assert R13_ANCHOR_CANDIDATES[-1] == "negative_sample_pairs"
-    assert not set(R12_R7_POOL) & set(R11_R6_POOL)  # disjoint provenance strata
-    names = set(query_registry())
-    assert set(R12_R7_POOL) <= names
-
-
-# Function text touched in round 13 (optimization round 2) — their prior
-# greens predate the shipped code:
-# - the scan-rescue revert on three sites (item_item_cosine_topk,
-#   bpe_train_merges, lm_quality_score_docs);
-# - text.bpe_train's lazy corpus checkpoints (bpe_train_merges,
-#   bpe_encode_stats_docs);
-# - similarity._kmeans_final_assignment's single-lazy-plan unroll + the
-#   two kmeans read sites (kmeans_embeddings, kmeans_balanced_sample);
-# - similarity.ivf_build's fit-input partition clamp (ivf_ann_topk,
-#   ann_rerank_eval);
-# - the _par_rows decode-parallelism cap (multimodal_decode,
-#   audio_decode_stats, image_phash/audio_afp/video_vhash dup groups);
-# - similarity.pca_power_embeddings' driver fold (pca_power_embeddings);
-# - mlfeatures.quality_classifier_scores' LR fit clamp
-#   (ml_quality_filter_docs);
-# - the _lit_vector/_lit_matrix finite guard and the
-#   _rerank_metrics_local uniqueness assert (lsh_ann_topk, pq_ann_topk,
-#   ann_rerank_eval, random_projection_embeddings);
-# - store.register_features' within-call feature-frame persist
-#   (serving_parity_audit).
-CHANGED_IN_R13 = [
-    "item_item_cosine_topk",
-    "bpe_train_merges",
-    "lm_quality_score_docs",
-    "bpe_encode_stats_docs",
-    "kmeans_embeddings",
-    "kmeans_balanced_sample",
-    "ivf_ann_topk",
-    "ann_rerank_eval",
-    "lsh_ann_topk",
-    "pq_ann_topk",
-    "multimodal_decode",
-    "audio_decode_stats",
-    "image_phash_dup_groups",
-    "audio_afp_dup_groups",
-    "video_vhash_dup_groups",
-    "pca_power_embeddings",
-    "ml_quality_filter_docs",
-    "random_projection_embeddings",
-    "serving_parity_audit",
-]
-
-# The 45 registry queries whose newest driver green is r8 (reconstructed
-# from CORRECTNESS_r0{1..12}.json exactly like the r6/r7 ledgers),
-# EXCLUDING ml_quality_filter_docs and random_projection_embeddings —
-# both r8-green but already pulled into r13 as changed code. Registry
-# order. r13 consumes the FIRST 13; the 32-name tail is the r14 pool.
-R13_R8_POOL = [
-    "semantic_decontaminate_embeddings",
-    "dedup_survivors_priority_docs",
-    "hard_negative_pairs",
-    "prototypicality_scores",
-    "vocab_coverage_docs",
-    "quality_calibrated_docs",
-    "source_overlap_docs",
-    "bpe_token_stats_docs",
-    "bpe_pair_stats_docs",
-    "quality_calibrated_sketch_docs",
-    "trend_slope_user_value",
-    "funnel_view_click_purchase",
-    "cohort_retention_weekly",
-    "mmr_rerank_embeddings",
-    "maxsim_multivector_topk",
-    "event_type_affinity",
-    "corpus_duplication_rate_docs",
-    "zipf_fit_docs",
-    "active_users_daily",
-    "rfm_segments",
-    "touch_attribution_events",
-    "interpurchase_gaps",
-    "k_anonymity_events",
-    "resample_ffill_user_value",
-    "session_stats_events",
-    "session_window_agg_events",
-    "session_trigrams_events",
-    "user_event_entropy",
-    "benford_orders_totalprice",
-    "ohlc_user_value_daily",
-    "kmv_user_overlap_view_purchase",
-    "weighted_median_price_by_flag",
-    "l_diversity_events",
-    "part_copurchase_lift",
-    "event_transition_matrix",
-    "key_skew_gini_events",
-    "event_value_mutual_info",
-    "active_users_hll_daily",
-    "daily_value_percentiles",
-    "spearman_price_quantity",
-    "mann_whitney_view_purchase",
-    "ranking_metrics_label_topk",
-    "count_encode_event_type",
-    "table_profile_orders_approx",
-    "training_shard_stats",
-]
-
-# The r14 anchor pool: the unconsumed r8-green tail.
-R14_ANCHOR_CANDIDATES = R13_R8_POOL[13:]
-
-
-def test_round13_rotation_policy_is_the_window():
-    # r12 verdict item 7 + the standing policy: ALL 18 remaining r7-era
-    # anchors first (after this window no registry query's newest driver
-    # green predates r8), then this round's changed-code pulls, then 13
-    # r8-era anchors from the R13_R8_POOL front; the 32-name tail rolls
-    # to r14.
-    expected = R13_ANCHOR_CANDIDATES + CHANGED_IN_R13 + R13_R8_POOL[:13]
-    assert list(DRIVER_WINDOW) == expected
-    assert len(DRIVER_WINDOW) == 50
-    assert len(set(DRIVER_WINDOW)) == 50
-    assert len(R13_R8_POOL) == 45
-    assert len(R14_ANCHOR_CANDIDATES) == 32
-    assert R14_ANCHOR_CANDIDATES[0] == "mmr_rerank_embeddings"
-    assert R14_ANCHOR_CANDIDATES[-1] == "training_shard_stats"
-    assert not set(R14_ANCHOR_CANDIDATES) & set(DRIVER_WINDOW)
-    # disjoint provenance strata (changed-code pulls excepted by design)
-    assert not set(R13_R8_POOL) & set(R12_R7_POOL)
-    names = set(query_registry())
-    assert set(R13_R8_POOL) <= names
-    oracles = oracle_registry()
-    assert all(n in oracles for n in DRIVER_WINDOW)
-
-
-def test_r9_anchor_candidates_all_still_registered():
-    names = set(query_registry())
-    assert set(R9_ANCHOR_CANDIDATES) <= names
-    # the r10 rotation queue is exactly the registry's never-checked tail
-    assert set(R10_WINDOW_QUEUE) == set(NEW_IN_R9B_QUEUED) | set(NEW_IN_R9C)

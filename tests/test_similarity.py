@@ -176,7 +176,7 @@ def test_ivf_prebuilt_index_roundtrips_through_parquet(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_semantic_dedup_keeps_least_central_member(spark):
+def test_semantic_dedup_keeps_least_central_member(spark, jobs_run_by):
     # cell axis-aligned corpus: ids 0/1 nearly identical (dup group), id 2
     # orthogonal. Centroids supplied explicitly to pin the geometry.
     rows = [
@@ -190,8 +190,34 @@ def test_semantic_dedup_keeps_least_central_member(spark):
     )
     from ml_feature_store_pipeline_spark.operators.similarity import semantic_dedup
 
-    out = sorted(r["vec_id"] for r in semantic_dedup(emb, threshold=0.9, centroids=cent).collect())
+    got, jobs = jobs_run_by(
+        lambda: semantic_dedup(emb, threshold=0.9, centroids=cent).collect()
+    )
+    out = sorted(r["vec_id"] for r in got)
     assert out == [1, 2]  # id 0 deduped away; survivor is the less-central id 1
+    # the keep rule is dedup_survivors_by_priority and the small pair graph
+    # goes straight into union-find (a separate membership join, window and
+    # loner union over a distinct edge set took 17 jobs)
+    assert jobs <= 13, jobs
+
+
+def test_semantic_dedup_nan_centroid_cosine_never_wins(spark):
+    """A vector with a NaN component has a NaN centroid cosine and, since
+    Spark compares NaN above every number, pairs with its whole cell. Under
+    the keep-least-central order (ascending cosine) NaN sorts LAST, so the
+    finite least-central member survives — a plain ``-cos_c`` priority
+    would rank NaN first and keep id 2."""
+    from ml_feature_store_pipeline_spark.operators.similarity import semantic_dedup
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, 0.01]), (2, [float("nan"), 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    cent = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell int, center array<double>"
+    )
+    out = [r["vec_id"] for r in semantic_dedup(emb, threshold=0.9, centroids=cent).collect()]
+    assert out == [1]
 
 
 def test_semantic_dedup_no_cross_cell_pairs(spark):
