@@ -429,8 +429,7 @@ def ivf_build(
                 -(-(n_train * n_cells) // 1_000_000),
             ),
         )
-        if fit_input.rdd.getNumPartitions() > target:
-            fit_input = fit_input.coalesce(target)
+        fit_input = fit_input.coalesce(target)  # never raises the partition count
     fit_input = fit_input.persist()
     try:
         model = km.fit(fit_input)

@@ -3,15 +3,19 @@
 The reference's ``DataQualityValidator`` (`ML Feature Store
 Pipeline.py:114-160`) makes several full pandas passes (isnull, duplicated,
 per-column quantile + boolean masks). Here the profile is at most two
-plain aggregates, whatever the column count:
+plain aggregates, whatever the column count, split so that the first can
+ride another job:
 
-- exact mode (default; what the oracle gate hash-matches): one combined
-  aggregate (row count, per-column null counts, distinct-row count,
-  per-numeric-column exact quartiles), then one aggregate of the
-  per-column IQR-violation sums with the collected quartile bounds
-  inlined as literals. Columns without quartiles (empty or all-NULL)
-  get no violation sum, and the second aggregate is skipped when none
-  has one.
+- exact mode (default; what the oracle gate hash-matches): the
+  aggregates of :func:`profile_aggregates` (row count, per-column null
+  counts, per-numeric-column exact quartiles and non-null counts) carry
+  no DISTINCT, so they also run as observed metrics of a write
+  (``DataFrame.observe``): the store computes them during the parquet
+  write of a registration. :func:`finish_profile` then runs one
+  aggregate over the frame: the distinct-row count and the per-column
+  IQR-violation sums with the quartile band edges inlined as literals.
+  Columns without quartiles (empty or all-NULL) get no violation sum,
+  and an empty frame needs no second aggregate.
 - ``approximate=True`` (the 100 TB variant): a single scan — one
   mergeable aggregate computes a KLL quantile GRID per numeric column
   alongside HLL distinct, and the outlier counts are derived from the
@@ -24,11 +28,13 @@ driver-side data movement beyond the scalar results.
 
 from __future__ import annotations
 
+import bisect
 import math
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
@@ -81,18 +87,19 @@ def _numeric_columns(df: DataFrame) -> list[str]:
 _GRID_STEPS = 2000
 
 
+def _spark_order(v: float) -> tuple[bool, float]:
+    """Sort key of Spark's float order, which puts NaN above every number."""
+    return (True, 0.0) if math.isnan(v) else (False, v)
+
+
 def _grid_cdf(values: list[float], x: float, *, strict: bool) -> float:
     """Empirical CDF read off a quantile grid: the largest grid probability
-    whose value is < x (``strict``) or <= x, linearly interpolated between
-    surrounding grid points."""
-    import bisect
-
+    whose value is < x (``strict``) or <= x in Spark's float order,
+    linearly interpolated between surrounding finite grid points."""
     if not values:
         return 0.0
-    if strict:
-        j = bisect.bisect_left(values, x)
-    else:
-        j = bisect.bisect_right(values, x)
+    search = bisect.bisect_left if strict else bisect.bisect_right
+    j = search(values, _spark_order(x), key=_spark_order)
     if j <= 0:
         return 0.0
     if j >= len(values):
@@ -100,24 +107,24 @@ def _grid_cdf(values: list[float], x: float, *, strict: bool) -> float:
     # interpolate within the straddling grid cell
     v0, v1 = values[j - 1], values[j]
     p0, p1 = (j - 1) / _GRID_STEPS, j / _GRID_STEPS
-    if v1 == v0:
-        return p0
-    return p0 + (p1 - p0) * (x - v0) / (v1 - v0)
+    frac = (x - v0) / (v1 - v0) if v1 != v0 else 0.0
+    return p0 + (p1 - p0) * frac if math.isfinite(frac) else p0
 
 
-def _bounds_frame(df: DataFrame, *, approximate: bool, percentile_accuracy: int) -> DataFrame:
-    """The combined 1-row aggregate: counts, nulls, distinct, quantiles."""
-    cols = df.columns
-    numeric = _numeric_columns(df)
-    distinct = (
-        F.approx_count_distinct(F.struct(*cols))
-        if approximate
-        else F.countDistinct(F.struct(*cols))
-    )
-    aggs = [F.count(F.lit(1)).alias("__n"), distinct.alias("__distinct")]
-    aggs += [F.sum(F.col(c).isNull().cast("long")).alias(f"__null_{c}") for c in cols]
+def profile_aggregates(
+    df: DataFrame, *, approximate: bool = False, percentile_accuracy: int = 10000
+) -> list[Column]:
+    """The first aggregate of the profile: row count, per-column null
+    counts and, per numeric column, the quartiles (exact) or a quantile
+    grid (approximate) and the non-null count. Approximate mode adds the
+    HLL distinct-row count; exact mode has no DISTINCT, so its list can
+    also run as observed metrics. :func:`finish_profile` reads the result."""
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    if approximate:
+        aggs.append(F.approx_count_distinct(F.struct(*df.columns)).alias("__distinct"))
+    aggs += [F.sum(F.col(c).isNull().cast("long")).alias(f"__null_{c}") for c in df.columns]
     grid = "array(" + ", ".join(f"{i}/{_GRID_STEPS}" for i in range(_GRID_STEPS + 1)) + ")"
-    for c in numeric:
+    for c in _numeric_columns(df):
         # exact linear-interpolation percentile (pandas default) — C11 `:131-132`;
         # percentile_approx over the full grid is the single-scan 100 TB variant.
         q_expr = (
@@ -127,7 +134,56 @@ def _bounds_frame(df: DataFrame, *, approximate: bool, percentile_accuracy: int)
         )
         aggs.append(F.expr(q_expr).alias(f"__q_{c}"))
         aggs.append(F.count(F.col(c)).alias(f"__nn_{c}"))
-    return df.agg(*aggs)
+    return aggs
+
+
+def finish_profile(
+    df: DataFrame, row: Mapping[str, Any], *, approximate: bool = False
+) -> QualityProfile:
+    """The profile from a result row of :func:`profile_aggregates` over
+    ``df`` (a collected ``Row`` or an observation's dict). Approximate mode
+    reads everything off the row. Exact mode runs one more aggregate over
+    ``df``: the distinct-row count and exact per-row IQR-violation sums
+    with the row's band edges as literals; an empty frame skips it."""
+    cols = df.columns
+    numeric = _numeric_columns(df)
+    at = (_GRID_STEPS // 4, 3 * _GRID_STEPS // 4) if approximate else (0, 1)
+    quartiles: dict[str, tuple[float, float]] = {}
+    for c in numeric:
+        q = row[f"__q_{c}"]
+        if q is None or q[0] is None:
+            continue
+        quartiles[c] = (float(q[at[0]]), float(q[at[1]]))
+    # B9 `:133-134`: the IQR band per column
+    bands = {c: (q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1)) for c, (q1, q3) in quartiles.items()}
+
+    n = int(row["__n"])
+    outlier_counts: dict[str, int] = {}
+    if approximate:
+        distinct = int(row["__distinct"] or 0)
+        for c, (lo, hi) in bands.items():
+            vals = [float(v) for v in row[f"__q_{c}"]]
+            below = _grid_cdf(vals, lo, strict=True)
+            above = 1.0 - _grid_cdf(vals, hi, strict=False)
+            outlier_counts[c] = int(round(row[f"__nn_{c}"] * (below + above)))
+    elif n:
+        post = df.agg(
+            F.countDistinct(F.struct(*cols)),
+            *[F.sum(((F.col(c) < lo) | (F.col(c) > hi)).cast("long")) for c, (lo, hi) in bands.items()],
+        ).collect()[0]
+        distinct = int(post[0])
+        outlier_counts = {c: int(v or 0) for c, v in zip(bands, post[1:])}
+    else:
+        distinct = 0
+
+    return QualityProfile(
+        row_count=n,
+        null_counts={c: int(row[f"__null_{c}"] or 0) for c in cols},
+        distinct_rows=distinct,
+        quartiles=quartiles,
+        outlier_counts=outlier_counts,
+        numeric_non_null={c: int(row[f"__nn_{c}"] or 0) for c in numeric},
+    )
 
 
 def profile(
@@ -136,9 +192,10 @@ def profile(
     """Run the quality profile.
 
     Exact mode (the default) is what the oracle gate and the reference's
-    pandas semantics (C10/C11) hash-match against: the combined aggregate
-    of :func:`_bounds_frame`, then one aggregate of exact per-row
-    IQR-violation sums with the collected bounds as literals.
+    pandas semantics (C10/C11) hash-match against: the aggregate of
+    :func:`profile_aggregates`, then :func:`finish_profile`'s distinct
+    count and exact per-row IQR-violation sums with the collected bounds
+    as literals.
 
     ``approximate=True`` is the 100 TB variant — a SINGLE scan: HLL
     ``approx_count_distinct`` for the duplicate check (no exact-distinct
@@ -148,46 +205,8 @@ def profile(
     the band edges × non-null count — accurate to the sketch's rank error,
     with no second pass over the data).
     """
-    cols = df.columns
-    numeric = _numeric_columns(df)
-    row = _bounds_frame(df, approximate=approximate, percentile_accuracy=percentile_accuracy).collect()[0]
-
-    quartiles: dict[str, tuple[float, float]] = {}
-    for c in numeric:
-        q = row[f"__q_{c}"]
-        if q is None or q[0] is None:
-            continue
-        if approximate:
-            quartiles[c] = (float(q[_GRID_STEPS // 4]), float(q[3 * _GRID_STEPS // 4]))
-        else:
-            quartiles[c] = (float(q[0]), float(q[1]))
-    # B9 `:133-134`: the IQR band per column
-    bands = {c: (q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1)) for c, (q1, q3) in quartiles.items()}
-
-    outlier_counts: dict[str, int] = {}
-    if approximate:
-        for c, (lo, hi) in bands.items():
-            vals = [float(v) for v in row[f"__q_{c}"]]
-            below = _grid_cdf(vals, lo, strict=True)
-            above = 1.0 - _grid_cdf(vals, hi, strict=False)
-            outlier_counts[c] = int(round(row[f"__nn_{c}"] * (below + above)))
-    elif bands:
-        sums = df.agg(
-            *[
-                F.sum(((F.col(c) < lo) | (F.col(c) > hi)).cast("long"))
-                for c, (lo, hi) in bands.items()
-            ]
-        ).collect()[0]
-        outlier_counts = {c: int(v or 0) for c, v in zip(bands, sums)}
-
-    return QualityProfile(
-        row_count=int(row["__n"]),
-        null_counts={c: int(row[f"__null_{c}"] or 0) for c in cols},
-        distinct_rows=int(row["__distinct"] or 0),
-        quartiles=quartiles,
-        outlier_counts=outlier_counts,
-        numeric_non_null={c: int(row[f"__nn_{c}"] or 0) for c in numeric},
-    )
+    aggs = profile_aggregates(df, approximate=approximate, percentile_accuracy=percentile_accuracy)
+    return finish_profile(df, df.agg(*aggs).collect()[0], approximate=approximate)
 
 
 @dataclass
@@ -212,8 +231,14 @@ class DataQualityValidator:
             "has_user_id": "user_id" in df.columns,
         }
 
-    def validate(self, df: DataFrame) -> tuple[DataQualityMetrics, QualityProfile]:
-        prof = profile(df)
+    def validate(
+        self, df: DataFrame, observed: Mapping[str, Any] | None = None
+    ) -> tuple[DataQualityMetrics, QualityProfile]:
+        """Score ``df``. ``observed`` is a result of
+        :func:`profile_aggregates` over ``df`` that already ran (the store
+        observes it during the write); then only :func:`finish_profile`'s
+        aggregate runs here."""
+        prof = profile(df) if observed is None else finish_profile(df, observed)
         results: dict[str, bool] = {}
         if self.include_default_checks:
             results.update(self._default_checks(df, prof))

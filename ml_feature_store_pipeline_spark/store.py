@@ -4,21 +4,38 @@ Re-expresses the reference's ``AdvancedFeatureStore`` (`ML Feature Store
 Pipeline.py:229-541`) on Spark:
 
 - the SQLite ``features`` table (`:262-280`) → a parquet table partitioned
-  by ``feature_version``: each version is written to its own partition
-  directory, version reads prune to one subtree, retention = drop
+  by ``feature_version``: each version lives in its own partition
+  directory, version reads touch one subtree, retention = drop
   directories. At 100 TB the intended-but-broken SQLite indexes
   (`:277-278`) become partition pruning (version) + parquet row-group
   min/max stats (user_id, helped by sorting within partitions at write).
+- the reference's register (`:295-353`: validate, content-hash, insert)
+  → one observed write. The persisted frame is written into
+  ``features/_staging-<uuid>/data`` under ``DataFrame.observe``, so that
+  single job also yields the content hash (the version id) and the
+  quality profile's first aggregate; the validator then runs one
+  aggregate for the distinct-row count and the outlier sums. The writer
+  holds a ``flock`` on its staging directory while it works. Under the
+  manifest lock the data directory is renamed to
+  ``feature_version=<v>`` and the manifest entry is added; a version the
+  manifest already lists drops its staging copy instead, so two writers
+  of the same content end with one directory and one entry.
 - the ``feature_metadata`` table (`:282-292`) → one JSON manifest,
   ``{path}/_manifest.json``, with one entry per version:
-  ``FeatureMetadata.to_dict()`` plus a monotonic registration ``seq`` and
-  the version's ``n_rows``.
+  ``FeatureMetadata.to_dict()`` plus a monotonic registration ``seq``, the
+  version's ``n_rows`` and the read ``schema`` of its directory, so
+  ``get_features`` builds its DataFrame with no Spark job.
   Every metadata operation (latest / as-of resolution, point lookup,
   listing, upsert, retention) runs on the driver over the parsed entries,
   with no Spark job. Readers re-parse the file only when its stat changed,
   so a publish from another store object or process is seen on the next
-  call. Writers hold an ``O_EXCL`` lock file for each read-modify-write
-  and swap the new file in with ``os.replace``.
+  call. Writers hold an exclusive ``flock`` on ``_manifest.json.lock`` for
+  each read-modify-write (the kernel releases it when a writer dies) and
+  swap the new file in with ``os.replace``.
+- crash safety: a crash leaves at most a staging directory or a version
+  directory the manifest does not list; ``cleanup_old_versions`` drops
+  both (a staging directory only once no writer holds its lock). The
+  lock files are ``flock``s, so they work on a local filesystem only.
 - asyncio/aiosqlite (`:261, :317, :373`) → not replicated: Spark supplies
   the parallelism; the public API is synchronous (SURVEY §3.4).
 """
@@ -27,30 +44,37 @@ from __future__ import annotations
 
 import contextlib
 import copy
+import dataclasses
 import datetime as _dt
+import fcntl
 import json
 import os
-import time
+import shutil
 import uuid
 from collections.abc import Iterator
 from typing import Any
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .cache import CacheBackend, InMemoryTTLCache, cache_key
 from .config import DataQualityMetrics, FeatureConfig, FeatureMetadata
 from .monitor import FeatureMonitor
-from .quality import DataQualityValidator
+from .quality import DataQualityValidator, profile_aggregates
 from .schemas import CREATED_AT_COLUMN, VERSION_COLUMN
 from .sources.writers import drop_partition_dirs, list_partition_values
-from .sources.writers import atomic_overwrite_parquet  # noqa: F401 - perfbench's traced mode patches it here
-from .versioning import content_version
+from .versioning import content_aggregates, version_from
+
+# perfbench's traced mode patches these names here
+from .sources.writers import atomic_overwrite_parquet  # noqa: F401
+from .versioning import content_version  # noqa: F401
 
 MANIFEST_NAME = "_manifest.json"
-#: Seconds a writer waits for another writer's manifest lock before failing.
-LOCK_TIMEOUT_S = 60.0
+#: Name prefix of a registration's staging directory under ``features/``;
+#: Spark's file listing skips ``_``-prefixed directories.
+STAGING_PREFIX = "_staging-"
 
 
 def _utc_now_iso() -> str:
@@ -63,10 +87,12 @@ class _Manifest:
     ``{"seq": <last registration seq>, "versions": [entry, ...]}``.
 
     Reads re-parse the file only when its (mtime_ns, size, inode) changed.
-    Each update re-reads the file under an ``O_EXCL`` lock file beside it,
-    writes a temp file and swaps it in with ``os.replace``: readers see the
-    old document or the new one, never a partial one, and concurrent
-    writers cannot lose each other's updates."""
+    Writers hold an exclusive ``flock`` on a lock file beside it, re-read
+    the document under it, write a temp file and swap it in with
+    ``os.replace``: readers see the old document or the new one, never a
+    partial one, and concurrent writers cannot lose each other's updates.
+    ``flock`` belongs to the open file, so it also excludes threads of
+    one process, and the kernel drops it when its holder dies."""
 
     def __init__(self, path: str) -> None:
         self.path = path
@@ -98,46 +124,36 @@ class _Manifest:
         return parsed
 
     @contextlib.contextmanager
-    def update(self) -> Iterator[dict]:
-        """Yield a private copy of the document, re-read under the writer
-        lock; it is committed if the block changed it and left normally."""
+    def locked(self) -> Iterator[dict]:
+        """Hold the writer lock for the block and yield a private copy of
+        the document, re-read under it; :meth:`commit` publishes a change."""
         with self._locked():
-            current = self._parse()[1]
-            doc = copy.deepcopy(current)
-            yield doc
-            if doc != current:
-                tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-                with open(tmp, "w") as fh:
-                    json.dump(doc, fh, indent=1)
-                    fh.flush()
-                    os.fsync(fh.fileno())
-                os.replace(tmp, self.path)
-                # make the swap itself durable before the caller acts on it
-                # (cleanup drops partition directories next)
-                dir_fd = os.open(os.path.dirname(self.path), os.O_RDONLY)
-                try:
-                    os.fsync(dir_fd)
-                finally:
-                    os.close(dir_fd)
+            yield copy.deepcopy(self._parse()[1])
+
+    def commit(self, doc: dict) -> None:
+        """Swap ``doc`` in as the manifest (call under :meth:`locked`)."""
+        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as fh:
+            json.dump(doc, fh, indent=1)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, self.path)
+        # make the swap itself durable before the caller acts on it
+        # (cleanup drops partition directories next)
+        dir_fd = os.open(os.path.dirname(self.path), os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)
+        finally:
+            os.close(dir_fd)
 
     @contextlib.contextmanager
     def _locked(self) -> Iterator[None]:
-        deadline = time.monotonic() + LOCK_TIMEOUT_S
-        while True:
-            try:
-                os.close(os.open(self.lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-                break
-            except FileExistsError:
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"manifest lock {self.lock_path} held for over {LOCK_TIMEOUT_S:g} s; "
-                        "remove it if no writer is running"
-                    ) from None
-                time.sleep(0.005)
+        fd = os.open(self.lock_path, os.O_CREAT | os.O_RDWR)
         try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
             yield
         finally:
-            os.unlink(self.lock_path)
+            os.close(fd)  # releases the lock
 
 
 def _recency(entry: dict) -> tuple[str, int]:
@@ -194,8 +210,8 @@ class FeatureStore:
     def register_features(
         self, features: DataFrame, metadata: FeatureMetadata, *, enforce_schema: bool = True
     ) -> str:
-        """Validate → content-hash → stamp → write partition → metadata upsert
-        → monitor → cache (reference `:295-353`).
+        """Observed write → version id → validate → commit by rename →
+        metadata upsert → monitor (reference `:295-353`).
 
         Unlike the reference — which inserts whatever columns the frame has
         (`:320-321`, schema effectively trusted) — declared ``features_config``
@@ -204,52 +220,53 @@ class FeatureStore:
         reference's trusting behavior.
 
         Registering content whose version is already in the store is a
-        no-op: it returns that version and writes neither rows nor
-        metadata, so the existing entry (and ``latest_version()``) stays as
-        it was.
+        no-op for the store: the rows are written to a staging directory
+        (the write is what computes the version id), which is then
+        dropped, and the existing entry (and ``latest_version()``) stays
+        as it was.
         """
         if enforce_schema and metadata.features_config:
             self._check_schema(features, metadata)
-        # Register runs SEVERAL separate actions over the same (often
-        # aggregate-shaped) feature lineage — the validator's profile
-        # jobs, the content hash, the partition write. Unpersisted, each
-        # re-computes the extractor from the source scan (guide §5;
-        # measured ~2.5-2.9 s warm for the serving-parity fixture,
-        # dominated by these recomputes). Persist for the register's
-        # duration only — a within-run pin of an intermediate (the
-        # ivf_build pattern), never a cross-run cache — and unpersist in
-        # finally so the store never holds storage memory past the call.
+        # Register runs two actions over the same (often aggregate-shaped)
+        # feature lineage: the observed write and the validator's
+        # distinct/outlier aggregate. Unpersisted, each would re-compute
+        # the extractor from the source scan (guide §5). Persist for the
+        # register's duration only — a within-run pin of an intermediate
+        # (the ivf_build pattern), never a cross-run cache — and unpersist
+        # in finally so the store never holds storage memory past the call.
         # A frame the caller already cached is used as it is and left
         # cached: its storage level is the caller's to manage.
+        staging, staging_fd = self._open_staging()
         owned = features.storageLevel == StorageLevel.NONE
         if owned:
             features = features.persist()
         try:
-            metrics, prof = self.validator.validate(features)
-            version = content_version(features)
-            if self._entry(version) is not None:
-                return version
-
             # one stamp for BOTH the feature rows and the metadata copy
             # below: a backfill's explicit metadata.created_at must also be
             # what the row-level column says, or version_as_of()
             # time-travels to rows that self-describe a different creation
             # time (r9 review).
             created_at = metadata.created_at or _utc_now_iso()
-            stamped = features.withColumn(CREATED_AT_COLUMN, F.lit(created_at))
+            # The observation sits on the unstamped frame with no exchange
+            # above it, so the write's single job also computes the content
+            # hash and the profile's first aggregate.
+            observation = Observation()
+            stamped = features.observe(
+                observation, *profile_aggregates(features), *content_aggregates(features)
+            ).withColumn(CREATED_AT_COLUMN, F.lit(created_at))
             if self.sort_col and self.sort_col in features.columns:
                 # sort within output files so parquet row-group min/max
                 # stats make later user_id point-lookups skip row groups
                 # (the scalable stand-in for the reference's intended
                 # INDEX(user_id))
                 stamped = stamped.sortWithinPartitions(self.sort_col)
-            # The version's own partition directory: concurrent writers of
-            # different versions never share a Spark output path, and a
-            # directory a crashed registration left unlisted is replaced,
-            # not appended to.
-            stamped.write.mode("overwrite").parquet(
-                os.path.join(self.features_path, f"{VERSION_COLUMN}={version}")
-            )
+            data = os.path.join(staging, "data")
+            stamped.write.parquet(data)
+            observed = observation.get
+            version = version_from(observed)
+            if self._entry(version) is not None:
+                return version
+            metrics, prof = self.validator.validate(features, observed)
 
             # stamp a COPY — mutating the caller's object made a REUSED
             # FeatureMetadata carry the first registration's created_at into
@@ -260,15 +277,24 @@ class FeatureStore:
             # An EXPLICITLY pre-set created_at is still honored (backfill /
             # time-travel); registrations with an equal created_at resolve
             # by registration order.
-            import dataclasses
-
             stamped_meta = dataclasses.replace(
                 metadata,
                 feature_version=version,
                 created_at=created_at,
                 data_quality_metrics=metrics,
             )
-            self._upsert_metadata(stamped_meta, prof.row_count)
+            read_schema = T.StructType(
+                stamped.schema.fields + [T.StructField(VERSION_COLUMN, T.StringType())]
+            )
+            with self._manifest.locked() as doc:
+                if any(e[VERSION_COLUMN] == version for e in doc["versions"]):
+                    return version  # a concurrent writer of the same content won
+                target = self._version_dir(version)
+                # an unlisted directory is a crashed registration's leftover
+                shutil.rmtree(target, ignore_errors=True)
+                os.rename(data, target)
+                self._upsert_metadata(doc, stamped_meta, prof.row_count, read_schema)
+                self._manifest.commit(doc)
 
             self.monitor.log_feature_creation(version, prof.row_count, metrics.overall_score)
             # The reference eagerly caches the whole frame at register
@@ -277,8 +303,26 @@ class FeatureStore:
             # from the second access on).
             return version
         finally:
+            shutil.rmtree(staging, ignore_errors=True)
+            os.close(staging_fd)  # after the removal: cleanup skips it until here
             if owned:
                 features.unpersist()
+
+    def _open_staging(self) -> tuple[str, int]:
+        """A new staging directory and the open descriptor holding its
+        ``flock``. Made under the manifest lock, which cleanup's sweep also
+        holds, so the sweep never sees a staging directory before its
+        writer has locked it."""
+        with self._manifest._locked():
+            os.makedirs(self.features_path, exist_ok=True)
+            staging = os.path.join(self.features_path, STAGING_PREFIX + uuid.uuid4().hex)
+            os.mkdir(staging)
+            fd = os.open(staging, os.O_RDONLY)
+            fcntl.flock(fd, fcntl.LOCK_EX)
+        return staging, fd
+
+    def _version_dir(self, version: str) -> str:
+        return os.path.join(self.features_path, f"{VERSION_COLUMN}={version}")
 
     def _check_schema(self, features: DataFrame, metadata: FeatureMetadata) -> None:
         """Declared configs must exist in the frame with the declared dtype."""
@@ -299,15 +343,17 @@ class FeatureStore:
         if problems:
             raise ValueError("feature schema mismatch: " + "; ".join(problems))
 
-    def _upsert_metadata(self, metadata: FeatureMetadata, n_rows: int) -> None:
-        """A5 INSERT OR REPLACE: drop the version's entry, if any, and append
-        the new one with the next registration ``seq`` and its row count."""
-        with self._manifest.update() as doc:
-            doc["seq"] += 1
-            doc["versions"] = [
-                e for e in doc["versions"] if e[VERSION_COLUMN] != metadata.feature_version
-            ]
-            doc["versions"].append({**metadata.to_dict(), "seq": doc["seq"], "n_rows": n_rows})
+    @staticmethod
+    def _upsert_metadata(
+        doc: dict, metadata: FeatureMetadata, n_rows: int, schema: T.StructType
+    ) -> None:
+        """A5 INSERT: append the version's entry to the manifest document
+        with the next registration ``seq``, its row count and the read
+        schema of its directory."""
+        doc["seq"] += 1
+        doc["versions"].append(
+            {**metadata.to_dict(), "seq": doc["seq"], "n_rows": n_rows, "schema": schema.jsonValue()}
+        )
 
     def _entry(self, version: str) -> dict | None:
         return next(
@@ -340,10 +386,11 @@ class FeatureStore:
         use_cache: bool = True,
         as_of: str | None = None,
     ) -> DataFrame:
-        """Partition-pruned version read with optional user filter (reference
-        `:363-416`). Returns a LAZY DataFrame; the B1 version predicate prunes
-        to one partition directory, the B2 IN-list reaches parquet row groups
-        as pushed filters. ``as_of`` time-travels to the version that was
+        """Version read with optional user filter (reference `:363-416`).
+        Returns a LAZY DataFrame, built with no Spark job: B1 reads only the
+        version's partition directory, with the schema its manifest entry
+        records, and the B2 IN-list reaches parquet row groups as pushed
+        filters. ``as_of`` time-travels to the version that was
         latest at that timestamp (mutually exclusive with ``version``)."""
         if as_of is not None:
             if version is not None:
@@ -354,8 +401,14 @@ class FeatureStore:
         version = version or self.latest_version()
         if version is None:
             raise ValueError("feature store is empty — no registered versions")
-        df = self.spark.read.parquet(self.features_path).filter(
-            F.col(VERSION_COLUMN) == version
+        entry = self._entry(version)
+        if entry is None:
+            raise ValueError(f"feature version {version!r} is not in the store")
+        # the manifest's schema spares Spark a footer-reading inference job
+        df = (
+            self.spark.read.schema(T.StructType.fromJson(entry["schema"]))
+            .option("basePath", self.features_path)
+            .parquet(self._version_dir(version))
         )
         if user_ids is not None:
             df = df.filter(F.col("user_id").isin([int(u) for u in user_ids]))
@@ -392,8 +445,6 @@ class FeatureStore:
         merged = cdc.merge_changes(
             base, changes, keys or ["user_id"], op_col=op_col, seq_col=seq_col
         )
-        import dataclasses
-
         meta = metadata or FeatureMetadata(
             description=f"CDC merge into {base_version}"
         )
@@ -546,20 +597,50 @@ class FeatureStore:
 
     # ------------------------------------------------------------------ K6
     def cleanup_old_versions(self, keep_n: int = 5) -> list[str]:
-        """Keep newest N versions (reference `:503-528`). The manifest drops
-        the older entries first; then their partition directories are
-        removed (no data rewrite). A crash in between leaves unlisted
-        directories, never a listed version whose rows are gone."""
-        with self._manifest.update() as doc:
+        """Keep newest N versions (reference `:503-528`). Under the manifest
+        lock, the manifest drops the older entries first; then their
+        partition directories are removed (no data rewrite), and so are
+        orphans: version directories the manifest does not list (a
+        registration that crashed between its rename and its manifest
+        upsert) and staging directories whose writer is gone (no
+        ``flock`` held on them). A crash in between leaves unlisted
+        directories, never a listed version whose rows are gone, and the
+        next cleanup drops them. Returns the dropped listed versions."""
+        with self._manifest.locked() as doc:
             newest_first = sorted(doc["versions"], key=_recency, reverse=True)
             doomed = [e[VERSION_COLUMN] for e in newest_first[keep_n:]]
-            doc["versions"] = [e for e in doc["versions"] if e[VERSION_COLUMN] not in doomed]
-        if not doomed:
-            return []
-        drop_partition_dirs(self.features_path, VERSION_COLUMN, doomed)
+            if doomed:
+                doc["versions"] = newest_first[:keep_n]
+                self._manifest.commit(doc)
+            kept = {e[VERSION_COLUMN] for e in doc["versions"]}
+            on_disk = list_partition_values(self.features_path, VERSION_COLUMN)
+            unlisted = [v for v in on_disk if v not in kept]
+            if unlisted:
+                drop_partition_dirs(self.features_path, VERSION_COLUMN, unlisted)
+            self._drop_dead_staging()
         for v in doomed:
             self.cache.delete(_index_key(v))
         return doomed
+
+    def _drop_dead_staging(self) -> None:
+        """Remove the staging directories no live writer holds locked."""
+        if not os.path.isdir(self.features_path):
+            return
+        for name in os.listdir(self.features_path):
+            if not name.startswith(STAGING_PREFIX):
+                continue
+            path = os.path.join(self.features_path, name)
+            try:
+                fd = os.open(path, os.O_RDONLY)
+            except FileNotFoundError:
+                continue  # its writer just removed it
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                shutil.rmtree(path, ignore_errors=True)
+            except BlockingIOError:
+                pass  # a live writer's
+            finally:
+                os.close(fd)
 
     # ------------------------------------------------------------------ K7
     def get_monitoring_dashboard(self) -> dict[str, Any]:

@@ -16,18 +16,31 @@ a strictly stronger determinism guarantee than the reference's.
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Mapping
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def content_aggregates(df: DataFrame) -> list[Column]:
+    """The two aggregates the digest is made of, ``__hash_sum`` and
+    ``__hash_n``; plain sums, so they also run as observed metrics of a
+    write (``DataFrame.observe``)."""
+    row_hash = F.xxhash64(*[F.col(c) for c in sorted(df.columns)])
+    # sum as decimal(38,0) so 64-bit sums can't overflow long; reduce mod 2^64
+    return [
+        F.sum(row_hash.cast("decimal(38,0)")).alias("__hash_sum"),
+        F.count(F.lit(1)).alias("__hash_n"),
+    ]
+
+
+def version_from(row: Mapping[str, Any]) -> str:
+    """The version id from a result row of :func:`content_aggregates`."""
+    s = int(row["__hash_sum"] or 0) % (1 << 64)
+    return hashlib.md5(f"{s}:{row['__hash_n']}".encode()).hexdigest()
 
 
 def content_version(df: DataFrame) -> str:
     """Deterministic, order-insensitive content hash of a DataFrame."""
-    row_hash = F.xxhash64(*[F.col(c) for c in sorted(df.columns)])
-    # sum as decimal(38,0) so 64-bit sums can't overflow long; reduce mod 2^64
-    agg = df.agg(
-        F.sum(row_hash.cast("decimal(38,0)")).alias("s"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    s = int(agg["s"] or 0) % (1 << 64)
-    return hashlib.md5(f"{s}:{agg['n']}".encode()).hexdigest()
+    return version_from(df.agg(*content_aggregates(df)).collect()[0])

@@ -34,6 +34,29 @@ def jobs_run_by(spark):
     return run
 
 
+@pytest.fixture()
+def edge_frame(spark):
+    """A frame with every value the quality profile must survive: NULL,
+    NaN, ±inf, a decimal and a float column, an all-NULL column, a string
+    column and a duplicated row."""
+    from decimal import Decimal
+
+    inf, nan = float("inf"), float("nan")
+    rows = [
+        (1, 1.5, Decimal("1.25"), 1.0, None, "a"),
+        (2, None, Decimal("-3.50"), 2.5, None, None),
+        (3, nan, None, float("nan"), None, "c"),
+        (4, inf, Decimal("1e6"), 3.0, None, "d"),
+        (5, -inf, Decimal("0.01"), -1.0, None, "e"),
+        (6, 2.0, Decimal("2.00"), None, None, "f"),
+        (7, 1e300, Decimal("2.00"), 4.0, None, "g"),
+        (7, 1e300, Decimal("2.00"), 4.0, None, "g"),
+    ]
+    return spark.createDataFrame(
+        rows, "user_id long, x double, d decimal(12,2), f float, allnull double, s string"
+    )
+
+
 def ts(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)
 

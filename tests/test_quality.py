@@ -141,17 +141,32 @@ def test_approximate_outlier_estimate_tracks_exact(spark):
     assert math.isclose(got, want, abs_tol=max(5, 0.01 * n)), (got, want)
 
 
+def test_approximate_profile_survives_nan(edge_frame):
+    """The grid CDF orders NaN as Spark does, so a NaN in the grid or at a
+    band edge gives a count, not a ValueError."""
+    import math
+
+    exact = profile(edge_frame)
+    approx = profile(edge_frame, approximate=True)
+    assert approx.row_count == exact.row_count
+    assert approx.null_counts == exact.null_counts
+    assert approx.numeric_non_null == exact.numeric_non_null
+    assert set(approx.outlier_counts) == set(exact.outlier_counts)
+    for v in approx.outlier_counts.values():
+        assert isinstance(v, int) and math.isfinite(v)
+
+
 def test_profile_plan_shape(spark):
     """Approximate mode scans the input ONCE (quantile grid + CDF-derived
     outliers, no second pass)."""
     import re
 
-    from ml_feature_store_pipeline_spark.quality import _bounds_frame
+    from ml_feature_store_pipeline_spark.quality import profile_aggregates
 
     df = spark.createDataFrame(
         [(i, float(i % 13), str(i % 3)) for i in range(500)], "id long, v double, s string"
     )
-    approx = _bounds_frame(df, approximate=True, percentile_accuracy=10000)
+    approx = df.agg(*profile_aggregates(df, approximate=True))
     approx.collect()
     plan = approx._jdf.queryExecution().executedPlan().toString()
     plan = plan.split("== Initial Plan ==")[0]
@@ -159,7 +174,7 @@ def test_profile_plan_shape(spark):
 
 
 def test_profile_of_empty_input_runs_only_the_bounds_aggregate(spark, jobs_run_by):
-    from ml_feature_store_pipeline_spark.quality import _bounds_frame
+    from ml_feature_store_pipeline_spark.quality import profile_aggregates
 
     df = spark.createDataFrame([], "user_id long, v double, s string")
     prof, jobs = jobs_run_by(lambda: profile(df))
@@ -169,7 +184,7 @@ def test_profile_of_empty_input_runs_only_the_bounds_aggregate(spark, jobs_run_b
     assert prof.quartiles == {} and prof.outlier_counts == {}
     # NULL quartiles build no violation sum, so no second aggregate runs
     _, bounds_jobs = jobs_run_by(
-        lambda: _bounds_frame(df, approximate=False, percentile_accuracy=10000).collect()
+        lambda: df.agg(*profile_aggregates(df)).collect()
     )
     assert jobs == bounds_jobs
     metrics, _ = DataQualityValidator().validate(df)

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from ml_feature_store_pipeline_spark.config import FeatureMetadata
 from ml_feature_store_pipeline_spark.extractors import UserEventExtractor
+from ml_feature_store_pipeline_spark.quality import DataQualityValidator
 from ml_feature_store_pipeline_spark.store import FeatureStore
 from ml_feature_store_pipeline_spark.versioning import content_version
 
@@ -479,7 +480,20 @@ def test_concurrent_writers_on_one_path_lose_no_registration(spark, tmp_path):
     assert not errors, errors
     listed = {v["feature_version"] for v in FeatureStore(spark, path).list_feature_versions()}
     assert listed == set(results.values()) and len(listed) == len(frames)
-    assert not os.path.exists(os.path.join(path, "_manifest.json.lock"))
+    assert _lock_is_free(os.path.join(path, "_manifest.json.lock"))
+
+
+def _lock_is_free(path: str) -> bool:
+    import fcntl
+
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        return True
+    except BlockingIOError:
+        return False
+    finally:
+        os.close(fd)
 
 
 def test_register_leaves_a_caller_cached_frame_cached(store, features):
@@ -513,12 +527,29 @@ def test_cleanup_commits_the_manifest_before_dropping_partitions(store, features
     assert store.get_features().count() == 5
 
 
-def test_first_serve_of_a_new_version_runs_at_most_two_jobs(jobs_run_by, store, features):
-    # the manifest's n_rows decides index vs point lookup: no size probe
+def test_first_serve_of_a_new_version_runs_at_most_one_job(jobs_run_by, store, features):
+    # the manifest's n_rows decides index vs point lookup (no size probe)
+    # and its schema spares the read a schema-inference job: the collect
     store.register_features(features, _meta())
     row, jobs = jobs_run_by(lambda: store.serve_features(1))
     assert row["total_events"] == 3
-    assert jobs <= 2
+    assert jobs <= 1
+
+
+def test_get_features_builds_with_no_spark_job(jobs_run_by, store, features):
+    v = store.register_features(features, _meta())
+    df, jobs = jobs_run_by(lambda: store.get_features(v, use_cache=False))
+    assert jobs == 0
+    assert df.count() == 5
+    assert {r["feature_version"] for r in df.select("feature_version").collect()} == {v}
+
+
+def test_register_runs_at_most_seven_jobs(jobs_run_by, store, features):
+    # one observed write, then the validator's distinct/outlier aggregate;
+    # a separate validate, content hash and write ran 11
+    v, jobs = jobs_run_by(lambda: store.register_features(features, _meta()))
+    assert store.latest_version() == v
+    assert jobs <= 7
 
 
 def test_serve_of_an_unlisted_version_runs_no_spark_job(jobs_run_by, store, features):
@@ -561,3 +592,133 @@ def test_cleanup_drops_the_index_through_the_backend_delete(spark, tmp_path, fea
     assert store.cleanup_old_versions(keep_n=1) == [v1]
     assert not any(v1 in k for k in store.cache.data)
     assert any(v2 in k for k in store.cache.data)
+
+
+class _Capturing(DataQualityValidator):
+    """Keeps what register's validation returned."""
+
+    def validate(self, df, observed=None):
+        self.result = super().validate(df, observed)
+        return self.result
+
+
+@pytest.mark.parametrize("frame", ["edge", "empty", "ten_thousand"])
+def test_observed_register_equals_the_standalone_profile_and_hash(
+    spark, tmp_path, edge_frame, frame
+):
+    from ml_feature_store_pipeline_spark.quality import profile
+
+    df = {
+        "edge": edge_frame,
+        "empty": edge_frame.limit(0),
+        "ten_thousand": spark.range(10_000).select(
+            F.col("id").alias("user_id"),
+            (F.col("id") % 97).cast("double").alias("x"),
+            F.when(F.col("id") % 7 == 0, None).otherwise(F.col("id") % 13).alias("y"),
+            (F.col("id") % 5).cast("string").alias("s"),
+        ),
+    }[frame]
+    validator = _Capturing()
+    store = FeatureStore(spark, str(tmp_path / "fs"), validator=validator)
+    v = store.register_features(df, _meta())
+    metrics, prof = validator.result
+    want = profile(df)
+    # NaN quartiles compare by their repr: NaN != NaN
+    assert repr(prof) == repr(want)
+    assert metrics == DataQualityValidator().validate(df)[0]
+    assert v == content_version(df)
+    assert store.get_features(v).count() == want.row_count
+
+
+def test_a_writer_killed_holding_the_manifest_lock_blocks_no_one(store, features):
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    hold = (
+        "import sys, time\n"
+        "from ml_feature_store_pipeline_spark.store import _Manifest\n"
+        "with _Manifest(sys.argv[1])._locked():\n"
+        "    print('locked', flush=True)\n"
+        "    time.sleep(600)\n"
+    )
+    manifest = os.path.join(store.path, "_manifest.json")
+    proc = subprocess.Popen(
+        [sys.executable, "-c", hold, manifest], cwd=root, stdout=subprocess.PIPE, text=True
+    )
+    try:
+        assert proc.stdout.readline().strip() == "locked"
+    finally:
+        proc.send_signal(signal.SIGKILL)
+        proc.wait(timeout=60)
+    t0 = time.monotonic()
+    v = store.register_features(features, _meta())
+    assert time.monotonic() - t0 < 30
+    assert store.latest_version() == v
+
+
+def test_cleanup_drops_a_version_directory_a_crash_left_unlisted(store, features, monkeypatch):
+    from ml_feature_store_pipeline_spark.sources.writers import list_partition_values
+
+    v1 = store.register_features(features, _meta("v1"))
+    more = features.withColumn("total_amount", F.col("total_amount") + 1.0)
+
+    def crash(*args, **kwargs):
+        raise OSError("crash before the manifest upsert")
+
+    with monkeypatch.context() as m:
+        m.setattr(FeatureStore, "_upsert_metadata", crash)
+        with pytest.raises(OSError):
+            store.register_features(more, _meta("v2"))
+    assert [v["feature_version"] for v in store.list_feature_versions()] == [v1]
+    assert store.cleanup_old_versions(keep_n=5) == []
+    assert list_partition_values(store.features_path, "feature_version") == [v1]
+    assert store.get_features().count() == 5
+
+
+def test_cleanup_spares_a_live_writers_staging_directory(store, features):
+    v = store.register_features(features, _meta())
+    live, fd = store._open_staging()
+    try:
+        os.mkdir(os.path.join(live, "data"))
+        dead = os.path.join(store.features_path, "_staging-dead")
+        os.mkdir(dead)
+        store.cleanup_old_versions(keep_n=5)
+        assert os.path.isdir(os.path.join(live, "data"))
+        assert not os.path.exists(dead)
+    finally:
+        os.close(fd)
+    store.cleanup_old_versions(keep_n=5)
+    assert sorted(os.listdir(store.features_path)) == [f"feature_version={v}"]
+
+
+def test_two_writers_of_the_same_new_content_end_with_one_directory(spark, tmp_path, features):
+    import threading
+
+    path = str(tmp_path / "shared")
+    features.persist()
+    results: list[str] = []
+    errors: list[BaseException] = []
+
+    def register() -> None:
+        try:
+            results.append(FeatureStore(spark, path).register_features(features, _meta()))
+        except BaseException as e:  # noqa: BLE001 - reported by the assertion below
+            errors.append(e)
+
+    try:
+        threads = [threading.Thread(target=register) for _ in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        features.unpersist()
+    assert not errors, errors
+    store = FeatureStore(spark, path)
+    assert len(results) == 2 and results[0] == results[1] == store.latest_version()
+    assert [v["feature_version"] for v in store.list_feature_versions()] == [results[0]]
+    assert sorted(os.listdir(store.features_path)) == [f"feature_version={results[0]}"]
+    assert store.get_features().count() == 5
