@@ -2335,7 +2335,8 @@ def _install_semantic_dedup_oracle() -> None:
     pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b
       FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE {cos_ab} >= 0.4
+      -- DuckDB, like Spark, compares NaN above every number; a NaN cosine never pairs
+      WHERE {cos_ab} >= 0.4 AND NOT isnan({cos_ab})
     ),
     edges AS (SELECT id_a AS src, id_b AS dst FROM pairs UNION SELECT id_b, id_a FROM pairs),
     nodes AS (SELECT DISTINCT src AS node FROM edges),

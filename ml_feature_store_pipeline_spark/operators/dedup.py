@@ -350,10 +350,12 @@ def ngram_jaccard_pairs(
     max_posting_size: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard over distinct word n-gram sets, computed via an
-    inverted-index self-join: explode distinct shingles, equi-join on
-    shingle, count intersections, then |A∪B| = |A|+|B|−|A∩B|.
+    inverted index: explode distinct shingles, group the doc ids of each
+    shingle into a posting list, expand each list into its doc pairs and
+    count them (|A∩B|), then |A∪B| = |A|+|B|−|A∩B|.
 
-    Only docs that SHARE a shingle ever meet — no cross product.
+    Only docs that SHARE a shingle ever meet — no cross product and no
+    self-join.
 
     ``max_doc_frequency`` is the stop-shingle cut that makes this safe at
     corpus scale: a shingle appearing in d docs expands to d·(d−1)/2 pairs,
@@ -364,6 +366,15 @@ def ngram_jaccard_pairs(
     stop-shingle semantics — mirrored in the SQL oracle). The per-posting
     pair expansion is then bounded by cap²/2. ``None`` disables the cut
     (oracle comparison on tiny corpora only).
+
+    Plan shape: the corpus is tokenized and shingled ONCE. The exploded
+    (id, shingle) rows go through up to three shuffles, none of which
+    carries text: on shingle for the document-frequency count window, on
+    id for the set-size count window, and on shingle again for the
+    posting lists. Each posting entry is ``struct(id, set_size)``, so both
+    sizes ride into the pair stream and the pair count groups by
+    ``(id_a, id_b, n_a, n_b)`` — one more shuffle, and no size join that
+    would re-derive the shingle subtree.
 
     ``pair_partitions`` sets the partition count of the pair-count
     aggregate (default 8× ``parallelism`` when given). The pair stream is
@@ -390,78 +401,72 @@ def ngram_jaccard_pairs(
     it can only drop, never fabricate). Leave ``None`` (exact) unless the
     corpus is degenerate-dense; the DF cut alone handles boilerplate.
     """
+    from pyspark.sql.window import Window
+
     if parallelism:
         df = df.repartition(parallelism)
     sh = df.select(
         F.col(id_col), F.explode(F.array_distinct(word_shingles(F.col(text_col), shingle_n))).alias("sh")
     )
     if max_doc_frequency is not None:
-        # Stop-shingle cut as a count-over-window on the SAME exchange the
-        # posting aggregation needs: partitionBy(sh) shuffles the exploded
-        # shingles once, the per-shingle document frequency is a full-frame
-        # count over that partitioning, and the groupBy below reuses the
-        # exchange (no second shuffle). The former two-pass form (separate
-        # groupBy-count + broadcast anti-join) recomputed the whole
-        # tokenize→shingle→explode subtree a second time — ~2× the CPU of
-        # the cut itself. WindowExec spills per-group buffers to disk, so a
-        # degenerate boilerplate shingle stays memory-bounded here and is
-        # dropped before any collect_list sees it.
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("sh")
+        # Stop-shingle cut as a count window over partitionBy(sh):
+        # WindowExec spills per-group buffers to disk, so a degenerate
+        # boilerplate shingle stays memory-bounded here and is dropped
+        # before any collect_list sees it.
         sh = (
-            sh.withColumn("__df", F.count(F.lit(1)).over(w))
+            sh.withColumn("__df", F.count(F.lit(1)).over(Window.partitionBy("sh")))
             .filter(F.col("__df") <= max_doc_frequency)
             .drop("__df")
         )
-    # inverted index: shingle → sorted doc list → local pair expansion →
-    # count co-occurrences. One shuffle on shingle; no self-join (which
-    # would recompute the shingling) and skew-cappable per posting list.
-    # Lists include singletons so set sizes derive from the SAME aggregate
-    # (one fewer pass over the shingle subtree); list length is bounded by
-    # the df cut, so collect_list never sees a stop-shingle posting.
-    posts_all = sh.groupBy("sh").agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-    sizes = (
-        posts_all.select(F.explode("ids").alias(id_col))
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("set_size"))
+    # set size = the doc's shingle count after the cut; collect_list skips
+    # NULL ids, so they take no part in postings or sizes
+    sized = sh.filter(F.col(id_col).isNotNull()).withColumn(
+        "n", F.count(F.lit(1)).over(Window.partitionBy(id_col))
     )
-    postings = posts_all.filter(F.size("ids") > 1)
+    postings = (
+        sized.groupBy("sh")
+        .agg(F.sort_array(F.collect_list(F.struct(F.col(id_col).alias("id"), "n"))).alias("ids"))
+        .filter(F.size("ids") > 1)
+    )
     if max_posting_size is not None:
         postings = postings.withColumn("ids", F.slice("ids", 1, max_posting_size))
     # pair expansion via two generators (posexplode + explode of a slice):
     # plain expressions stay in whole-stage codegen, where the equivalent
     # nested-transform lambda form is interpreted (~15% slower end-to-end)
-    inter = (
-        postings.select(F.posexplode("ids").alias("i", "id_a"), F.col("ids"))
+    pairs = (
+        postings.select(F.posexplode("ids").alias("i", "a"), F.col("ids"))
         .select(
-            "id_a",
+            "a",
             F.explode(
                 F.slice(
                     F.col("ids"),
                     F.col("i") + 2,
                     F.greatest(F.size("ids") - F.col("i") - 1, F.lit(0)),
                 )
-            ).alias("id_b"),
+            ).alias("b"),
+        )
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.col("a.n").alias("n_a"),
+            F.col("b.n").alias("n_b"),
         )
     )
     if pair_partitions is None and parallelism:
         pair_partitions = parallelism * 8
     if pair_partitions:
-        # pre-partition on the aggregate's own keys: the groupBy reuses
-        # this exchange (ENSURE_REQUIREMENTS satisfied), so the partition
-        # count changes but the shuffle count does not
-        inter = inter.repartition(pair_partitions, "id_a", "id_b")
-    inter = inter.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("inter"))
-    sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
+        # pre-partition on a subset of the aggregate's keys: the groupBy
+        # reuses this exchange (ENSURE_REQUIREMENTS satisfied), so the
+        # partition count changes but the shuffle count does not
+        pairs = pairs.repartition(pair_partitions, "id_a", "id_b")
     out = (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .withColumn(
-            "jaccard", F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
+        pairs.groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("inter"))
+        .select(
+            "id_a",
+            "id_b",
+            (F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))).alias("jaccard"),
         )
-        .select("id_a", "id_b", "jaccard")
     )
     return out.filter(F.col("jaccard") >= threshold) if threshold > 0 else out
 
@@ -788,13 +793,12 @@ def connected_components(
     return labels.select(F.col("node"), F.col("comp").alias("component"))
 
 
-def _connected_components_local(rows: list, node_type, spark) -> DataFrame:
-    """Union-find over a SMALL collected list of (src, dst) pair rows
-    (size-gated by the caller; either direction, duplicates allowed):
-    same (node, min-reachable-id) output as the distributed loop,
-    resolved after union by mapping every set to its minimum member."""
-    from pyspark.sql import types as T
-
+def union_find_components(pairs) -> dict:
+    """Union-find over an iterable of (a, b) pairs (either direction,
+    duplicates allowed): every node that appears in a pair → the minimum
+    member of its connected component. Pure Python, for pair graphs small
+    enough to hold on one process (a collected pair set on the driver, or
+    one cell's pairs inside a grouped map)."""
     parent: dict = {}
 
     def find(x):
@@ -805,7 +809,7 @@ def _connected_components_local(rows: list, node_type, spark) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in rows:
+    for a, b in pairs:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -816,11 +820,23 @@ def _connected_components_local(rows: list, node_type, spark) -> DataFrame:
         root = find(n)
         cur = comp_min.get(root)
         comp_min[root] = n if cur is None or n < cur else cur
+    return {n: comp_min[find(n)] for n in parent}
+
+
+def _connected_components_local(rows: list, node_type, spark) -> DataFrame:
+    """:func:`union_find_components` over a SMALL collected list of
+    (src, dst) pair rows (size-gated by the caller): same (node,
+    min-reachable-id) output as the distributed loop. The frame is built
+    on the driver, so Spark has no size statistics for it; it is marked
+    for broadcast (it holds at most ``local_threshold`` pairs' nodes), so
+    joins against it — :func:`dedup_survivors`' loser anti-join above
+    all — never shuffle the other side."""
+    from pyspark.sql import types as T
+
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("component", node_type)]
     )
-    data = [(n, comp_min[find(n)]) for n in parent]
-    return spark.createDataFrame(data, schema)
+    return F.broadcast(spark.createDataFrame(list(union_find_components(rows).items()), schema))
 
 
 def dedup_survivors(
@@ -833,7 +849,9 @@ def dedup_survivors(
 ) -> DataFrame:
     """The end product of near-dup detection: docs minus all but the
     minimum-id member of each duplicate cluster. Docs in no pair survive
-    untouched (anti-join against the non-survivor set — never scans text)."""
+    untouched (anti-join against the non-survivor ids; when the pair graph
+    was solved on the driver that set is broadcast, so the docs and their
+    text are never shuffled)."""
     cc = connected_components(pairs, id_a=id_a, id_b=id_b)
     losers = cc.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias(id_col)

@@ -720,6 +720,20 @@ def cosine_topk_blas(
 # ---------------------------------------------------------------------------
 
 
+def _centroid_pick(corpus: DataFrame, id_col: str, vec_col: str, n_cells: int) -> list:
+    """The vectors :func:`deterministic_centroids` picks, in cell order:
+    one ``orderBy.limit`` collect."""
+    from .sketches import hash_fraction
+
+    rows = (
+        corpus.select(F.col(vec_col), hash_fraction(F.col(id_col)).alias("__h"), F.col(id_col))
+        .orderBy("__h", id_col)
+        .limit(n_cells)
+        .collect()
+    )
+    return [r[0] for r in rows]
+
+
 def deterministic_centroids(
     corpus: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding", n_cells: int = 16
 ) -> DataFrame:
@@ -727,24 +741,23 @@ def deterministic_centroids(
     ``n_cells`` corpus vectors whose md5 hash fraction of the id is
     smallest (a deterministic uniform sample — md5 of the id is a fixed
     pseudo-random permutation, so this is k random seeds that every
-    engine, run, and partitioning agrees on). Returns (cell, center).
+    engine, run, and partitioning agrees on). Returns (cell, center),
+    built on the driver from one ``orderBy.limit`` collect.
 
     Use this instead of a KMeans fit when the pipeline must be replayable
     bit-for-bit (the DuckDB oracle re-derives the same centroids); pass a
     KMeans-fit table (e.g. :func:`ivf_build`'s centroids) when cluster
     quality matters more than cross-engine determinism."""
-    from .sketches import hash_fraction
+    from pyspark.sql import types as T
 
-    ranked = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .withColumn("__h", hash_fraction(F.col(id_col)))
-        .orderBy("__h", id_col)
-        .limit(n_cells)
+    schema = T.StructType(
+        [
+            T.StructField("cell", T.IntegerType()),
+            T.StructField("center", corpus.schema[vec_col].dataType),
+        ]
     )
-    w = Window.orderBy("__h", id_col)
-    return ranked.withColumn("cell", (F.row_number().over(w) - 1).cast("int")).select(
-        "cell", F.col(vec_col).alias("center")
-    )
+    centers = _centroid_pick(corpus, id_col, vec_col, n_cells)
+    return corpus.sparkSession.createDataFrame(list(enumerate(centers)), schema)
 
 
 def auto_n_cells(n_rows: int, target_cell_size: int) -> int:
@@ -758,6 +771,60 @@ def auto_n_cells(n_rows: int, target_cell_size: int) -> int:
     if target_cell_size <= 0:
         raise ValueError("target_cell_size must be positive")
     return max(1, -(-n_rows // target_cell_size))
+
+
+def _vector_side(vecs, usable):
+    """Vectors as numpy operands of :func:`_cosine_fold`: the transposed
+    (dim × rows) float64 matrix, zero-padded to the longest vector, each
+    row's L2 norm, and each row's length — −1 where Spark's cosine is NULL
+    against everything (a NULL vector, or one with a NULL element)."""
+    import numpy as np
+
+    lens = np.array([len(v) if ok else -1 for v, ok in zip(vecs, usable)], dtype=np.int64)
+    mat = np.zeros((max(int(lens.max(initial=0)), 0), len(lens)))
+    for i, v in enumerate(vecs):
+        if lens[i] > 0:
+            mat[: lens[i], i] = v
+    sq = np.zeros(len(lens))
+    for row in mat:  # l2_norm's fold order
+        sq = sq + row * row
+    return mat, np.sqrt(sq), lens
+
+
+def _cosine_fold(a, b):
+    """Cosine of every ``a`` row against every ``b`` row (operands from
+    :func:`_vector_side`), and where it is NULL. The dot product is a left
+    fold over the dimensions, the same IEEE operation order as
+    :func:`..functions.cosine_similarity`, so every value — and hence every
+    comparison with a threshold — is bit-identical to Spark's. NULL follows
+    Spark too: an unusable vector, unequal lengths (``zip_with`` pads with
+    NULL), or a zero norm product (division by zero)."""
+    import numpy as np
+
+    (am, an, al), (bm, bn, bl) = a, b
+    acc = np.zeros((am.shape[1], bm.shape[1]))
+    for x, y in zip(am, bm):
+        acc = acc + x[:, None] * y[None, :]
+    den = an[:, None] * bn[None, :]
+    null = (al[:, None] != bl[None, :]) | (al[:, None] < 0) | (den == 0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return acc / den, null
+
+
+def _rows(side, idx):
+    mat, norm, lens = side
+    return mat[:, idx], norm[idx], lens[idx]
+
+
+def _least_central_key(cos: float, null: bool, vid):
+    """SemDeDup's keep order within a duplicate group — the smallest key
+    survives: NULL centroid cosine first, then numbers ascending (least
+    central first), NaN last, then the id."""
+    if null:
+        return (0, 0.0, vid)
+    if cos != cos:
+        return (2, 0.0, vid)
+    return (1, cos, vid)
 
 
 def semantic_dedup(
@@ -776,15 +843,18 @@ def semantic_dedup(
     ``threshold``, connect them into duplicate groups, and keep ONE doc
     per group — the member LEAST similar to its centroid (the paper's
     keep-low-centroid-similarity rule: survivors preserve diversity), id
-    tiebreak. Returns the surviving (id, cell) rows. The grouping and the
-    keep rule are :func:`.dedup.dedup_survivors_by_priority` over the
-    in-cell pairs, with "least cosine to the centroid" as the priority.
+    tiebreak. Returns the surviving (id, cell) rows. A vector whose
+    cosine is NaN (a NaN component) never pairs.
 
-    Scale shape: centroids broadcast (n_cells×dim floats), so assignment
-    is a map-side argmax over one corpus scan; the pairwise stage is
-    *within cells only* — a self-join co-partitioned on cell, the
-    O((N/k)²) the paper accepts. Cross-cell dups are missed by
-    construction (the SemDeDup trade).
+    Scale shape: the centroids are collected to the driver (n_cells×dim
+    floats) and travel with the tasks. Assignment is a map-side
+    ``mapInPandas`` over one corpus scan: the highest centroid cosine
+    wins (NaN above every number, NULL below, ties to the lower cell).
+    Then ONE grouped map per cell (``groupBy(cell).applyInPandas``, one
+    exchange) runs numpy pairwise cosine, union-find and the keep rule,
+    so a whole cell is held by one Python worker — the O((N/k)²) the
+    paper accepts, computed in row blocks of ≤ ~32 MB. Cross-cell dups
+    are missed by construction (the SemDeDup trade).
 
     ``n_cells=None`` (default) AUTO-TUNES the knob from one cheap
     column-pruned count: :func:`auto_n_cells` picks ``ceil(N /
@@ -807,69 +877,98 @@ def semantic_dedup(
     the pairwise cost stays bounded by ``max_cell_size²`` per subcell.
     ``None`` (default) disables the guard — required for the exact
     oracle, safe whenever ``n_cells`` is sized to the corpus."""
-    from .dedup import dedup_survivors_by_priority
+    import numpy as np
+    import pandas as pd
+
+    from .dedup import union_find_components
     from .sketches import hash_fraction
 
+    types = {f.name: f.dataType.simpleString() for f in corpus.schema.fields}
     if centroids is None:
         if n_cells is None:
-            n_cells = auto_n_cells(
-                corpus.select(id_col).count(), target_cell_size
-            )
-        centroids = deterministic_centroids(
-            corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells
-        )
-    cw = Window.partitionBy(id_col).orderBy(F.desc("__cos"), F.asc("cell"))
-    assigned = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .crossJoin(F.broadcast(centroids))
-        .withColumn("__cos", cosine_similarity(F.col(vec_col), F.col("center")))
-        .withColumn("__r", F.row_number().over(cw))
-        .filter(F.col("__r") == 1)
-        .select(F.col(id_col), F.col(vec_col), "cell", F.col("__cos").alias("cos_c"))
-    )
-    # the self-join below and the survivor pass both consume `assigned`;
-    # a LAZY local checkpoint computes the assignment once and shares it
-    # (without it, each branch re-ran the crossJoin+window — measured 2×
-    # the assignment cost at sf0.1)
-    assigned = assigned.localCheckpoint(eager=False)
-    if max_cell_size is not None:
-        # subdivide oversized cells: subcell = md5-uniform of the id scaled
-        # by the cell's subdivision count (1 for cells within the cap)
-        counts = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("__cn"))
-        n_sub = F.ceil(F.col("__cn") / F.lit(max_cell_size)).cast("long")
-        paired_src = (
-            assigned.join(F.broadcast(counts.select("cell", n_sub.alias("__nsub"))), "cell")
-            .withColumn(
-                "__subcell",
-                (hash_fraction(F.col(id_col)) * F.col("__nsub")).cast("long"),
-            )
-        )
-        join_keys = ["cell", "__subcell"]
+            n_cells = auto_n_cells(corpus.select(id_col).count(), target_cell_size)
+        centers = _centroid_pick(corpus, id_col, vec_col, n_cells)
+        cells, cell_type = list(range(len(centers))), "int"
     else:
-        paired_src = assigned
-        join_keys = ["cell"]
-    a = paired_src.select(
-        F.col(id_col).alias("id_a"), *join_keys, F.col(vec_col).alias("__va")
+        rows = sorted(centroids.select("cell", "center").collect(), key=lambda r: r[0])
+        cells, centers = [r[0] for r in rows], [r[1] for r in rows]
+        cell_type = centroids.schema["cell"].dataType.simpleString()
+    out_schema = f"`{id_col}` {types[id_col]}, cell {cell_type}"
+    if not centers:
+        return corpus.sparkSession.createDataFrame([], out_schema)
+    center_side = _vector_side(centers, [c is not None and None not in c for c in centers])
+    cell_pos = {c: i for i, c in enumerate(cells)}
+    cell_arr = np.asarray(cells)
+    # rows × cells cosine blocks of ≤ ~32 MB
+    chunk = max(1, (4 << 20) // len(centers))
+
+    def assign(batches):
+        for pdf in batches:
+            side = _vector_side(pdf[vec_col], pdf["__ok"])
+            pick = np.empty(len(pdf), dtype=np.int64)
+            for lo in range(0, len(pdf), chunk):
+                cos, null = _cosine_fold(_rows(side, slice(lo, lo + chunk)), center_side)
+                # desc(cos), asc(cell): NaN ranks above every number, NULL
+                # below; argmax takes the first (lowest-cell) winner
+                rank = np.where(null, 0, np.where(np.isnan(cos), 2, 1))
+                best = rank.max(axis=1, keepdims=True)
+                num = np.where(rank == 1, cos, -np.inf)
+                top = num.max(axis=1, keepdims=True)
+                win = (rank == best) & ((best != 1) | (num == top))
+                pick[lo : lo + chunk] = win.argmax(axis=1)
+            yield pdf.assign(cell=cell_arr[pick])
+
+    def dedup_cell(pdf):
+        n = len(pdf)
+        side = _vector_side(pdf[vec_col], pdf["__ok"])
+        ci = cell_pos[pdf["cell"].iloc[0]]
+        cos_c, null_c = _cosine_fold(side, _rows(center_side, [ci]))
+        if max_cell_size is not None:
+            # subcell = md5-uniform of the id scaled by the cell's
+            # subdivision count (1 for cells within the cap)
+            sub = (pdf["__h"].to_numpy() * math.ceil(n / max_cell_size)).astype(np.int64)
+            order = np.argsort(sub, kind="stable")
+            groups = np.split(order, np.flatnonzero(np.diff(sub[order])) + 1)
+        else:
+            groups = [np.arange(n)]
+        pairs = []
+        for g in groups:
+            gside = _rows(side, g)
+            block = max(1, (4 << 20) // len(g))
+            for lo in range(0, len(g), block):
+                cos, null = _cosine_fold(_rows(gside, slice(lo, lo + block)), gside)
+                # NaN >= threshold is False: a NaN vector never pairs
+                hit = (cos >= threshold) & ~null
+                hit &= np.arange(lo, lo + len(cos))[:, None] < np.arange(len(g))[None, :]
+                i, j = np.nonzero(hit)
+                pairs.extend(zip(g[i + lo].tolist(), g[j].tolist()))
+        ids = pdf[id_col].tolist()
+        comp_of = union_find_components(pairs)
+        keeper: dict = {}
+        for node, comp in comp_of.items():
+            key = _least_central_key(float(cos_c[node, 0]), bool(null_c[node, 0]), ids[node])
+            if comp not in keeper or key < keeper[comp][0]:
+                keeper[comp] = (key, node)
+        keep = [i for i in range(n) if i not in comp_of or keeper[comp_of[i]][1] == i]
+        return pd.DataFrame({id_col: pdf[id_col].iloc[keep], "cell": pdf["cell"].iloc[keep]})
+
+    vec = F.col(vec_col)
+    extra = [hash_fraction(F.col(id_col)).alias("__h")] if max_cell_size is not None else []
+    prepared = corpus.select(
+        F.col(id_col),
+        vec,
+        F.coalesce(F.forall(vec, lambda x: x.isNotNull()), F.lit(False)).alias("__ok"),
+        *extra,
     )
-    b = paired_src.select(
-        F.col(id_col).alias("id_b"), *join_keys, F.col(vec_col).alias("__vb")
+    assign_schema = ", ".join(
+        [f"`{id_col}` {types[id_col]}", f"`{vec_col}` {types[vec_col]}", "__ok boolean"]
+        + (["__h double"] if extra else [])
+        + [f"cell {cell_type}"]
     )
-    pairs = (
-        a.join(b, join_keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cosine_similarity(F.col("__va"), F.col("__vb")) >= threshold)
-        .select("id_a", "id_b")
-    )
-    # keep-least-central as a highest-wins priority with the exact
-    # ``asc(cos_c)`` order: the rank puts NULL first and NaN last (Spark
-    # sorts NaN above every number, and a NaN vector pairs with its whole
-    # cell), and ``-cos_c`` orders the numbers between
-    cos_c = F.col("cos_c")
-    least_central = F.struct(
-        F.when(cos_c.isNull(), 2).when(F.isnan(cos_c), 0).otherwise(1), -cos_c
-    )
-    return dedup_survivors_by_priority(assigned, pairs, id_col, least_central).select(
-        id_col, "cell"
+    return (
+        prepared.mapInPandas(assign, assign_schema)
+        .groupBy("cell")
+        .applyInPandas(dedup_cell, out_schema)
     )
 
 

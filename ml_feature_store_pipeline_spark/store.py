@@ -391,7 +391,10 @@ class FeatureStore:
         version's partition directory, with the schema its manifest entry
         records, and the B2 IN-list reaches parquet row groups as pushed
         filters. ``as_of`` time-travels to the version that was
-        latest at that timestamp (mutually exclusive with ``version``)."""
+        latest at that timestamp (mutually exclusive with ``version``).
+        ``use_cache`` is ignored: the read is always this lazy scan, and
+        the serving index lives in :meth:`serve_features`. The parameter
+        stays for callers that pass it."""
         if as_of is not None:
             if version is not None:
                 raise ValueError("pass either version or as_of, not both")
@@ -439,7 +442,7 @@ class FeatureStore:
         base_version = base_version or self.latest_version()
         if base_version is None:
             raise ValueError("feature store is empty — nothing to merge into")
-        base = self.get_features(version=base_version, use_cache=False).drop(
+        base = self.get_features(version=base_version).drop(
             VERSION_COLUMN, CREATED_AT_COLUMN
         )
         merged = cdc.merge_changes(
@@ -470,10 +473,10 @@ class FeatureStore:
         replication feed between the two snapshots."""
         from .operators import cdc
 
-        old = self.get_features(version=old_version, use_cache=False).drop(
+        old = self.get_features(version=old_version).drop(
             VERSION_COLUMN, CREATED_AT_COLUMN
         )
-        new = self.get_features(version=new_version, use_cache=False).drop(
+        new = self.get_features(version=new_version).drop(
             VERSION_COLUMN, CREATED_AT_COLUMN
         )
         return cdc.diff_snapshots(old, new, keys or ["user_id"])
@@ -507,11 +510,9 @@ class FeatureStore:
         if entry is None:
             return {}
         if entry["n_rows"] > self.max_serving_index_rows:  # pushed-filter point lookup
-            rows = self.get_features(
-                version=version, user_ids=[int(user_id)], use_cache=False
-            ).collect()
+            rows = self.get_features(version=version, user_ids=[int(user_id)]).collect()
             return self._serving_dict(rows[0]) if rows else {}
-        rows = self.get_features(version=version, use_cache=False).collect()
+        rows = self.get_features(version=version).collect()
         index = {r["user_id"]: self._serving_dict(r) for r in rows}
         self.cache.set(key, index, ttl=self.cache_ttl)
         return index.get(int(user_id), {})
@@ -548,7 +549,7 @@ class FeatureStore:
         version = version or self.latest_version()
         if version is None:
             return {"version": None, "checked": 0, "mismatches": []}
-        offline = self.get_features(version=version, use_cache=False)
+        offline = self.get_features(version=version)
         sample = (
             offline.select("user_id")
             .distinct()

@@ -508,6 +508,64 @@ def test_ngram_posting_cap_bounds_pairs_and_keeps_links(spark):
         assert r["jaccard"] <= ex[(r["id_a"], r["id_b"])] + 1e-9
 
 
+def test_ngram_jaccard_pairs_shingles_once(spark, jobs_run_by):
+    """The set sizes ride in the postings, so the corpus is shingled once
+    and no size join re-derives it: at most 5 jobs. The result equals a
+    Python recomputation with the same DF cut and posting cap."""
+    from itertools import combinations
+
+    from ml_feature_store_pipeline_spark.operators.dedup import ngram_jaccard_pairs
+
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    texts = {i: " ".join(words[(i * 3 + k * k) % 10] for k in range(6)) for i in range(24)}
+    texts[30] = texts[31] = texts[32] = texts[33] = "boiler plate footer here"
+    # persisted, as a curation chain hands over each stage's output
+    docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string").persist()
+    docs.count()
+    max_df, cap = 3, 2
+
+    def shingles(t):
+        toks = t.split()
+        return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+    postings: dict = {}
+    for i, t in texts.items():
+        for s in shingles(t):
+            postings.setdefault(s, []).append(i)
+    kept = {s: sorted(ids) for s, ids in postings.items() if len(ids) <= max_df}
+    assert len(kept) < len(postings)  # the cut removes at least one shingle
+    assert any(len(ids) > cap for ids in kept.values())  # and the cap bites
+    size = {i: sum(i in ids for ids in kept.values()) for i in texts}
+    inter: dict = {}
+    for ids in kept.values():
+        for pair in combinations(ids[:cap], 2):
+            inter[pair] = inter.get(pair, 0) + 1
+    want = {(a, b): n / (size[a] + size[b] - n) for (a, b), n in inter.items()}
+
+    rows, jobs = jobs_run_by(
+        lambda: ngram_jaccard_pairs(
+            docs, "doc_id", "text", max_doc_frequency=max_df, max_posting_size=cap
+        ).collect()
+    )
+    docs.unpersist()
+    assert {(r["id_a"], r["id_b"]): r["jaccard"] for r in rows} == want
+    assert jobs <= 5, jobs
+
+
+def test_dedup_survivors_small_graph_broadcasts_losers(spark):
+    """The union-find result is built on the driver, which leaves Spark no
+    size statistics; it is marked for broadcast, so the loser anti-join
+    never sort-merge-shuffles the documents and their text."""
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in range(10)], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id_a long, id_b long")
+    kept = dedup.dedup_survivors(docs, pairs, "doc_id")
+    assert kept.count() == 7
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" in plan, plan
+
+
 def test_dedup_survivors_by_priority_keeps_best_member(spark):
     """r7: priority survivors — highest priority wins each cluster, ties
     break to min id, unpaired docs survive untouched, and min-id survivors

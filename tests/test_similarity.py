@@ -195,18 +195,15 @@ def test_semantic_dedup_keeps_least_central_member(spark, jobs_run_by):
     )
     out = sorted(r["vec_id"] for r in got)
     assert out == [1, 2]  # id 0 deduped away; survivor is the less-central id 1
-    # the keep rule is dedup_survivors_by_priority and the small pair graph
-    # goes straight into union-find (a separate membership join, window and
-    # loner union over a distinct edge set took 17 jobs)
-    assert jobs <= 13, jobs
+    # one collect of the centroids, then one exchange into the grouped map
+    # that pairs, clusters and keeps
+    assert jobs <= 3, jobs
 
 
 def test_semantic_dedup_nan_centroid_cosine_never_wins(spark):
-    """A vector with a NaN component has a NaN centroid cosine and, since
-    Spark compares NaN above every number, pairs with its whole cell. Under
-    the keep-least-central order (ascending cosine) NaN sorts LAST, so the
-    finite least-central member survives — a plain ``-cos_c`` priority
-    would rank NaN first and keep id 2."""
+    """A vector with a NaN component has NaN cosine to everything, so it
+    never pairs: it survives alone, and its finite cellmates dedup among
+    themselves (the less central id 1 survives)."""
     from ml_feature_store_pipeline_spark.operators.similarity import semantic_dedup
 
     emb = spark.createDataFrame(
@@ -216,8 +213,94 @@ def test_semantic_dedup_nan_centroid_cosine_never_wins(spark):
     cent = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell int, center array<double>"
     )
-    out = [r["vec_id"] for r in semantic_dedup(emb, threshold=0.9, centroids=cent).collect()]
-    assert out == [1]
+    out = sorted(
+        (r["vec_id"], r["cell"])
+        for r in semantic_dedup(emb, threshold=0.9, centroids=cent).collect()
+    )
+    # NaN outranks every number in the centroid pick: id 2 joins cell 0
+    assert out == [(1, 0), (2, 0)]
+
+
+def test_semantic_dedup_nan_vector_survives_alone(spark):
+    """A NaN vector among near-identical finite cellmates: the finite ones
+    collapse to their least central member, the NaN one is kept apart."""
+    from ml_feature_store_pipeline_spark.operators.similarity import semantic_dedup
+
+    emb = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0]),
+            (1, [1.0, 0.05, 0.0]),
+            (2, [1.0, 0.0, 0.1]),
+            (3, [1.0, float("nan"), 0.0]),
+            (4, [0.0, 0.0, 1.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    cent = spark.createDataFrame([(7, [1.0, 0.0, 0.0])], "cell int, center array<double>")
+    out = sorted(r["vec_id"] for r in semantic_dedup(emb, threshold=0.9, centroids=cent).collect())
+    assert out == [2, 3, 4]
+
+
+@pytest.mark.parametrize("max_cell_size", [None, 6])
+def test_semantic_dedup_equals_numpy_recomputation(spark, max_cell_size):
+    """The grouped map against a plain numpy SemDeDup: argmax-cosine cells
+    over a ``centroids=`` frame with non-positional cell ids, md5
+    subcells of ``ceil(n / max_cell_size)`` per cell, in-(sub)cell pairs at
+    cosine >= threshold, their connected components, and the least central
+    member (id tiebreak) kept per component."""
+    import hashlib
+    import math
+
+    from ml_feature_store_pipeline_spark.operators.similarity import semantic_dedup
+
+    rng = np.random.default_rng(7)
+    base = rng.standard_normal((40, 4))
+    vecs = np.vstack([base, base[:15] + 0.01 * rng.standard_normal((15, 4))])
+    ids = np.arange(len(vecs)) * 3 + 1
+    cells = np.array([9, 2, 5])
+    centers = vecs[[0, 7, 21]] + 0.1
+    emb = spark.createDataFrame(
+        [(int(i), v.tolist()) for i, v in zip(ids, vecs)], "vec_id long, embedding array<double>"
+    )
+    cent = spark.createDataFrame(
+        [(int(c), v.tolist()) for c, v in zip(cells, centers)], "cell int, center array<double>"
+    )
+    threshold = 0.95
+
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    cu = centers / np.linalg.norm(centers, axis=1, keepdims=True)
+    cos_c = unit @ cu.T
+    cell = cells[cos_c.argmax(axis=1)]
+    centrality = cos_c.max(axis=1)
+    sub = np.zeros(len(ids), dtype=int)
+    if max_cell_size is not None:
+        for c in cells:
+            n_sub = math.ceil((cell == c).sum() / max_cell_size)
+            for k in np.flatnonzero(cell == c):
+                h = int(hashlib.md5(str(ids[k]).encode()).hexdigest()[:13], 16) / 16**13
+                sub[k] = int(h * n_sub)
+        assert len(set(zip(cell, sub))) > len(cells)  # the cap subdivides
+    sims = unit @ unit.T
+    linked = (sims >= threshold) & (cell[:, None] == cell) & (sub[:, None] == sub)
+    seen, keep = set(), []
+    for start in range(len(ids)):
+        if start in seen:
+            continue
+        comp, todo = [], [start]
+        seen.add(start)
+        while todo:
+            k = todo.pop()
+            comp.append(k)
+            for j in np.flatnonzero(linked[k]):
+                if j not in seen:
+                    seen.add(int(j))
+                    todo.append(int(j))
+        keep.append(min(comp, key=lambda k: (centrality[k], ids[k])))
+    want = sorted((int(ids[k]), int(cell[k])) for k in keep)
+    assert len(want) < len(ids)  # twins were found
+
+    got = semantic_dedup(emb, threshold=threshold, centroids=cent, max_cell_size=max_cell_size)
+    assert sorted(map(tuple, got.collect())) == want
 
 
 def test_semantic_dedup_no_cross_cell_pairs(spark):
