@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions import davg_sql, dsum, dsum_sql, tokens
+from .functions import davg_sql, dsum, dsum_sql, local_frame, tokens
 from .harness import register
 from .operators import dedup, multimodal, selection, similarity, text
 from .operators import fe as fe_ops
@@ -438,9 +438,7 @@ def _recall_row(spark, exact_rows, approx_rows, *, k: int, floor: float):
     n_queries = len({q for q, _ in ex})
     n_hit = len(set(ex) & {(r[0], r[1]) for r in approx_rows})
     ok = None if n_exact == 0 else bool(n_hit / n_exact >= floor)
-    return spark.createDataFrame(
-        [(n_queries, k, ok)], "n_queries bigint, k int, recall_ok boolean"
-    )
+    return local_frame(spark, [(n_queries, k, ok)], "n_queries bigint, k int, recall_ok boolean")
 
 
 @register(
@@ -6328,7 +6326,8 @@ def q_ann_rerank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 None if mrr is None else bool(mrr >= m_floor),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "variant string, n_queries bigint, k int, recall_ok boolean, mrr_ok boolean",
     )
@@ -7220,7 +7219,8 @@ def q_kl_reweighted_mixture_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_docs_kept"),
         F.sum(token_count(F.col("text"))).cast("long").alias("tokens_kept"),
     )
-    meta = spark.createDataFrame(
+    meta = local_frame(
+        spark,
         [(s, kl[s], int(weights[s])) for s in sorted(kl)],
         "source string, kl_vs_corpus double, weight long",
     )

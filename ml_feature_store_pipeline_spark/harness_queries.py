@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .functions import davg, davg_sql, dsum, dsum_sql, token_count, tokens
+from .functions import davg, davg_sql, dsum, dsum_sql, local_frame, token_count, tokens
 from .harness import register
 from .operators import dedup, joins, similarity, text, windows
 from .operators.sketches import hash_fraction_sql
@@ -545,7 +545,8 @@ def q_asof_prev_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_band_join_price_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (band) join via broadcast nested-loop — interval dim is tiny."""
     p = read_table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("budget", 0.0, 925.0), ("mid", 925.0, 950.0), ("high", 950.0, 975.0), ("premium", 975.0, 1e12)],
         "tier string, lo double, hi double",
     )
@@ -655,8 +656,8 @@ def q_set_ops_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         building.exceptAll(rich).distinct().count(),
         building.unionAll(rich).count(),
     ]
-    return spark.createDataFrame(
-        [tuple(vals)], "n_union long, n_intersect long, n_except long, n_union_all long"
+    return local_frame(
+        spark, [tuple(vals)], "n_union long, n_intersect long, n_except long, n_union_all long"
     )
 
 
@@ -1408,7 +1409,8 @@ def q_serving_parity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         report = store.validate_serving_parity(version, sample_size=100)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(report["checked"], len(report["mismatches"]))],
         "checked long, n_mismatches long",
     )

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import tokens
+from ..functions import local_frame, ngrams, tokens
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -88,18 +88,16 @@ def duplicate_stats(df: DataFrame, content_cols: list[str] | None = None) -> Dat
 
 
 def word_shingles(text: Column, n: int) -> Column:
-    """Word n-gram shingles as space-joined strings, row-local.
+    """Word n-gram shingles as space-joined strings, row-local, in token
+    order; an empty array for NULL text or fewer than ``n`` tokens.
 
-    ``sequence`` would count DOWN for size < n, so the short-doc case is
-    guarded to an empty array.
+    :func:`..functions.ngrams` over :func:`..functions.tokens`: no lambda
+    references the tokenizer, because Catalyst re-evaluates a row-level
+    expression inside a lambda body once per element — the regex split
+    once per shingle. Operators here that hold the frame project the
+    tokens as a column first, so a document is split once.
     """
-    toks = tokens(text)
-    count = F.size(toks) - F.lit(n - 1)
-    make = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-    )
-    return F.when(count >= 1, make).otherwise(F.array().cast("array<string>"))
+    return ngrams(tokens(text), n)
 
 
 # ---------------------------------------------------------------------------
@@ -118,9 +116,8 @@ def minhash_signatures(
     bytes per document. ``explode_outer`` keeps shingle-less docs, with a
     null signature.
     """
-    sh = df.select(
-        F.col(id_col),
-        F.explode_outer(word_shingles(F.col(text_col), shingle_n)).alias("__sh"),
+    sh = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks")).select(
+        F.col(id_col), F.explode_outer(ngrams(F.col("__toks"), shingle_n)).alias("__sh")
     )
     mins = [
         F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("__sh")))).alias(f"__m{i}")
@@ -405,8 +402,8 @@ def ngram_jaccard_pairs(
 
     if parallelism:
         df = df.repartition(parallelism)
-    sh = df.select(
-        F.col(id_col), F.explode(F.array_distinct(word_shingles(F.col(text_col), shingle_n))).alias("sh")
+    sh = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks")).select(
+        F.col(id_col), F.explode(F.array_distinct(ngrams(F.col("__toks"), shingle_n))).alias("sh")
     )
     if max_doc_frequency is not None:
         # Stop-shingle cut as a count window over partitionBy(sh):
@@ -826,17 +823,18 @@ def union_find_components(pairs) -> dict:
 def _connected_components_local(rows: list, node_type, spark) -> DataFrame:
     """:func:`union_find_components` over a SMALL collected list of
     (src, dst) pair rows (size-gated by the caller): same (node,
-    min-reachable-id) output as the distributed loop. The frame is built
-    on the driver, so Spark has no size statistics for it; it is marked
-    for broadcast (it holds at most ``local_threshold`` pairs' nodes), so
-    joins against it — :func:`dedup_survivors`' loser anti-join above
-    all — never shuffle the other side."""
+    min-reachable-id) output as the distributed loop. The frame is a
+    :func:`local_frame` built on the driver, so scanning it runs no job.
+    It is marked for broadcast (it holds at most ``local_threshold``
+    pairs' nodes), so joins against it — :func:`dedup_survivors`' loser
+    anti-join above all — never shuffle the other side, whatever size
+    the planner estimates for it."""
     from pyspark.sql import types as T
 
     schema = T.StructType(
         [T.StructField("node", node_type), T.StructField("component", node_type)]
     )
-    return F.broadcast(spark.createDataFrame(list(union_find_components(rows).items()), schema))
+    return F.broadcast(local_frame(spark, union_find_components(rows).items(), schema))
 
 
 def dedup_survivors(
@@ -968,23 +966,17 @@ def ngram_overlap_pairs(
     in a boilerplate report, not a pair list); the cut costs one extra
     partial-aggregated pass over train grams, off by default.
     """
-    from ..functions import tokens
 
     def grams(df: DataFrame, out_id: str) -> DataFrame:
         toks = tokens(F.col(text_col))
         if lowercase:
             toks = F.transform(toks, lambda t: F.lower(t))
-        pos = F.when(
-            F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-        ).otherwise(F.array().cast("array<int>"))
-        # per-doc dedup INSIDE the array (array_distinct) — a post-explode
-        # .distinct() would shuffle every train gram for nothing
-        g = F.explode(
-            F.array_distinct(
-                F.transform(pos, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-            )
+        # tokens (and their lowercase) once per document, in their own
+        # projection; per-doc dedup INSIDE the array (array_distinct) — a
+        # post-explode .distinct() would shuffle every train gram for nothing
+        return df.select(F.col(id_col).alias(out_id), toks.alias("__toks")).select(
+            out_id, F.explode(F.array_distinct(ngrams(F.col("__toks"), n))).alias("gram")
         )
-        return df.select(F.col(id_col).alias(out_id), g.alias("gram"))
 
     tr = grams(train, "train_id")
     ev = grams(eval_df, "eval_id")
@@ -1052,8 +1044,12 @@ def substring_overlap_pairs(
         raise ValueError("passage_len and stride must be positive integers")
 
     def windows(df: DataFrame, out_id: str, step: int) -> DataFrame:
+        # the (lowercased) text is its own projection, so the window
+        # lambda reads a column instead of lowercasing the whole text
+        # again for every window
         t = F.lower(F.col(text_col)) if lowercase else F.col(text_col)
-        npos = F.length(t) - F.lit(passage_len) + 1
+        txt = df.select(F.col(id_col).alias(out_id), t.alias("__t"))
+        npos = F.length("__t") - F.lit(passage_len) + 1
         pos = F.when(
             npos >= 1, F.sequence(F.lit(1), npos, F.lit(step))
         ).otherwise(F.array().cast("array<int>"))
@@ -1061,10 +1057,10 @@ def substring_overlap_pairs(
         # would shuffle every train window for nothing
         w = F.explode(
             F.array_distinct(
-                F.transform(pos, lambda i: F.substring(t, i, passage_len))
+                F.transform(pos, lambda i: F.substring(F.col("__t"), i, passage_len))
             )
         )
-        return df.select(F.col(id_col).alias(out_id), w.alias("passage"))
+        return txt.select(out_id, w.alias("passage"))
 
     ev_hashes = windows(eval_df, "eval_id", 1).select(
         "eval_id", F.xxhash64("passage").alias("__h")

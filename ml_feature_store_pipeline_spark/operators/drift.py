@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions import local_frame
+
 
 def bin_index(col: Column, lo: float, hi: float, bins: int) -> Column:
     """Fixed-width bin in [0, bins): outliers clamp into the edge bins,
@@ -630,8 +632,8 @@ def banded_avg_rank(
     for b in sorted(counts):  # offset = rows in all LOWER-value bands
         offsets[b] = acc
         acc += counts[b]
-    off_df = df.sparkSession.createDataFrame(
-        [(int(b), int(o)) for b, o in offsets.items()], "__band int, __off long"
+    off_df = local_frame(
+        df.sparkSession, [(int(b), int(o)) for b, o in offsets.items()], "__band int, __off long"
     )
     w_rank = Window.partitionBy("__band").orderBy(v.asc())
     w_tie = Window.partitionBy("__band", v)
@@ -1291,8 +1293,8 @@ def trimmed_mean(
         nn, "__v", n_bands=n_bands, rank_col="__r", return_count=True
     )
     if n == 0:
-        return nn.sparkSession.createDataFrame(
-            [], "n long, n_trimmed_each_side long, trimmed_mean double"
+        return local_frame(
+            nn.sparkSession, [], "n long, n_trimmed_each_side long, trimmed_mean double"
         )
     k = int(n * trim_frac)
     # avg rank r with tie count t spans row positions [r−(t−1)/2, r+(t−1)/2]:

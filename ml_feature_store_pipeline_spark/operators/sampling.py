@@ -19,6 +19,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import local_frame
+
 
 def hash_bucket(key: Column, buckets: int, salt: str = "") -> Column:
     """Deterministic bucket in [0, buckets): first 8 hex chars of
@@ -590,9 +592,10 @@ def srm_check(
     Arms with zero observations still appear. One |arms|-group count.
     """
     total_w = float(sum(arms.values()))
-    spark = assigned.sparkSession
-    design = spark.createDataFrame(
-        [(k, v / total_w) for k, v in arms.items()], f"{arm_col} string, expected_frac double"
+    design = local_frame(
+        assigned.sparkSession,
+        [(k, v / total_w) for k, v in arms.items()],
+        f"{arm_col} string, expected_frac double",
     )
     obs = assigned.groupBy(arm_col).agg(F.count(F.lit(1)).alias("n"))
     tot = obs.agg(F.sum("n").alias("__t"))

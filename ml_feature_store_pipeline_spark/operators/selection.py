@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import tokens
+from ..functions import local_frame, ngrams, tokens
 from .sampling import hash_bucket
 from .text import chunk_documents
 
@@ -44,20 +44,10 @@ from .text import chunk_documents
 def _grams(text: Column) -> Column:
     """Unigrams + bigrams of the whitespace tokens, as one string array
     (bigrams joined with a single space, matching the tokenizer's
-    normalization). Pure array codegen; the n<2 branch avoids
-    ``sequence(1, 0)``'s descending-step surprise."""
+    normalization). Pure array code, no lambda over the tokens
+    (:func:`..functions.ngrams`)."""
     toks = tokens(text)
-    n = F.size(toks)
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat(
-                F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(toks, bigrams)
+    return F.concat(toks, ngrams(toks, 2))
 
 
 def _gram_bucket(gram: Column, n_buckets: int, salt: str, hash_fn: str) -> Column:
@@ -311,9 +301,8 @@ def select_by_budget(
     for b in sorted(totals, reverse=True):
         offsets[b] = acc
         acc += totals[b]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        [(int(b), int(o)) for b, o in offsets.items()], "__band int, __off long"
+    off_df = local_frame(
+        df.sparkSession, [(int(b), int(o)) for b, o in offsets.items()], "__band int, __off long"
     )
     w = Window.partitionBy("__band").orderBy(F.desc("__score"), F.asc(id_col))
     return (

@@ -18,7 +18,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import cosine_similarity, dot, l2_norm
+from ..functions import cosine_similarity, dot, l2_norm, local_frame
+
+
+def _normed_cosine(a: str, a_norm: str, b: str, b_norm: str) -> Column:
+    """:func:`..functions.cosine_similarity` of vector columns ``a`` and
+    ``b`` from their :func:`..functions.l2_norm` columns, projected once
+    per vector before the pairing: the same expression on the same
+    inputs, so the doubles (NULL cases included) are identical, without
+    recomputing both norms for every pair."""
+    return dot(F.col(a), F.col(b)) / (F.col(a_norm) * F.col(b_norm))
 
 
 def _normalized(df: DataFrame, vec_col: str) -> DataFrame:
@@ -42,14 +51,16 @@ def cosine_topk(
     Broadcast the (small) query set against the corpus scan; per-query
     top-k via row_number with id tiebreak. The corpus is read ONCE
     regardless of query count; per-executor work is queries×rows×dim
-    multiply-adds inside codegen.
+    multiply-adds inside codegen; each side's norms are taken once per
+    vector, before the join.
     """
-    q = queries.select(F.col(query_id), F.col(vec_col).alias("__qv"))
-    c = corpus.select(F.col(corpus_id), F.col(vec_col).alias("__cv"))
+    v = F.col(vec_col)
+    q = queries.select(F.col(query_id), v.alias("__qv"), l2_norm(v).alias("__qn"))
+    c = corpus.select(F.col(corpus_id), v.alias("__cv"), l2_norm(v).alias("__cn"))
     scored = c.crossJoin(F.broadcast(q)).select(
         query_id,
         corpus_id,
-        cosine_similarity(F.col("__qv"), F.col("__cv")).alias("cosine"),
+        _normed_cosine("__qv", "__qn", "__cv", "__cn").alias("cosine"),
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
     return (
@@ -191,18 +202,19 @@ def lsh_topk(
             ]
         )
         return df.select(
-            F.col(id_col), F.col(vec_col), F.explode(tables).alias("tb")
-        ).select(id_col, vec_col, F.col("tb.table_id").alias("table_id"), F.col("tb.bucket").alias("bucket"))
+            F.col(id_col), F.col(vec_col), l2_norm(F.col(vec_col)).alias("__n"),
+            F.explode(tables).alias("tb"),
+        ).select(id_col, vec_col, "__n", F.col("tb.table_id").alias("table_id"), F.col("tb.bucket").alias("bucket"))
 
-    qb = with_buckets(queries, query_id).withColumnRenamed(vec_col, "__qv")
-    cb = with_buckets(corpus, corpus_id).withColumnRenamed(vec_col, "__cv")
+    qb = with_buckets(queries, query_id).withColumnRenamed(vec_col, "__qv").withColumnRenamed("__n", "__qn")
+    cb = with_buckets(corpus, corpus_id).withColumnRenamed(vec_col, "__cv").withColumnRenamed("__n", "__cn")
     cands = (
         qb.join(cb, ["table_id", "bucket"])
-        .select(query_id, corpus_id, "__qv", "__cv")
+        .select(query_id, corpus_id, "__qv", "__qn", "__cv", "__cn")
         .distinct()
     )
     scored = cands.select(
-        query_id, corpus_id, cosine_similarity(F.col("__qv"), F.col("__cv")).alias("cosine")
+        query_id, corpus_id, _normed_cosine("__qv", "__qn", "__cv", "__cn").alias("cosine")
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
     return (
@@ -435,7 +447,8 @@ def ivf_build(
         model = km.fit(fit_input)
     finally:
         fit_input.unpersist()
-    cent = spark.createDataFrame(
+    cent = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cell int, center array<double>",
     )
@@ -507,11 +520,12 @@ def ivf_query(
         vec_col=vec_col,
         n_nearest=nprobe,
         cell_ids=[cell for cell, _ in crows],
-    ).select(query_id, F.col(vec_col).alias("__qv"), "cell")
-    scored = probes.join(inverted_lists, "cell").select(
+    ).select(query_id, F.col(vec_col).alias("__qv"), l2_norm(F.col(vec_col)).alias("__qn"), "cell")
+    lists = inverted_lists.select("cell", corpus_id, "__cv", l2_norm(F.col("__cv")).alias("__cn"))
+    scored = probes.join(lists, "cell").select(
         query_id,
         corpus_id,
-        cosine_similarity(F.col("__qv"), F.col("__cv")).alias("cosine"),
+        _normed_cosine("__qv", "__qn", "__cv", "__cn").alias("cosine"),
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
     return (
@@ -618,12 +632,13 @@ def embedding_near_dup_pairs(
     switches to the all-pairs O(n²) check — for oracle comparison and
     small corpora only.
     """
-    left = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    right = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    v, norm = F.col(vec_col), l2_norm(F.col(vec_col))
+    left = df.select(F.col(id_col).alias("id_a"), v.alias("__va"), norm.alias("__na"))
+    right = df.select(F.col(id_col).alias("id_b"), v.alias("__vb"), norm.alias("__nb"))
     if exact:
         cands = left.crossJoin(right).filter(F.col("id_a") < F.col("id_b"))
     else:
-        def with_buckets(side: DataFrame, id_name: str, v_name: str) -> DataFrame:
+        def with_buckets(side: DataFrame, id_name: str, v_name: str, n_name: str) -> DataFrame:
             tables = F.array(
                 *[
                     F.struct(
@@ -633,21 +648,21 @@ def embedding_near_dup_pairs(
                     for t in range(n_tables)
                 ]
             )
-            return side.select(id_name, v_name, F.explode(tables).alias("tb")).select(
-                id_name, v_name, F.col("tb.table_id").alias("table_id"), F.col("tb.bucket").alias("bucket")
+            return side.select(id_name, v_name, n_name, F.explode(tables).alias("tb")).select(
+                id_name, v_name, n_name, F.col("tb.table_id").alias("table_id"), F.col("tb.bucket").alias("bucket")
             )
 
-        la = with_buckets(left, "id_a", "__va")
-        lb = with_buckets(right, "id_b", "__vb")
+        la = with_buckets(left, "id_a", "__va", "__na")
+        lb = with_buckets(right, "id_b", "__vb", "__nb")
         cands = (
             la.join(lb, ["table_id", "bucket"])
             .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "__va", "__vb")
+            .select("id_a", "id_b", "__va", "__na", "__vb", "__nb")
             .distinct()
         )
     return (
         cands.select(
-            "id_a", "id_b", cosine_similarity(F.col("__va"), F.col("__vb")).alias("cosine")
+            "id_a", "id_b", _normed_cosine("__va", "__na", "__vb", "__nb").alias("cosine")
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -757,7 +772,7 @@ def deterministic_centroids(
         ]
     )
     centers = _centroid_pick(corpus, id_col, vec_col, n_cells)
-    return corpus.sparkSession.createDataFrame(list(enumerate(centers)), schema)
+    return local_frame(corpus.sparkSession, enumerate(centers), schema)
 
 
 def auto_n_cells(n_rows: int, target_cell_size: int) -> int:
@@ -895,7 +910,7 @@ def semantic_dedup(
         cell_type = centroids.schema["cell"].dataType.simpleString()
     out_schema = f"`{id_col}` {types[id_col]}, cell {cell_type}"
     if not centers:
-        return corpus.sparkSession.createDataFrame([], out_schema)
+        return local_frame(corpus.sparkSession, [], out_schema)
     center_side = _vector_side(centers, [c is not None and None not in c for c in centers])
     cell_pos = {c: i for i, c in enumerate(cells)}
     cell_arr = np.asarray(cells)
@@ -1091,20 +1106,29 @@ def semantic_decontaminate(
     ``max_eval_cosine`` NULL (max over zero vectors) and ``contaminated``
     false, so ``drop=True`` keeps the whole corpus. (``array_max`` of the
     empty collect_list is NULL, and a bare ``~(NULL >= t)`` filter would
-    otherwise silently drop every train row.)"""
-    from ..functions import cosine_similarity
+    otherwise silently drop every train row.)
 
-    ev_row = eval_df.agg(F.collect_list(F.col(vec_col)).alias("__evs"))
+    Each vector's norm is taken once: the train norm is a column projected
+    before the join, and each eval vector carries its norm in the
+    broadcast row, so the lambda only takes the dot product (the
+    :func:`_normed_cosine` rule; the values are identical)."""
+    v = F.col(vec_col)
+    ev_row = eval_df.agg(
+        F.collect_list(
+            F.when(v.isNotNull(), F.struct(v.alias("v"), l2_norm(v).alias("n")))
+        ).alias("__evs")
+    )
     max_cos = F.round(
         F.array_max(
             F.transform(
-                F.col("__evs"), lambda e: cosine_similarity(F.col(vec_col), e)
+                F.col("__evs"), lambda e: dot(v, e["v"]) / (F.col("__tn") * e["n"])
             )
         ),
         round_digits,
     )
     out = (
-        train.crossJoin(F.broadcast(ev_row))
+        train.withColumn("__tn", l2_norm(v))
+        .crossJoin(F.broadcast(ev_row))
         .withColumn("max_eval_cosine", max_cos)
         .withColumn(
             "contaminated",
@@ -1112,7 +1136,7 @@ def semantic_decontaminate(
                 F.col("max_eval_cosine") >= F.lit(threshold), F.lit(False)
             ),
         )
-        .drop("__evs")
+        .drop("__tn", "__evs")
     )
     return out.filter(~F.col("contaminated")).drop("contaminated") if drop else out
 
@@ -1503,12 +1527,15 @@ def mmr_rerank(
     # raw cosine would let a last-ulp engine difference swap membership at
     # the pool boundary — the same reason every later argmax compares
     # rounded values only
-    q = queries.select(F.col(query_id), F.col(vec_col).alias("__qv"))
+    q = queries.select(
+        F.col(query_id), F.col(vec_col).alias("__qv"), l2_norm(F.col(vec_col)).alias("__qn")
+    )
     c = _normalized(corpus.select(F.col(corpus_id), F.col(vec_col)), vec_col)
+    c = c.select("*", l2_norm(F.col(vec_col)).alias("__cn"))
     scored0 = c.crossJoin(F.broadcast(q)).select(
         query_id,
         corpus_id,
-        F.round(cosine_similarity(F.col("__qv"), F.col(vec_col)), round_digits).alias(
+        F.round(_normed_cosine("__qv", "__qn", vec_col, "__cn"), round_digits).alias(
             "relevance"
         ),
         F.col(vec_col).alias("__v"),
@@ -2461,7 +2488,8 @@ def _pairwise_moments(df: DataFrame, vec_col: str):
     # pos -> (i, j) for the row-major upper triangle: d is in hand, so a
     # LocalRelation beats deriving ids from the corpus-wide dims aggregate
     # (which would evaluate an extra lineage of the moment scan)
-    posmap = df.sparkSession.createDataFrame(
+    posmap = local_frame(
+        df.sparkSession,
         [
             (i * d - i * (i + 1) // 2 + j - i - 1, i, j)
             for i in range(d)
@@ -2580,9 +2608,7 @@ def pca_power_embeddings(
     d, dims, pairs = _pairwise_moments(df, vec_col)
     spark = df.sparkSession
     if d == 0:
-        return spark.createDataFrame(
-            [], "dim int, loading double, eigenvalue double"
-        )
+        return local_frame(spark, [], "dim int, loading double, eigenvalue double")
     # dims (d rows) and pairs (d(d−1)/2 rows) share the corpus scan but
     # not lineage — overlap the two collect jobs; both go through the
     # pin_rows plan-audit hook
@@ -2666,4 +2692,4 @@ def pca_power_embeddings(
         )
         for i in idx
     ]
-    return spark.createDataFrame(out, "dim int, loading double, eigenvalue double")
+    return local_frame(spark, out, "dim int, loading double, eigenvalue double")

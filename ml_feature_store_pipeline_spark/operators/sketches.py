@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions import local_frame
+
 #: 16^13 = 2^52: the largest hex-prefix whose integer value is exact in a
 #: double — the whole md5→uniform pipeline stays bit-identical across
 #: engines (see module docstring).
@@ -215,7 +217,7 @@ def _interpolate_quantiles(cum: DataFrame, qs: list[float], *, lo: Column, width
     null input still emits one ``(q, NULL)`` row per requested quantile —
     the same contract as the SQL oracle's scalar subquery (an inner join
     would silently return 0 rows on empty state)."""
-    qdf = cum.sparkSession.createDataFrame([(float(q),) for q in qs], "q double")
+    qdf = local_frame(cum.sparkSession, [(float(q),) for q in qs], "q double")
     hit = (
         qdf.join(F.broadcast(cum), F.col("cum") >= F.col("q") * F.col("total"), "left")
         .groupBy("q")

@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import token_count, tokens
+from ..functions import local_frame, ngrams, token_count, tokens
 
 #: Tiny per-language stopword lists for the n-gram/stopword-ratio heuristic.
 #: Deliberately small + hardcoded: portable to the SQL oracle verbatim.
@@ -129,14 +129,16 @@ def chunk_documents(
     may be short but is never empty; token-less docs produce no chunks.
     Everything is array slicing inside codegen (``sequence`` + ``slice`` +
     ``posexplode``) — no UDF, no shuffle; output grows ~1/(1-overlap ratio)×
-    the token count, linear in corpus size.
+    the token count, linear in corpus size. The tokens are their own
+    projection: the slicing lambda reads that column, where a lambda over
+    the :func:`tokens` expression would re-split the text per chunk.
 
     Returns (id, chunk_id, n_chunk_tokens, chunk_text).
     """
     if not 0 <= overlap < chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
-    toks = tokens(F.col(text_col))
+    toks = F.col("__toks")
     n = F.size(toks)
     # chunk starts: 1, 1+stride, ... — last start covers the tail
     n_chunks = F.when(n <= 0, F.lit(0)).otherwise(
@@ -146,7 +148,8 @@ def chunk_documents(
     starts = F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0)))
     chunks = F.transform(starts, lambda i: F.slice(toks, i * stride + 1, chunk_tokens))
     return (
-        df.select(F.col(id_col), n_chunks.alias("__nc"), F.posexplode(chunks))
+        df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
+        .select(F.col(id_col), n_chunks.alias("__nc"), F.posexplode(chunks))
         .filter((F.col("__nc") > 0) & (F.col("pos") < F.col("__nc")))
         .select(
             F.col(id_col),
@@ -205,15 +208,9 @@ def repetition_stats(
     two partial-aggregated shuffles of narrow rows, linear in token count.
     Token-less/short docs get 0.0 (nothing to repeat).
     """
-    toks = tokens(F.col(text_col))
-    grams = F.when(
-        F.size(toks) >= ngram,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (ngram - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, ngram)),
-        ),
-    ).otherwise(F.array())
-    exploded = df.select(F.col(id_col), F.explode_outer(grams).alias("gram"))
+    exploded = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks")).select(
+        F.col(id_col), F.explode_outer(ngrams(F.col("__toks"), ngram)).alias("gram")
+    )
     per_gram = exploded.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("n"))
     return per_gram.groupBy(id_col).agg(
         F.coalesce(
@@ -365,14 +362,20 @@ def pack_stats(assignment: DataFrame, token_budget: int) -> DataFrame:
 
 def char_ngrams(text: Column, n: int = 3, *, lowercase: bool = True) -> Column:
     """Array of overlapping character n-grams of ``text`` (the CCNet-style
-    LM unit). Pure codegen: sequence + transform + substring — no UDF.
-    Empty array for texts shorter than ``n`` (Spark's ``sequence(1, 0)``
-    counts DOWN, so the degenerate case is guarded explicitly)."""
+    LM unit), no UDF. Empty array for NULL text and texts shorter than
+    ``n`` characters.
+
+    :func:`..functions.ngrams` over the text's characters (``split`` on
+    the empty pattern yields code points, the unit ``length`` and
+    ``substring`` count in). No lambda references the text: a
+    ``transform`` over positions calling ``substring(lower(text), i, n)``
+    re-evaluates ``lower(text)`` for every gram. The lowercase is taken
+    of the whole text, before the split, so the grams are those of the
+    lowercased text also where a character's lowercase is longer
+    (``İ`` → ``i̇``)."""
     t = F.lower(text) if lowercase else text
-    positions = F.when(
-        F.length(t) >= n, F.sequence(F.lit(1), F.length(t) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(positions, lambda i: F.substring(t, i, n))
+    chars = F.when(F.length(t) >= n, F.split(t, ""))
+    return ngrams(chars, n, sep="")
 
 
 def char_ngram_model(
@@ -706,15 +709,10 @@ def corpus_duplication_rate(
     the digest (the shuffle carries 16-byte digests with partial counts,
     never window text), then a scalar aggregate.
     """
-    toks = tokens(F.col(text_col))
-    n = F.size(toks)
-    grams = df.filter(n >= ngram).select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), n - ngram + 1),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, ngram))),
-            )
-        ).alias("__d")
+    grams = (
+        df.select(tokens(F.col(text_col)).alias("__toks"))
+        .select(F.explode(ngrams(F.col("__toks"), ngram)).alias("__g"))
+        .select(F.md5("__g").alias("__d"))
     )
     counts = grams.groupBy("__d").agg(F.count(F.lit(1)).cast("long").alias("__n"))
     return counts.agg(
@@ -898,9 +896,8 @@ def bpe_train(
         corpus = corpus.select(
             _bpe_merge_fold(F.col("sym"), left, right, merged).alias("sym")
         ).localCheckpoint(eager=False)
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        out, "merge_rank int, left string, right string, merged string, n_occ long"
+    return local_frame(
+        df.sparkSession, out, "merge_rank int, left string, right string, merged string, n_occ long"
     )
 
 

@@ -13,6 +13,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions import local_frame
+
 
 def top_n_per_group(
     df: DataFrame,
@@ -424,7 +426,7 @@ def rfm_scores(
             ("rfm_segment", "integer"),
         ):
             schema = schema.add(name, typ)
-        return df.sparkSession.createDataFrame([], schema)
+        return local_frame(df.sparkSession, [], schema)
     # rows with no usable timestamp anywhere: keys still aggregate —
     # recency, its boundaries, and r_score/segment come out NULL while
     # frequency/monetary score normally (exactly what the SQL recompute

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DEBUGGING_FLAG = "spark.python.sql.dataFrameDebugging.enabled"
+
 #: Defaults applied to every session this package builds. Each is safe on a
 #: real cluster; values that only make sense locally (master, driver memory)
 #: are applied only when we build the session ourselves.
@@ -39,6 +41,19 @@ ENGINE_CONF: dict[str, str] = {
     "spark.executorEnv.OMP_NUM_THREADS": "1",
     "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
     "spark.executorEnv.MKL_NUM_THREADS": "1",
+    # No call-site capture per Column call. While this flag is true (the
+    # PySpark 4.1 default), every Column-API call walks the Python stack
+    # and makes about 10 py4j round trips to record its caller; it also
+    # tries ``import ipykernel``, and where IPython is installed without
+    # ipykernel the first call imports IPython (+26 MB driver RSS: 111 →
+    # 137 MB on a bare session) and each later call repeats the failed
+    # import's path search. A warm perfbench ``curate`` chain made 176
+    # such calls, about half of its 3 522 py4j round trips. What is lost:
+    # analysis errors no longer name the caller's ``file:line`` — at the
+    # default depth of 1 that line pointed into this package's operators
+    # anyway. PySpark reads the flag once, at the first Column call of the
+    # process, so it must be set before then.
+    _DEBUGGING_FLAG: "false",
 }
 
 #: Env the PYTHON WORKERS must see before numpy first loads (local mode:
@@ -94,10 +109,20 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
 
     The driver harness constructs its own SparkSession; ``entry()`` routes
     through here so oracle comparison still sees UTC timestamps and AQE.
+
+    ``spark.python.sql.dataFrameDebugging.enabled`` is set here too. It is
+    a static conf, which ``spark.conf.set`` refuses on a running session,
+    so it is written to the session's SQL conf directly; its one reader,
+    PySpark's driver-side call-site capture, caches it at the first Column
+    the process builds. So it only takes effect if this is called before
+    any Column is built.
     """
     for k, v in ENGINE_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf (e.g. already-started contexts) — keep going
+    spark._jsparkSession.sessionState().conf().setConfString(
+        _DEBUGGING_FLAG, ENGINE_CONF[_DEBUGGING_FLAG]
+    )
     return spark

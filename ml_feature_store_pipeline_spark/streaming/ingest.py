@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import conditional_count, conditional_mean
+from ..functions import conditional_count, conditional_mean, local_frame
 
 #: Sidecar file stamped into a state directory in the SAME atomic swap as
 #: the data (sources.writers.atomic_overwrite_parquet extra_files), holding
@@ -354,7 +354,7 @@ def cdc_merge_sink(
         if os.path.exists(snapshot_path):
             target = spark.read.parquet(snapshot_path)
         else:
-            target = spark.createDataFrame([], batch.select(*data_cols).schema)
+            target = local_frame(spark, [], batch.select(*data_cols).schema)
         merged = cdc.merge_changes(
             target, batch, keys, op_col=op_col, seq_col=seq_col
         )

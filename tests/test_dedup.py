@@ -2,10 +2,18 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
+from test_plans import SF
 
-from ml_feature_store_pipeline_spark.operators import dedup
+from ml_feature_store_pipeline_spark.functions import tokens
+from ml_feature_store_pipeline_spark.operators import dedup, text
+from ml_feature_store_pipeline_spark.sources.readers import read_table
+
+#: the sf0.01 driver test tables, beside the sf0.001 ones
+SF001 = os.path.join(os.path.dirname(SF), "sf0.01")
 
 
 @pytest.fixture()
@@ -57,12 +65,80 @@ def test_duplicate_stats(docs):
     assert row["dup_fraction"] == pytest.approx(1 / 5)
 
 
+def _lambda_shingles(text_col, n):
+    """The per-position lambda form ``word_shingles`` had before it became
+    lambda-free: the reference its outputs must keep equal to."""
+    toks = tokens(text_col)
+    count = F.size(toks) - F.lit(n - 1)
+    make = F.transform(
+        F.sequence(F.lit(1), count), lambda i: F.concat_ws(" ", F.slice(toks, i, n))
+    )
+    return F.when(count >= 1, make).otherwise(F.array().cast("array<string>"))
+
+
 def test_word_shingles(spark):
-    df = spark.createDataFrame([("a b c d",), ("a b",), ("",)], "text: string")
-    out = [r["sh"] for r in df.select(dedup.word_shingles(F.col("text"), 3).alias("sh")).collect()]
+    df = spark.createDataFrame(
+        [(0, "a b c d"), (1, "a b"), (2, ""), (3, None), (4, "\tA b  c d"), (5, "x")],
+        "i int, text string",
+    )
+
+    def shingles(n):
+        rows = df.select("i", dedup.word_shingles(F.col("text"), n).alias("sh")).collect()
+        return [r["sh"] for r in sorted(rows)]
+
+    out = shingles(3)
     assert out[0] == ["a b c", "b c d"]
     assert out[1] == []  # shorter than n → empty, not a descending-sequence error
     assert out[2] == []
+    assert out[3] == []  # NULL text
+    assert out[4] == ["A b c", "b c d"]  # a leading tab is not a token
+    assert out[5] == []
+    assert shingles(1) == [["a", "b", "c", "d"], ["a", "b"], [], [], ["A", "b", "c", "d"], ["x"]]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_word_shingles_equal_the_lambda_form_on_documents(spark, n):
+    docs = read_table(spark, SF001, "documents")
+    new = docs.select("doc_id", dedup.word_shingles(F.col("text"), n).alias("sh"))
+    old = docs.select("doc_id", _lambda_shingles(F.col("text"), n).alias("sh"))
+    assert sorted(new.collect()) == sorted(old.collect())
+
+
+def _lambda_functions(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` of a plan string, parentheses balanced."""
+    out, start = [], 0
+    while (i := plan.find("lambdafunction(", start)) >= 0:
+        depth = 0
+        for j in range(i + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[j], 0)
+            if depth == 0:
+                break
+        out.append(plan[i : j + 1])
+        start = i + 1
+    return out
+
+
+def test_no_tokenizer_inside_a_lambda(spark):
+    """Catalyst does not hoist an expression out of a lambda body, so a
+    tokenizer ``split(`` inside one runs once per element (O(W²) per
+    document). None of the n-gram kernels may put it there."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c")], "doc_id long, text string"
+    )
+    frames = {
+        "word_shingles": docs.select(dedup.word_shingles(F.col("text"), 3)),
+        "chunk_documents": text.chunk_documents(docs, "doc_id", "text", chunk_tokens=3, overlap=1),
+        "repetition_stats": text.repetition_stats(docs, "doc_id", "text"),
+        "corpus_duplication_rate": text.corpus_duplication_rate(docs, "text", ngram=2),
+        "ngram_overlap_pairs": dedup.ngram_overlap_pairs(docs, docs, "doc_id", "text", n=2),
+        "ngram_jaccard_pairs": dedup.ngram_jaccard_pairs(docs, "doc_id", "text"),
+        "minhash_signatures": dedup.minhash_signatures(docs, "doc_id", "text"),
+    }
+    for name, frame in frames.items():
+        plan = frame._jdf.queryExecution().optimizedPlan().toString()
+        assert "split(" in plan, name
+        inside = [f for f in _lambda_functions(plan) if "split(" in f]
+        assert not inside, (name, inside[:1])
 
 
 def test_minhash_identical_docs_identical_signatures(docs):
@@ -564,6 +640,29 @@ def test_dedup_survivors_small_graph_broadcasts_losers(spark):
     assert kept.count() == 7
     plan = kept._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" in plan, plan
+
+
+def test_union_find_frame_is_a_local_relation(spark):
+    """The driver-side union-find result is an Arrow-built LocalRelation:
+    scanning it runs no job, and its values (string ids here) round-trip
+    exactly, so the survivors are unchanged."""
+    docs = spark.createDataFrame(
+        [(f"d{i:02d}", f"text {i}") for i in range(10)], "doc_id string, text string"
+    )
+    pairs = spark.createDataFrame(
+        [("d01", "d02"), ("d02", "d03"), ("d05", "d06"), ("d09", "d05")],
+        "id_a string, id_b string",
+    )
+    comps = dedup.connected_components(pairs)
+    plan = comps._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert sorted(tuple(r) for r in comps.collect()) == sorted(
+        dedup.union_find_components([tuple(r) for r in pairs.collect()]).items()
+    )
+    kept = dedup.dedup_survivors(docs, pairs, "doc_id")
+    assert sorted(r["doc_id"] for r in kept.collect()) == [
+        "d00", "d01", "d04", "d05", "d07", "d08"
+    ]
 
 
 def test_dedup_survivors_by_priority_keeps_best_member(spark):

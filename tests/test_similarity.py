@@ -1929,3 +1929,84 @@ def test_kmeans_single_plan_matches_driver_loop_trajectory(spark):
         got = snap(_kmeans_final_assignment(df, "vec_id", "embedding", k, n_iters))
         want = snap(reference(df, "vec_id", "embedding", k, n_iters))
         assert got == want, (k, n_iters)
+
+
+#: vectors whose cosine is NULL or raises: a NULL vector, a NULL element,
+#: a shorter vector (``zip_with`` pads with NULL) and — only where the
+#: zero divisor is NULL rather than an error — a zero vector
+_EDGE_VECS = [
+    (900, None),
+    (901, [1.0, None] + [0.5] * (DIM - 2)),
+    (902, [0.25] * (DIM - 1)),
+    (903, [float("nan")] + [0.1] * (DIM - 1)),
+]
+_ZERO_VEC = (904, [0.0] * DIM)
+
+
+def _pairwise_cosines(queries, corpus):
+    """Reference: ``cosine_similarity`` evaluated per (query, corpus) pair."""
+    return {
+        (r[0], r[1]): repr(r[2])
+        for r in queries.crossJoin(corpus.withColumnRenamed("embedding", "__cv"))
+        .select("query_id", "vec_id", cosine_similarity(F.col("embedding"), F.col("__cv")))
+        .collect()
+    }
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_cosine_topk_cosines_bit_equal_per_pair_cosine(spark, vectors, ansi):
+    """Norms are projected once per vector before the join; the cosines
+    stay bit-identical to per-pair ``cosine_similarity``, NULL cases
+    included. A zero vector divides by zero: NULL without ANSI, and under
+    ANSI both forms raise."""
+    rows = [(i, [float(x) for x in vectors[i]]) for i in range(12)] + _EDGE_VECS
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        if ansi == "false":
+            rows.append(_ZERO_VEC)
+        corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        queries = corpus.filter((F.col("vec_id") % 3 == 0) | (F.col("vec_id") >= 900))
+        queries = queries.withColumnRenamed("vec_id", "query_id")
+        got = {
+            (r["query_id"], r["vec_id"]): repr(r["cosine"])
+            for r in similarity.cosine_topk(queries, corpus, k=len(rows)).collect()
+        }
+        assert got == _pairwise_cosines(queries, corpus)
+        assert "None" in got.values()
+        if ansi == "true":
+            with_zero = corpus.unionByName(spark.createDataFrame([_ZERO_VEC], corpus.schema))
+            for frame in (
+                similarity.cosine_topk(queries, with_zero, k=3),
+                queries.crossJoin(with_zero.withColumnRenamed("embedding", "__cv")).select(
+                    cosine_similarity(F.col("embedding"), F.col("__cv"))
+                ),
+            ):
+                with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                    frame.collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_semantic_decontaminate_equals_per_pair_max_cosine(spark, vectors):
+    """The eval vectors carry their norms and the train norm is a column,
+    so the lambda takes only dot products; ``max_eval_cosine`` stays the
+    rounded max of per-pair ``cosine_similarity``. A NULL eval vector is
+    skipped, a NULL train vector gets NULL."""
+    rows = [(i, [float(x) for x in vectors[i]]) for i in range(20)] + _EDGE_VECS
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    train = vecs.filter((F.col("vec_id") % 4 != 0) | (F.col("vec_id") >= 900))
+    ev = vecs.filter((F.col("vec_id") % 4 == 0) & (F.col("vec_id") < 900)).unionByName(
+        vecs.filter(F.col("vec_id") == 900)
+    )
+    out = {
+        r["vec_id"]: repr(r["max_eval_cosine"])
+        for r in similarity.semantic_decontaminate(train, ev, threshold=0.9).collect()
+    }
+    ref = (
+        train.crossJoin(ev.select(F.col("embedding").alias("__ev")))
+        .groupBy("vec_id")
+        .agg(F.round(F.max(cosine_similarity(F.col("embedding"), F.col("__ev"))), 9).alias("m"))
+    )
+    assert out == {r["vec_id"]: repr(r["m"]) for r in ref.collect()}
+    assert out[900] == "None"

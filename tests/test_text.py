@@ -208,6 +208,33 @@ class TestLmScore:
         got = {r["gram"]: r["cnt"] for r in char_ngram_model(docs, "text").collect()}
         assert got == {"abc": 2, "bca": 1, "cab": 1}
 
+    @pytest.mark.parametrize("n,lowercase", [(1, True), (2, True), (3, True), (3, False), (5, True)])
+    def test_char_ngrams_equal_the_per_position_form(self, spark, n, lowercase):
+        """char_ngrams builds no lambda over the text; its grams equal the
+        per-position ``substring(lower(text), i, n)`` form it replaced,
+        also where the lowercase is longer than the text (İ → i̇), for
+        characters outside the BMP, for NULL and for short texts."""
+        from ml_feature_store_pipeline_spark.operators.text import char_ngrams
+
+        docs = spark.createDataFrame(
+            [
+                (1, "İstanbul İİ"), (2, "Straße ﬁne 😀 emoji😀s"), (3, None), (4, ""),
+                (5, "ab"), (6, "\tMiXeD  Case\n"), (7, "中文字符串"), (8, "é́"),
+            ],
+            "id long, text string",
+        )
+        t = F.lower(F.col("text")) if lowercase else F.col("text")
+        positions = F.when(
+            F.length(t) >= n, F.sequence(F.lit(1), F.length(t) - (n - 1))
+        ).otherwise(F.array().cast("array<int>"))
+        old = F.transform(positions, lambda i: F.substring(t, i, n))
+        rows = docs.select(
+            "id", char_ngrams(F.col("text"), n, lowercase=lowercase).alias("new"), old.alias("old")
+        ).collect()
+        assert all(r["new"] == r["old"] for r in rows), rows
+        plan = docs.select(char_ngrams(F.col("text"), n))._jdf.queryExecution().optimizedPlan()
+        assert "lambdafunction(substring(" not in plan.toString()
+
 
 # ---------------------------------------------------------------------------
 # Gopher rule filter + vocabulary coverage (r7)
