@@ -287,14 +287,24 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
 
 
+def normed_cosine(ab: Column, a_norm: Column, b_norm: Column) -> Column:
+    """Cosine from the dot product ``ab`` of two vectors and their L2
+    norms: the one division behind every embedding cosine. ``try_divide``
+    makes a zero norm (a zero vector) give NULL in both ANSI modes, as the
+    plain divide does without ANSI, instead of failing the query with
+    ``DIVIDE_BY_ZERO``; every other quotient is the same double."""
+    return F.try_divide(ab, a_norm * b_norm)
+
+
 def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine of two array columns. In a pairwise kernel (a join or a
+    """Cosine of two array columns; NULL when either is NULL, holds a
+    NULL element, or is a zero vector. In a pairwise kernel (a join or a
     lambda over one side's vectors) do not call this per pair: project
-    :func:`l2_norm` once per vector before the pairing and divide
-    :func:`dot` by the product of the two norm columns — the same
-    expression on the same inputs, so the doubles (NULL cases included)
-    are identical, without recomputing both norms for every pair."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    :func:`l2_norm` once per vector before the pairing and pass the norm
+    columns to :func:`normed_cosine` — the same expression on the same
+    inputs, so the doubles (NULL cases included) are identical, without
+    recomputing both norms for every pair."""
+    return normed_cosine(dot(a, b), l2_norm(a), l2_norm(b))
 
 
 # ---------------------------------------------------------------------------

@@ -565,9 +565,8 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction — bytes→pixels→stats, not a hash stub). Emits the
     exact-integer pixel statistics so the DuckDB oracle (which re-derives
     the expected pixels from the generator formula, never touching the
-    binary) can hash-verify the decode; the float feature path
-    (decode_image_features) is a pure function of these sums and stays
-    pytest-verified (test_multimodal_streaming)."""
+    binary) can hash-verify the decode (per-channel means and stds are
+    pure functions of these sums)."""
     docs = read_table(spark, sf_dir, "documents").repartition(
         _par_rows(spark, sf_dir, "documents")
     )
@@ -4128,8 +4127,8 @@ def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     random-embedding corpus (the quantizer's worst case; at scale the
     library's corpus-aware default shortlist max(100, 20k, 1% n) takes
     over — r10, 2M-vector-measured in SCALE.md: 0.85 vs 0.09 at the old
-    static 100). Everything is md5-deterministic (codebook =
-    deterministic_centroids sample), so a recall collapse or query-set
+    static 100). Everything is md5-deterministic (codebook = the
+    smallest-md5 corpus sample), so a recall collapse or query-set
     change fails the hash."""
     emb = read_table(spark, sf_dir, "embeddings", parallelize=True)
     queries = emb.filter(F.col("vec_id") < 20).select(

@@ -2,10 +2,9 @@
 
 Modules:
 
-- ``joins``      — equi/semi/anti/broadcast joins, point-in-time as-of join,
-                   range (band) join, skew-salted join
-- ``windows``    — top-n per group, running aggregates, lag/lead,
-                   gap-based sessionization
+- ``joins``      — semi/anti joins, point-in-time as-of join, range (band)
+                   join, bucketized interval join
+- ``windows``    — top-n per group, gap-based sessionization
 - ``dedup``      — exact, MinHash+LSH, SimHash, n-gram Jaccard near-dup
 - ``similarity`` — brute-force cosine top-k, LSH-bucketed ANN
 - ``text``       — tokenization, language id, quality scoring, fingerprints
@@ -16,6 +15,6 @@ Modules:
 - ``fe``         — binning/encoding/scaling/EWMA/calendar features
 - ``sampling``   — deterministic samples, splits, A/B assignment, negatives
 - ``cdc``/``pit``/``incremental``/``layout``/``selection``/``mlfeatures``/
-  ``profile``/``skew`` — merge, point-in-time, state, z-order, curation,
+  ``profile``/``skew`` — merge, point-in-time, state, training shards, curation,
   MLlib bridges, table profiling, two-stage distinct
 """

@@ -69,37 +69,6 @@ def exact_dedup(
     )
 
 
-def duplicate_stats(df: DataFrame, content_cols: list[str] | None = None) -> DataFrame:
-    """C10 generalized: total rows, distinct rows, duplicate fraction."""
-    cols = content_cols or df.columns
-    return df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct(F.struct(*cols)).alias("n_distinct"),
-        (
-            (F.count(F.lit(1)) - F.countDistinct(F.struct(*cols)))
-            / F.count(F.lit(1))
-        ).alias("dup_fraction"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# shingling
-# ---------------------------------------------------------------------------
-
-
-def word_shingles(text: Column, n: int) -> Column:
-    """Word n-gram shingles as space-joined strings, row-local, in token
-    order; an empty array for NULL text or fewer than ``n`` tokens.
-
-    :func:`..functions.ngrams` over :func:`..functions.tokens`: no lambda
-    references the tokenizer, because Catalyst re-evaluates a row-level
-    expression inside a lambda body once per element — the regex split
-    once per shingle. Operators here that hold the frame project the
-    tokens as a column first, so a document is split once.
-    """
-    return ngrams(tokens(text), n)
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
@@ -486,11 +455,6 @@ def simhash_band_specs(n_bands: int) -> list[tuple[int, int]]:
         (b * w, w if b < n_bands - 1 else SIMHASH_BITS - (n_bands - 1) * w)
         for b in range(n_bands)
     ]
-
-
-def token_hash(tok: Column) -> Column:
-    """32-bit integer hash from the md5 hex prefix — engine-portable."""
-    return F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long")
 
 
 #: Per-field width of the packed SimHash accumulators: 4 fields × 16 bits

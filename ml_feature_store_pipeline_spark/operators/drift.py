@@ -105,7 +105,7 @@ def key_skew_profile(df: DataFrame, key_cols: list[str], *, top_n: int = 20) -> 
     This is the pre-flight check for every partitionBy/groupBy/join-key
     decision in this repo (as-of joins, sessionization, dedup buckets): a
     key with share ≫ 1/shuffle_partitions predicts a straggler task and
-    argues for salting (:func:`~.joins.salted_join`), time-bucketing
+    argues for salting the hot key, time-bucketing
     (:func:`~.joins.asof_join_bucketed`), or AQE skew splitting.
 
     Cost: one partial-aggregated groupBy on the key (the same shuffle the
@@ -174,16 +174,6 @@ def js_divergence_table(
         F.round(q, round_digits).alias("q"),
         F.round(0.5 * (term(p) + term(q)), round_digits).alias("jsd_contrib"),
     )
-
-
-def js_divergence(
-    expected: DataFrame, actual: DataFrame, cat_col: str
-) -> float:
-    """Scalar JSD in nats (≤ ln 2 ≈ 0.693); collect is |categories| rows."""
-    rows = js_divergence_table(expected, actual, cat_col).agg(
-        F.sum("jsd_contrib").alias("jsd")
-    ).collect()
-    return float(rows[0]["jsd"] or 0.0)
 
 
 def categorical_entropy(

@@ -20,12 +20,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def broadcast_join(big: DataFrame, small: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Equi join with an explicit broadcast of the small side — dims like
-    region/nation/part always take this path; no shuffle of the big side."""
-    return big.join(F.broadcast(small), on, how)
-
-
 def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     """EXISTS (reference D2's scalable form — B2's IN-list as a real join)."""
     return left.join(right, on, "left_semi")
@@ -358,21 +352,3 @@ def interval_join_bucketed(
         & (F.col(value_col) < F.col(hi_col))
     )
     return fb.join(ib, cond, how).drop("__b", "__bi")
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew mitigation: replicate the small side across ``salt_buckets``
-    salts and scatter the big side's hot keys uniformly. Prefer AQE's
-    skew-join splitting (enabled in session conf); use this when a single
-    key is pathological enough to defeat it."""
-    salted_left = left.withColumn("__salt", (F.rand(42) * salt_buckets).cast("int"))
-    salts = left.sparkSession.range(salt_buckets).select(F.col("id").cast("int").alias("__salt"))
-    salted_right = right.crossJoin(F.broadcast(salts))
-    out = salted_left.join(salted_right, [key, "__salt"], how)
-    return out.drop("__salt")

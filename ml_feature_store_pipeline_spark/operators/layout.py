@@ -1,91 +1,16 @@
-"""Multi-dimensional data layout (Z-order) for scan pruning.
+"""Training-export layout and scan-pruning measurement.
 
-Parquet pruning is only as good as the min/max stats per file/row-group,
-and those are only tight for columns the data is SORTED by. A linear sort
-gives perfect pruning on its leading column and none on the others.
-Interleaving the bits of several columns' bucket ids (a Z-/Morton curve)
-gives every interleaved column locality, so selective filters on ANY of
-them skip most files — the layout trick behind Delta/Iceberg `ZORDER BY`,
-here as a plain DataFrame → partitioned-write recipe.
-
-Everything is Column expressions (codegen): per-column fixed-width bucket
-ids from a broadcast min/max row, bit interleave via shifts/ors, then
-``repartitionByRange`` + ``sortWithinPartitions`` on the z-value. One
-range exchange (with Spark's sampling job) — the same cost as any global
-sort layout, but pruning-effective on all dimensions at once.
+- :func:`training_shards` / :func:`write_training_shards` — deterministic
+  md5 shard ids and a reproducible within-shard order, written as one
+  ``shard=K/`` directory per shard with a single exchange.
+- :func:`pruning_audit` — simulates min/max file pruning for candidate
+  sort layouts, so a table's layout is chosen before paying the rewrite.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-#: bits per dimension; 2 dims × 16 bits = 32-bit z-values (fits a long
-#: comfortably and gives 65k buckets per dimension — far finer than any
-#: realistic file count)
-DEFAULT_BITS = 16
-
-
-def _bucket_id(col: Column, mn: Column, mx: Column, bits: int) -> Column:
-    """Fixed-width bucket id in [0, 2^bits): rank-free normalization from a
-    broadcast (min, max) — no window, no second shuffle. Degenerate range
-    (min == max) maps to bucket 0; nulls sort first (bucket 0)."""
-    span = mx.cast("double") - mn.cast("double")
-    frac = F.when(span > 0, (col.cast("double") - mn.cast("double")) / span).otherwise(F.lit(0.0))
-    scaled = F.least(
-        F.floor(frac * (1 << bits)).cast("long"), F.lit((1 << bits) - 1)
-    )
-    return F.coalesce(F.greatest(scaled, F.lit(0)), F.lit(0))
-
-
-def zvalue(bucket_ids: list[Column], bits: int = DEFAULT_BITS) -> Column:
-    """Morton interleave: bit j of dimension i lands at position
-    ``j * ndims + i``. A static unrolled expression — ``bits × ndims``
-    shift/or terms, all inside whole-stage codegen."""
-    ndims = len(bucket_ids)
-    z = F.lit(0).cast("long")
-    for i, b in enumerate(bucket_ids):
-        for j in range(bits):
-            bit = F.shiftright(b, j).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, j * ndims + i))
-    return z
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    *,
-    n_files: int,
-    bits: int = DEFAULT_BITS,
-) -> None:
-    """Write ``df`` to ``path`` laid out along the Z-curve of ``cols``.
-
-    Plan: one tiny min/max agg (broadcast), z-value projection,
-    ``repartitionByRange(n_files, z)`` (range exchange; Spark samples
-    bounds) + ``sortWithinPartitions(z)`` so row-group stats inside each
-    file are tight too. The z column is dropped before writing — layout is
-    invisible to readers except through pruning.
-    """
-    if len(cols) < 2:
-        raise ValueError("z-ordering needs >= 2 columns; use a plain sort for 1")
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-    ranges = df.agg(*aggs)
-    buckets = [
-        _bucket_id(F.col(c), F.col(f"__mn_{c}"), F.col(f"__mx_{c}"), bits)
-        for c in cols
-    ]
-    out = (
-        df.crossJoin(F.broadcast(ranges))
-        .withColumn("__z", zvalue(buckets, bits))
-        .select(*df.columns, "__z")
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-    out.write.mode("overwrite").parquet(path)
 
 
 def training_shards(

@@ -9,12 +9,11 @@ Pipelines over the built-in distributed estimators/transformers:
   exists for cross-engine oracle parity; this one for MLlib interop);
 - ``BucketedRandomProjectionLSH`` approximate nearest neighbors over the
   embeddings table (Euclidean-bucketed ANN — complements the sign-LSH
-  cosine variant in ``operators.similarity``);
-- ``StandardScaler`` embedding normalization.
+  cosine variant in ``operators.similarity``).
 
 Everything is fit/transform on DataFrames — estimators run distributed
-aggregation jobs (IDF's document frequencies, scaler's moments) and
-transformers are narrow per-row ops.
+aggregation jobs (IDF's document frequencies) and transformers are narrow
+per-row ops.
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ from pyspark.ml.feature import (
     MinHashLSH,
     BucketedRandomProjectionLSH,
     RegexTokenizer,
-    StandardScaler,
 )
 from pyspark.ml.functions import array_to_vector, vector_to_array
 from pyspark.sql import DataFrame
@@ -135,18 +133,6 @@ def brp_ann(
     )
     w = Window.partitionBy(query_id).orderBy(F.asc("distance"), F.asc(corpus_id))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def standardize_embeddings(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Zero-mean/unit-variance embedding scaling (fit = one moments job);
-    returns (id, scaled array<double>)."""
-    as_vec = df.select(F.col(id_col), array_to_vector(F.col(vec_col)).alias("__v"))
-    model = StandardScaler(inputCol="__v", outputCol="__scaled", withMean=True, withStd=True).fit(as_vec)
-    return model.transform(as_vec).select(
-        F.col(id_col), vector_to_array("__scaled").alias("scaled_embedding")
-    )
 
 
 def quality_classifier_scores(

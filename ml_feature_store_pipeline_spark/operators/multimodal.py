@@ -8,12 +8,10 @@ partitions bound worker memory).
 
 The decode step is REAL for binary PPM (P6): a dependency-free numpy
 parser turns header + raw RGB bytes into an (h, w, 3) pixel array and
-channel statistics — so the path genuinely exercises bytes → pixels →
-features. Formats that need an external codec (JPEG/PNG magic detected)
-raise ``NotImplementedError`` inside the executors' first batch: this
-container ships no PIL/ffmpeg, and silently faking those would hide it.
-A hash-derived stub (``fake=True``) remains for plumbing tests that only
-care about Arrow batching, not pixels.
+exact integer channel statistics — so the path genuinely exercises bytes
+→ pixels → statistics. Payloads that are not P6 (JPEG/PNG need codecs no
+dependency here provides) raise ``ValueError`` in the executors' first
+batch rather than decode to something made up.
 """
 
 from __future__ import annotations
@@ -35,15 +33,6 @@ MEDIA_META_STRUCT = T.StructType(
         T.StructField("width", T.IntegerType(), True),
         T.StructField("height", T.IntegerType(), True),
         T.StructField("duration_ms", T.LongType(), True),
-    ]
-)
-
-IMAGE_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("sha1", T.StringType(), True),
-        T.StructField("features", T.ArrayType(T.FloatType()), True),
     ]
 )
 
@@ -111,15 +100,6 @@ def decode_ppm(payload: bytes) -> np.ndarray:
     return np.frombuffer(data, dtype=np.uint8).reshape(h, w, 3)
 
 
-def ppm_features(pixels: np.ndarray) -> list[float]:
-    """The 8 base image features, each scaled into [0, 1]: per-channel
-    means and population stds (R, G, B), then overall mean and std."""
-    px = pixels.astype(np.float64)
-    means = px.mean(axis=(0, 1)) / 255.0
-    stds = px.std(axis=(0, 1)) / 255.0
-    return [*means, *stds, float(px.mean() / 255.0), float(px.std() / 255.0)]
-
-
 def _fake_pixels(text: str, width: int, height: int) -> np.ndarray:
     """Deterministic pseudo-image from a text seed: a linear byte ramp
     ``(i*a + b) mod 256`` with (a, b) drawn from md5(text) — reproducible
@@ -157,74 +137,19 @@ def attach_fake_payload(
     )
 
 
-def decode_image_features(
-    df: DataFrame,
-    *,
-    feature_dim: int = 8,
-    fake: bool = False,
-    batch_partitions: int | None = None,
-) -> DataFrame:
-    """Decode payloads → fixed-size feature vectors via ``mapInPandas``.
-
-    The real path dispatches on magic bytes: binary PPM decodes with the
-    numpy parser (header → pixel array → channel mean/std features);
-    JPEG/PNG — or anything else — raise ``NotImplementedError`` in the
-    executors' first batch (fail-fast: those codecs aren't in this
-    container). ``fake=True`` keeps the sha1-derived stub features for
-    tests that exercise only the Arrow plumbing.
-
-    Feature vectors are ``feature_dim`` floats in [0, 1]: the 8 base
-    stats (see :func:`ppm_features`) truncated, or zero-padded beyond 8.
-    """
-    if batch_partitions:
-        df = df.repartition(batch_partitions)
-
-    def fit(vals: list[float]) -> list[float]:
-        return (vals + [0.0] * feature_dim)[:feature_dim]
-
-    def real_features(b: bytes) -> list[float]:
-        if b.startswith(b"P6"):
-            return fit(ppm_features(decode_ppm(b)))
-        magic = "jpeg" if b.startswith(b"\xff\xd8") else "png" if b.startswith(b"\x89PNG") else "unknown"
-        raise NotImplementedError(
-            f"image codecs unavailable in this environment for format={magic}; "
-            "supply binary PPM (P6) payloads or use fake=True stub features"
-        )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "sha1": pdf["payload"].map(lambda b: hashlib.sha1(b).hexdigest()),
-                }
-            )
-            if fake:
-                out["features"] = out["sha1"].map(
-                    lambda h: fit([int(h[2 * i : 2 * i + 2], 16) / 255.0 for i in range(8)])
-                )
-            else:
-                out["features"] = pdf["payload"].map(real_features)
-            yield out
-
-    return df.mapInPandas(decode, schema=IMAGE_FEATURES_SCHEMA)
-
-
 def decode_image_stats(df: DataFrame) -> DataFrame:
     """Decode PPM payloads → EXACT integer pixel statistics per image:
     parsed header dims plus per-channel pixel sums and the global
     sum-of-squares (all int64, no float rounding anywhere).
 
-    This is the oracle-checkable face of the decode path: the float
-    features of :func:`decode_image_features` are pure functions of these
-    sums, but float means/stds can't be hash-compared across engines,
-    while integer sums can — an independent oracle that re-derives the
-    expected pixels from the generation formula pins the ENTIRE
-    bytes→header-parse→pixel-reconstruction path exactly (any codec bug —
-    off-by-one header skip, channel swap, truncation — shifts a sum).
-    Same Arrow-batched ``mapInPandas`` shape as the feature decode:
-    payloads never touch the driver.
+    This is the oracle-checkable face of the decode path: per-channel
+    means and stds are pure functions of these sums, but float means/stds
+    can't be hash-compared across engines, while integer sums can — an
+    independent oracle that re-derives the expected pixels from the
+    generation formula pins the ENTIRE bytes→header-parse→pixel-
+    reconstruction path exactly (any codec bug — off-by-one header skip,
+    channel swap, truncation — shifts a sum). Arrow-batched
+    ``mapInPandas``: payloads never touch the driver.
     """
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -575,7 +500,18 @@ _PHASH_BIT_WEIGHTS = np.left_shift(
 
 def phash_pixels_batch(stack: np.ndarray) -> np.ndarray:
     """Vectorized pHash of a same-shape frame stack ``(F, h, w, 3)`` →
-    ``(F,)`` int64 hashes. One grayscale reduction, one fancy-index
+    ``(F,)`` int64 hashes; ``phash_pixels_batch(px[None])[0]`` hashes one
+    image.
+
+    The hash is the classic 64-bit DCT pHash (public recipe: grayscale →
+    32×32 nearest-neighbor resize → 2-D DCT-II → top-left 8×8
+    low-frequency block → bit i set iff coefficient i > median of the
+    block). Robust to resizing and small pixel noise; hamming distance
+    between hashes ranks visual similarity. Pure numpy (DCT as a
+    basis-matrix product), bit-exact across platforms, returned SIGNED
+    (bit 63 → sign) so it stores in a Spark ``long``.
+
+    One grayscale reduction, one fancy-index
     resize, one axis-wise median + bit-pack for the WHOLE stack — r7:
     per-frame numpy calls on tiny frames were ~80% of the
     video-fingerprint wall time (small-array dispatch overhead, not
@@ -618,19 +554,6 @@ def phash_many(pixel_list: list[np.ndarray]) -> np.ndarray:
     for idxs in by_shape.values():
         out[idxs] = phash_pixels_batch(np.stack([pixel_list[i] for i in idxs]))
     return out
-
-
-def phash_pixels(pixels: np.ndarray) -> int:
-    """64-bit perceptual hash of an ``(h, w, 3)`` uint8 image — the
-    classic DCT pHash (public recipe: grayscale → 32×32 nearest-neighbor
-    resize → 2-D DCT-II → top-left 8×8 low-frequency block → bit i set
-    iff coefficient i > median of the block). Robust to resizing and
-    small pixel noise; hamming distance between hashes ranks visual
-    similarity. Pure numpy (DCT as a basis-matrix product), bit-exact
-    across platforms. Returned as a SIGNED 64-bit int (bit 63 → sign)
-    so it stores in a Spark ``long``. Scalar facade over
-    :func:`phash_pixels_batch` — hot paths hash whole stacks."""
-    return int(phash_pixels_batch(pixels[None, ...])[0])
 
 
 def phash_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -705,18 +628,6 @@ def afp_audio(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def vhash_frames(frames: list[np.ndarray]) -> int:
-    """64-bit video fingerprint: MAJORITY BIT over the per-frame pHashes —
-    bit i of the video hash is set iff bit i is set in at least half the
-    frames. Order-insensitive and sampling-tolerant by construction: a
-    re-encoded video with reordered, dropped, or every-k-sampled frames
-    keeps a nearby (often identical) hash, exactly the robustness frame
-    sampling needs at scale. Signed 64-bit for Spark ``long`` storage."""
-    if not frames:
-        return 0
-    return _fold_majority(phash_many(frames).view(np.uint64))
-
-
 def _fold_majority(hashes: np.ndarray) -> int:
     """Majority-bit fold of a non-empty uint64 hash array → signed int.
     Unpacks all 64 bit-planes at once: bit k of the LITTLE-ENDIAN uint64
@@ -741,7 +652,11 @@ def _fold_majority(hashes: np.ndarray) -> int:
 def vhash_video(df: DataFrame, id_col: str = "doc_id", *, every_k: int = 1) -> DataFrame:
     """Per-video fingerprint over FSC1 ``payload`` rows: sample frames at
     the INDEX level (skipped frames never PPM-decode), pHash each sampled
-    frame, majority-fold to one 64-bit signature. Arrow-batched
+    frame, majority-fold to one 64-bit signature (:func:`_fold_majority`:
+    bit i is set iff it is set in at least half the frames). The fold is
+    order-insensitive and sampling-tolerant by construction: a re-encoded
+    video with reordered, dropped, or every-k-sampled frames keeps a
+    nearby (often identical) hash. Arrow-batched
     ``mapInPandas``; feed :func:`~.dedup.hamming_near_pairs` for
     near-duplicate video search — the same banded engine as SimHash,
     image pHash, and the audio fingerprint. All sampled frames of ALL

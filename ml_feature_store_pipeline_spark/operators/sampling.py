@@ -8,8 +8,6 @@ test as data grows (a new row's split is a pure function of its key).
 
 All expressions are hex-string → integer conversions inside codegen — no
 shuffle, no UDF; a sample is a pushed-down filter on top of the scan.
-``stratified_sample`` wraps ``sampleBy`` for the seeded-random variant and
-is flagged non-reproducible across engines.
 """
 
 from __future__ import annotations
@@ -74,16 +72,6 @@ def split_column(
     return F.when(hash_bucket(key, buckets, salt) < cut, F.lit("test")).otherwise(
         F.lit("train")
     )
-
-
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict, seed: int = 42
-) -> DataFrame:
-    """Per-stratum random sampling (``sampleBy``). Seeded but NOT
-    engine-portable or partitioning-stable — prefer
-    :func:`stratified_sample_deterministic` for anything that must be
-    reproduced."""
-    return df.sampleBy(strata_col, fractions, seed)
 
 
 def stratified_sample_deterministic(

@@ -18,16 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions import cosine_similarity, dot, l2_norm, local_frame
-
-
-def _normed_cosine(a: str, a_norm: str, b: str, b_norm: str) -> Column:
-    """:func:`..functions.cosine_similarity` of vector columns ``a`` and
-    ``b`` from their :func:`..functions.l2_norm` columns, projected once
-    per vector before the pairing: the same expression on the same
-    inputs, so the doubles (NULL cases included) are identical, without
-    recomputing both norms for every pair."""
-    return dot(F.col(a), F.col(b)) / (F.col(a_norm) * F.col(b_norm))
+from ..functions import cosine_similarity, dot, l2_norm, local_frame, normed_cosine
 
 
 def _normalized(df: DataFrame, vec_col: str) -> DataFrame:
@@ -60,7 +51,9 @@ def cosine_topk(
     scored = c.crossJoin(F.broadcast(q)).select(
         query_id,
         corpus_id,
-        _normed_cosine("__qv", "__qn", "__cv", "__cn").alias("cosine"),
+        normed_cosine(
+            dot(F.col("__qv"), F.col("__cv")), F.col("__qn"), F.col("__cn")
+        ).alias("cosine"),
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
     return (
@@ -214,7 +207,11 @@ def lsh_topk(
         .distinct()
     )
     scored = cands.select(
-        query_id, corpus_id, _normed_cosine("__qv", "__qn", "__cv", "__cn").alias("cosine")
+        query_id,
+        corpus_id,
+        normed_cosine(
+            dot(F.col("__qv"), F.col("__cv")), F.col("__qn"), F.col("__cn")
+        ).alias("cosine"),
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
     return (
@@ -416,7 +413,12 @@ def ivf_build(
     # is persisted too — explicit full-corpus fits are small-corpus
     # calls by contract (the auto path always samples past
     # 100·n_cells).
-    fit_input = train.select(array_to_vector(F.col(vec_col)).alias("__v"))
+    # _normalized maps NULL, zero and NULL-element vectors to NULL; they
+    # cannot be placed (array_to_vector throws on them) and, as in
+    # _nearest_cells, never score, so the fit skips them
+    fit_input = train.filter(F.col(vec_col).isNotNull()).select(
+        array_to_vector(F.col(vec_col)).alias("__v")
+    )
     # FIT-PARTITION POLICY (r13): clamp the persisted fit input to
     # ~1M distance evaluations (n_train·n_cells pairs) per task, capped
     # at the cluster parallelism — MLlib schedules ~25 driver jobs per
@@ -462,21 +464,9 @@ def ivf_build(
     return cent, assigned
 
 
-def collect_centers(centroids: DataFrame) -> list[tuple[int, list[float]]]:
-    """One-time driver-side materialization of an IVF centroid table for
-    :func:`ivf_query`'s ``collected_centers`` pass-through: a
-    repeated-probe caller collects once per index lifetime instead of
-    once per probe. Bounded by the 65536-cell cap ("small by
-    contract")."""
-    return [
-        (int(r[0]), list(r[1]))
-        for r in centroids.select("cell", "center").collect()
-    ]
-
-
 def ivf_query(
     queries: DataFrame,
-    centroids: DataFrame | None,
+    centroids: DataFrame,
     inverted_lists: DataFrame,
     *,
     query_id: str = "query_id",
@@ -484,7 +474,6 @@ def ivf_query(
     vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 4,
-    collected_centers: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Probe a prebuilt IVF index (:func:`ivf_build`, possibly read back
     from parquet): each query scores only the inverted lists of its
@@ -496,23 +485,11 @@ def ivf_query(
     the |queries|·n_cells expansion, the r11 SortAggregate lesson's
     window-shaped twin). The only shuffle left is the final per-query
     top-k.
-
-    ``collected_centers`` — optional (cell, center) rows, e.g.
-    ``collect_centers(centroids)`` — skips the per-call centroid collect:
-    a repeated-probe caller (many query batches against one standing
-    index) pays ONE collect per index lifetime instead of one per probe
-    (the shared-count ``n_corpus`` pattern, r11 verdict). Results are
-    bit-identical: rows are re-sorted by cell id here either way.
     """
     qn = _normalized(queries.select(F.col(query_id), F.col(vec_col)), vec_col)
     # row order sorted by cell id so the stable-argsort tiebreak matches
     # the (distance asc, cell asc) rank-window rule this replaces
-    raw = (
-        collected_centers
-        if collected_centers is not None
-        else centroids.select("cell", "center").collect()
-    )
-    crows = sorted((int(r[0]), r[1]) for r in raw)
+    crows = sorted((int(r[0]), r[1]) for r in centroids.select("cell", "center").collect())
     probes = _nearest_cells(
         qn,
         [[float(x) for x in center] for _, center in crows],
@@ -525,7 +502,9 @@ def ivf_query(
     scored = probes.join(lists, "cell").select(
         query_id,
         corpus_id,
-        _normed_cosine("__qv", "__qn", "__cv", "__cn").alias("cosine"),
+        normed_cosine(
+            dot(F.col("__qv"), F.col("__cv")), F.col("__qn"), F.col("__cn")
+        ).alias("cosine"),
     )
     w = Window.partitionBy(query_id).orderBy(F.desc("cosine"), F.asc(corpus_id))
     return (
@@ -662,7 +641,11 @@ def embedding_near_dup_pairs(
         )
     return (
         cands.select(
-            "id_a", "id_b", _normed_cosine("__va", "__na", "__vb", "__nb").alias("cosine")
+            "id_a",
+            "id_b",
+            normed_cosine(
+                dot(F.col("__va"), F.col("__vb")), F.col("__na"), F.col("__nb")
+            ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -736,8 +719,15 @@ def cosine_topk_blas(
 
 
 def _centroid_pick(corpus: DataFrame, id_col: str, vec_col: str, n_cells: int) -> list:
-    """The vectors :func:`deterministic_centroids` picks, in cell order:
-    one ``orderBy.limit`` collect."""
+    """Engine-portable centroid pick for :func:`semantic_dedup`: the
+    ``n_cells`` corpus vectors whose md5 hash fraction of the id is
+    smallest, in cell order (a deterministic uniform sample — md5 of the
+    id is a fixed pseudo-random permutation, so this is k random seeds
+    that every engine, run, and partitioning agrees on), from one
+    ``orderBy.limit`` collect. The DuckDB oracle re-derives the same
+    centroids; pass a KMeans-fit table (e.g. :func:`ivf_build`'s
+    centroids) when cluster quality matters more than cross-engine
+    determinism."""
     from .sketches import hash_fraction
 
     rows = (
@@ -747,32 +737,6 @@ def _centroid_pick(corpus: DataFrame, id_col: str, vec_col: str, n_cells: int) -
         .collect()
     )
     return [r[0] for r in rows]
-
-
-def deterministic_centroids(
-    corpus: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding", n_cells: int = 16
-) -> DataFrame:
-    """Engine-portable centroid pick for :func:`semantic_dedup`: the
-    ``n_cells`` corpus vectors whose md5 hash fraction of the id is
-    smallest (a deterministic uniform sample — md5 of the id is a fixed
-    pseudo-random permutation, so this is k random seeds that every
-    engine, run, and partitioning agrees on). Returns (cell, center),
-    built on the driver from one ``orderBy.limit`` collect.
-
-    Use this instead of a KMeans fit when the pipeline must be replayable
-    bit-for-bit (the DuckDB oracle re-derives the same centroids); pass a
-    KMeans-fit table (e.g. :func:`ivf_build`'s centroids) when cluster
-    quality matters more than cross-engine determinism."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("center", corpus.schema[vec_col].dataType),
-        ]
-    )
-    centers = _centroid_pick(corpus, id_col, vec_col, n_cells)
-    return local_frame(corpus.sparkSession, enumerate(centers), schema)
 
 
 def auto_n_cells(n_rows: int, target_cell_size: int) -> int:
@@ -878,7 +842,7 @@ def semantic_dedup(
     growth (total pair work grows linearly, not quadratically). Pass an
     explicit ``n_cells`` to skip the count job or pin a knob.
 
-    With ``centroids=None``, uses :func:`deterministic_centroids`, making
+    With ``centroids=None``, uses :func:`_centroid_pick`, making
     the whole pipeline engine-replayable (exact DuckDB oracle incl. the
     connected-components closure).
 
@@ -1111,7 +1075,7 @@ def semantic_decontaminate(
     Each vector's norm is taken once: the train norm is a column projected
     before the join, and each eval vector carries its norm in the
     broadcast row, so the lambda only takes the dot product (the
-    :func:`_normed_cosine` rule; the values are identical)."""
+    :func:`..functions.normed_cosine` rule; the values are identical)."""
     v = F.col(vec_col)
     ev_row = eval_df.agg(
         F.collect_list(
@@ -1121,7 +1085,7 @@ def semantic_decontaminate(
     max_cos = F.round(
         F.array_max(
             F.transform(
-                F.col("__evs"), lambda e: dot(v, e["v"]) / (F.col("__tn") * e["n"])
+                F.col("__evs"), lambda e: normed_cosine(dot(v, e["v"]), F.col("__tn"), e["n"])
             )
         ),
         round_digits,
@@ -1535,9 +1499,10 @@ def mmr_rerank(
     scored0 = c.crossJoin(F.broadcast(q)).select(
         query_id,
         corpus_id,
-        F.round(_normed_cosine("__qv", "__qn", vec_col, "__cn"), round_digits).alias(
-            "relevance"
-        ),
+        F.round(
+            normed_cosine(dot(F.col("__qv"), F.col(vec_col)), F.col("__qn"), F.col("__cn")),
+            round_digits,
+        ).alias("relevance"),
         F.col(vec_col).alias("__v"),
     )
     wp = Window.partitionBy(query_id).orderBy(F.desc("relevance"), F.asc(corpus_id))
@@ -1674,7 +1639,7 @@ def pq_build(
     in RAM.
 
     Sub-centroids are the sub-slices of the ``k_codes`` corpus vectors
-    with smallest md5 hash fraction (:func:`deterministic_centroids`'
+    with smallest md5 hash fraction (:func:`_centroid_pick`'s
     engine-portable sample — no KMeans object, fully replayable).
     Encoding is pure codegen: per subspace, an ``array_position(argmin)``
     over the literal codebook — zero joins, zero shuffles, one scan.
@@ -1957,9 +1922,9 @@ def label_centroid_distances(
         .select(
             "label_a",
             "label_b",
-            F.round(F.col("__dot") / (F.col("__na") * F.col("__nb")), round_digits).alias(
-                "cosine"
-            ),
+            F.round(
+                normed_cosine(F.col("__dot"), F.col("__na"), F.col("__nb")), round_digits
+            ).alias("cosine"),
         )
     )
 

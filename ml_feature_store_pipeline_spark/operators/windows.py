@@ -37,36 +37,6 @@ def top_n_per_group(
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= n)
 
 
-def running_agg(
-    df: DataFrame,
-    group_cols: list[str],
-    order_col: str,
-    agg_col: str,
-    out_col: str = "running",
-    fn=F.sum,
-) -> DataFrame:
-    """Cumulative aggregate over an unbounded-preceding row frame."""
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(F.asc(order_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.withColumn(out_col, fn(agg_col).over(w))
-
-
-def with_lag_lead(
-    df: DataFrame,
-    group_cols: list[str],
-    order_col: str,
-    value_col: str,
-) -> DataFrame:
-    """Previous/next value per ordered group (analytic lag/lead)."""
-    w = Window.partitionBy(*group_cols).orderBy(F.asc(order_col))
-    return df.withColumn("prev_value", F.lag(value_col).over(w)).withColumn(
-        "next_value", F.lead(value_col).over(w)
-    )
-
-
 def sessionize(
     df: DataFrame,
     key_col: str,

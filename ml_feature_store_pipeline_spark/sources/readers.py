@@ -105,25 +105,3 @@ def read_csv_events(
         .schema(schema)
         .csv(path)
     )
-
-
-def read_json_events(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = RAW_EVENTS_SCHEMA,
-    timestamp_format: str | None = None,
-) -> DataFrame:
-    """JSON-lines scan — schema-explicit for the same reason as CSV: at
-    100 TB an inference pass is a full extra scan, and inferred types drift
-    run-to-run. Default timestamp parsing is Spark's ISO-8601 (what
-    ``write_json`` emits); pass ``timestamp_format`` for foreign feeds."""
-    reader = spark.read.schema(schema)
-    if timestamp_format:
-        reader = reader.option("timestampFormat", timestamp_format)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan. ORC carries its schema and supports the same predicate
-    pushdown / column pruning as parquet — no explicit schema needed."""
-    return spark.read.orc(path)

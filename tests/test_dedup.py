@@ -8,8 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 from test_plans import SF
 
-from ml_feature_store_pipeline_spark.functions import tokens
+from ml_feature_store_pipeline_spark.functions import ngrams, tokens
 from ml_feature_store_pipeline_spark.operators import dedup, text
+from ml_feature_store_pipeline_spark.quality import profile
 from ml_feature_store_pipeline_spark.sources.readers import read_table
 
 #: the sf0.01 driver test tables, beside the sf0.001 ones
@@ -60,14 +61,17 @@ def test_exact_dedup_digest_shuffle_carries_digest_not_text(spark, docs):
 
 
 def test_duplicate_stats(docs):
-    row = dedup.duplicate_stats(docs, ["text"]).collect()[0]
-    assert row["n_rows"] == 5 and row["n_distinct"] == 4
-    assert row["dup_fraction"] == pytest.approx(1 / 5)
+    """The C10 duplicate fraction over the content column comes from
+    ``quality.profile``."""
+    prof = profile(docs.select("text"))
+    assert prof.row_count == 5 and prof.distinct_rows == 4
+    assert prof.duplicate_percentage == pytest.approx(1 / 5)
 
 
 def _lambda_shingles(text_col, n):
-    """The per-position lambda form ``word_shingles`` had before it became
-    lambda-free: the reference its outputs must keep equal to."""
+    """The per-position lambda form word shingles had before
+    ``ngrams(tokens(text), n)`` became lambda-free: the reference its
+    outputs must keep equal to."""
     toks = tokens(text_col)
     count = F.size(toks) - F.lit(n - 1)
     make = F.transform(
@@ -83,7 +87,7 @@ def test_word_shingles(spark):
     )
 
     def shingles(n):
-        rows = df.select("i", dedup.word_shingles(F.col("text"), n).alias("sh")).collect()
+        rows = df.select("i", ngrams(tokens(F.col("text")), n).alias("sh")).collect()
         return [r["sh"] for r in sorted(rows)]
 
     out = shingles(3)
@@ -99,7 +103,7 @@ def test_word_shingles(spark):
 @pytest.mark.parametrize("n", [1, 2, 3, 5])
 def test_word_shingles_equal_the_lambda_form_on_documents(spark, n):
     docs = read_table(spark, SF001, "documents")
-    new = docs.select("doc_id", dedup.word_shingles(F.col("text"), n).alias("sh"))
+    new = docs.select("doc_id", ngrams(tokens(F.col("text")), n).alias("sh"))
     old = docs.select("doc_id", _lambda_shingles(F.col("text"), n).alias("sh"))
     assert sorted(new.collect()) == sorted(old.collect())
 
@@ -126,7 +130,7 @@ def test_no_tokenizer_inside_a_lambda(spark):
         [(1, "a b c d e f"), (2, "a b c")], "doc_id long, text string"
     )
     frames = {
-        "word_shingles": docs.select(dedup.word_shingles(F.col("text"), 3)),
+        "ngrams_of_tokens": docs.select(ngrams(tokens(F.col("text")), 3)),
         "chunk_documents": text.chunk_documents(docs, "doc_id", "text", chunk_tokens=3, overlap=1),
         "repetition_stats": text.repetition_stats(docs, "doc_id", "text"),
         "corpus_duplication_rate": text.corpus_duplication_rate(docs, "text", ngram=2),
@@ -690,24 +694,6 @@ def test_dedup_survivors_by_priority_keeps_best_member(spark):
     # the min-id rule keeps 1 instead of 2 — priorities really steer
     plain = dedup_survivors(docs, pairs, "doc_id")
     assert sorted(r["doc_id"] for r in plain.collect()) == [1, 10, 20]
-
-
-def test_token_hash_matches_md5_prefix_and_is_engine_portable(spark):
-    """token_hash = first 8 md5 hex chars as a base-16 integer — pinned
-    against hashlib so any engine (or the SQL twin) can replay it."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from ml_feature_store_pipeline_spark.operators.dedup import token_hash
-
-    toks = ["spark", "", "Ġtoken", "日本語", "a" * 1000]
-    df = spark.createDataFrame([(t,) for t in toks], "t string")
-    got = {r["t"]: r["h"] for r in df.select("t", token_hash(F.col("t")).alias("h")).collect()}
-    for t in toks:
-        want = int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
-        assert got[t] == want
-        assert 0 <= got[t] < 2**32
 
 
 def test_substring_overlap_detects_guaranteed_run_and_counts_windows(spark):

@@ -106,24 +106,3 @@ def test_renamed_columns_driver_schema(spark):
     df = spark.createDataFrame(rows, "user_id long, event_type string, value double, ts timestamp")
     out = UserEventExtractor(amount_col="value", timestamp_col="ts").extract(df).collect()
     assert out[0]["total_purchases"] == 1
-
-
-def test_json_and_orc_round_trip(spark, events_frame, tmp_path):
-    """Source/sink breadth: events survive JSON-lines and ORC round-trips
-    with identical schema and values (timestamps included)."""
-    from ml_feature_store_pipeline_spark.sources.readers import read_json_events, read_orc
-    from ml_feature_store_pipeline_spark.sources.writers import write_json, write_orc
-
-    jp, op = str(tmp_path / "ev_json"), str(tmp_path / "ev_orc")
-    write_json(events_frame, jp)
-    write_orc(events_frame, op)
-
-    back_j = read_json_events(spark, jp)
-    back_o = read_orc(spark, op).select(*events_frame.columns)
-    # file formats don't round-trip nullability flags; names + types must
-    expected_types = [(f.name, f.dataType) for f in events_frame.schema.fields]
-    assert [(f.name, f.dataType) for f in back_j.schema.fields] == expected_types
-    assert [(f.name, f.dataType) for f in back_o.schema.fields] == expected_types
-    expected = sorted(map(tuple, events_frame.collect()))
-    assert sorted(map(tuple, back_j.collect())) == expected
-    assert sorted(map(tuple, back_o.collect())) == expected

@@ -198,23 +198,6 @@ def test_semi_anti_partition(spark):
     assert {r["k"] % 2 for r in anti.collect()} == {1}
 
 
-def test_salted_join_matches_plain_join(spark):
-    left = spark.createDataFrame([(i % 3, i) for i in range(100)], "k long, v long")
-    right = spark.createDataFrame([(0, "a"), (1, "b"), (2, "c")], "k long, name string")
-    plain = left.join(right, "k").groupBy("name").count()
-    salted = joins.salted_join(left, right, "k").groupBy("name").count()
-    assert {(r["name"], r["count"]) for r in plain.collect()} == {
-        (r["name"], r["count"]) for r in salted.collect()
-    }
-
-
-def test_broadcast_join_plan_is_broadcast(spark):
-    left = spark.createDataFrame([(i, i * 2) for i in range(100)], "k long, v long")
-    right = spark.createDataFrame([(1, "x")], "k long, tag string")
-    plan = joins.broadcast_join(left, right, "k")._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
 def test_interval_join_bucketed_matches_band_join(spark):
     fact = spark.createDataFrame(
         [(i, float(v)) for i, v in enumerate([0.0, 5.0, 49.9, 50.0, 120.0, 999.0])],

@@ -1,87 +1,8 @@
-"""Z-order layout: pruning effectiveness measured from real parquet stats."""
+"""Training-export sharding and the min/max pruning audit."""
 
 from __future__ import annotations
 
-import os
-
-import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
-
-from ml_feature_store_pipeline_spark.operators.layout import zorder_write, zvalue
-
-
-def _files(path):
-    return [os.path.join(path, n) for n in os.listdir(path) if n.endswith(".parquet")]
-
-
-def _files_matching(path, col, lo, hi):
-    """How many files COULD contain col in [lo, hi] per footer min/max —
-    exactly the pruning decision a reader makes."""
-    n = 0
-    for f in _files(path):
-        md = pq.ParquetFile(f).metadata
-        fmin, fmax = None, None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(
-                [md.row_group(rg).column(i).path_in_schema for i in range(md.num_columns)].index(col)
-            ).statistics
-            fmin = st.min if fmin is None else min(fmin, st.min)
-            fmax = st.max if fmax is None else max(fmax, st.max)
-        if fmax >= lo and fmin <= hi:
-            n += 1
-    return n
-
-
-@pytest.fixture(scope="module")
-def laid_out(spark, tmp_path_factory):
-    base = tmp_path_factory.mktemp("layout")
-    # two independent uniform dims: x, y in [0, 1024)
-    df = spark.range(200_000).select(
-        (F.xxhash64("id") % 1024).alias("x"),
-        (F.xxhash64("id", F.lit(1)) % 1024).alias("y"),
-    ).select(F.abs("x").alias("x"), F.abs("y").alias("y"))
-    zpath, lpath = str(base / "zorder"), str(base / "linear")
-    zorder_write(df, zpath, ["x", "y"], n_files=16)
-    df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(lpath)
-    return zpath, lpath
-
-
-def test_zorder_prunes_on_both_dimensions(laid_out):
-    zpath, _ = laid_out
-    total = len(_files(zpath))
-    assert total >= 12  # repartitionByRange(16) may merge a couple
-    # a 1/8-range filter on EITHER dim must skip at least half the files
-    assert _files_matching(zpath, "x", 0, 127) <= total / 2
-    assert _files_matching(zpath, "y", 0, 127) <= total / 2
-
-
-def test_linear_sort_prunes_only_leading_dim(laid_out):
-    _, lpath = laid_out
-    total = len(_files(lpath))
-    assert _files_matching(lpath, "x", 0, 127) <= max(total // 4, 2)
-    # ...but the non-sorted dim is unprunable: every file matches
-    assert _files_matching(lpath, "y", 0, 127) == total
-
-
-def test_zorder_preserves_data(spark, laid_out):
-    zpath, lpath = laid_out
-    a = spark.read.parquet(zpath).groupBy().agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("sx"), F.sum("y").alias("sy")
-    ).collect()[0]
-    b = spark.read.parquet(lpath).groupBy().agg(
-        F.count(F.lit(1)).alias("n"), F.sum("x").alias("sx"), F.sum("y").alias("sy")
-    ).collect()[0]
-    assert tuple(a) == tuple(b)
-
-
-def test_zvalue_interleaves_bits(spark):
-    df = spark.createDataFrame([(1, 0), (0, 1), (3, 3)], "a long, b long")
-    out = df.select(
-        zvalue([F.col("a"), F.col("b")], bits=2).alias("z")
-    ).collect()
-    # a occupies even bit positions, b odd: (1,0)->1, (0,1)->2, (3,3)->15
-    assert [r["z"] for r in out] == [1, 2, 15]
 
 
 def test_training_shards_balanced_reproducible_roundtrip(spark, tmp_path):

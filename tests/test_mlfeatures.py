@@ -57,19 +57,6 @@ def test_brp_ann_self_nearest(spark):
         assert best["distance"] == pytest.approx(0.0, abs=1e-9)
 
 
-def test_standardize_embeddings_moments(spark):
-    rng = np.random.default_rng(5)
-    vecs = rng.normal(loc=3.0, scale=2.0, size=(200, 4)).astype("f8")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(200)], "vec_id long, embedding array<float>"
-    )
-    out = mlfeatures.standardize_embeddings(df)
-    arr = np.array([r["scaled_embedding"] for r in out.collect()])
-    assert arr.shape == (200, 4)
-    np.testing.assert_allclose(arr.mean(axis=0), 0.0, atol=1e-6)
-    np.testing.assert_allclose(arr.std(axis=0, ddof=1), 1.0, atol=1e-2)
-
-
 def test_quality_classifier_separates_planted_label_and_pareto_keep(spark):
     """r7 GPT-3-style quality filter: LR over hashed TF-IDF must
     near-perfectly separate a label that is itself a text feature

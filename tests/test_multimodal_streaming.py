@@ -31,18 +31,6 @@ def test_payload_schema(payloads):
     assert len(payload) == 11 + 8 * 8 * 3                   # header + RGB body
 
 
-def test_decode_fake_is_deterministic(payloads):
-    a = {r["doc_id"]: r for r in multimodal.decode_image_features(payloads, fake=True).collect()}
-    b = {r["doc_id"]: r for r in multimodal.decode_image_features(payloads, fake=True, batch_partitions=3).collect()}
-    assert a.keys() == b.keys() == {1, 2, 3}
-    for k in a:
-        assert a[k]["sha1"] == b[k]["sha1"]
-        assert a[k]["features"] == b[k]["features"]
-        assert len(a[k]["features"]) == 8
-        assert all(0.0 <= x <= 1.0 for x in a[k]["features"])
-    assert a[1]["n_bytes"] == 11 + 8 * 8 * 3
-
-
 def test_ppm_roundtrip_and_real_decode_features(spark):
     import numpy as np
 
@@ -55,49 +43,41 @@ def test_ppm_roundtrip_and_real_decode_features(spark):
     assert (multimodal.decode_ppm(hdr_variant) == px).all()
 
     df = spark.createDataFrame([(7, payload)], "doc_id long, payload binary")
-    row = multimodal.decode_image_features(df).collect()[0]
+    row = multimodal.decode_image_stats(df).collect()[0]
     assert row["n_bytes"] == len(payload)
-    # means: R and G average 127.5/255 = 0.5, B is 0; stds likewise
-    exp_all_std = float(np.std([255, 0, 0, 0, 255, 0]) / 255.0)
-    got = row["features"]
-    assert got[0] == pytest.approx(0.5) and got[1] == pytest.approx(0.5) and got[2] == 0.0
-    assert got[3] == pytest.approx(0.5) and got[4] == pytest.approx(0.5) and got[5] == 0.0
-    assert got[6] == pytest.approx(85 / 255)
-    assert got[7] == pytest.approx(exp_all_std, rel=1e-6)
+    assert (row["width"], row["height"]) == (2, 1)
+    assert (row["r_sum"], row["g_sum"], row["b_sum"]) == (255, 255, 0)
+    assert row["px_sq_sum"] == 2 * 255 * 255
 
 
 def test_real_decode_matches_attached_payload_pixels(spark, payloads):
-    import numpy as np
-
     # end-to-end: attach (pandas-UDF PPM encode) → decode (numpy parse) —
-    # features must equal a local recomputation from the same pixel rule
-    got = {r["doc_id"]: r["features"] for r in multimodal.decode_image_features(payloads).collect()}
+    # the decoded pixels must equal the generation rule's, byte for byte
+    got = {r["doc_id"]: bytes(r["payload"]) for r in payloads.collect()}
     for doc_id, text in [(1, "first document"), (2, "second document"), (3, "")]:
         px = multimodal._fake_pixels(text, 8, 8)
-        exp = multimodal.ppm_features(px)
-        assert got[doc_id] == pytest.approx(exp, rel=1e-6), doc_id
+        assert (multimodal.decode_ppm(got[doc_id]) == px).all(), doc_id
 
 
 def test_decode_stats_exact_integers_consistent_with_features(spark, payloads):
+    import hashlib
+
     import numpy as np
 
-    # the oracle-facing integer stats must (a) equal a local recomputation
-    # from the pixel rule, and (b) determine the float features exactly
+    # the oracle-facing integer stats must equal numpy sums over the
+    # pixels the payload decodes to
     stats = {r["doc_id"]: r for r in multimodal.decode_image_stats(payloads).collect()}
-    feats = {r["doc_id"]: r for r in multimodal.decode_image_features(payloads).collect()}
-    for doc_id, text in [(1, "first document"), (2, "second document"), (3, "")]:
-        px = multimodal._fake_pixels(text, 8, 8).astype(np.int64)
-        s = stats[doc_id]
+    for r in payloads.collect():
+        b = bytes(r["payload"])
+        px = multimodal.decode_ppm(b).astype(np.int64)
+        s = stats[r["doc_id"]]
         assert (s["width"], s["height"]) == (8, 8)
-        assert s["n_bytes"] == 11 + 192 == feats[doc_id]["n_bytes"]
-        assert s["sha1"] == feats[doc_id]["sha1"]
+        assert s["n_bytes"] == 11 + 192 == len(b)
+        assert s["sha1"] == hashlib.sha1(b).hexdigest()
         assert s["r_sum"] == int(px[:, :, 0].sum())
         assert s["g_sum"] == int(px[:, :, 1].sum())
         assert s["b_sum"] == int(px[:, :, 2].sum())
         assert s["px_sq_sum"] == int((px * px).sum())
-        # features are a pure function of the sums: overall mean check
-        mean_all = (s["r_sum"] + s["g_sum"] + s["b_sum"]) / 192 / 255.0
-        assert feats[doc_id]["features"][6] == pytest.approx(mean_all, rel=1e-6)
 
 
 def test_decode_without_codec_raises(spark):
@@ -105,8 +85,8 @@ def test_decode_without_codec_raises(spark):
         [(1, b"\xff\xd8\xff\xe0 not decodable here")], "doc_id long, payload binary"
     )
     with pytest.raises(Exception) as exc_info:
-        multimodal.decode_image_features(jpegish, fake=False).collect()
-    assert "NotImplementedError" in str(exc_info.value) or "image codecs" in str(exc_info.value)
+        multimodal.decode_image_stats(jpegish).collect()
+    assert "not a binary PPM" in str(exc_info.value)
 
 
 def test_streaming_windowed_aggregation(spark, tmp_path):
@@ -290,6 +270,18 @@ def test_audio_stats_match_formula(spark):
         assert r["n_bytes"] == 44 + 2 * len(s)
 
 
+def _phash(pixels):
+    """One image's pHash: the one-frame stack of ``phash_pixels_batch``."""
+    return int(multimodal.phash_pixels_batch(pixels[None])[0])
+
+
+def _vhash(frames):
+    """A frame list's video hash: the majority fold of its pHashes."""
+    import numpy as np
+
+    return multimodal._fold_majority(multimodal.phash_many(frames).view(np.uint64))
+
+
 class TestPhash:
     def test_identical_images_collide_distinct_do_not(self, spark):
         from ml_feature_store_pipeline_spark.operators import multimodal
@@ -309,22 +301,18 @@ class TestPhash:
         import numpy as np
 
         from ml_feature_store_pipeline_spark.operators.dedup import hamming_near_pairs
-        from ml_feature_store_pipeline_spark.operators.multimodal import (
-            _fake_pixels,
-            encode_ppm,
-            phash_pixels,
-        )
+        from ml_feature_store_pipeline_spark.operators.multimodal import _fake_pixels
 
         base = _fake_pixels("noise-probe", 16, 16)
         noisy = base.copy()
         noisy[0, 0] = (int(noisy[0, 0, 0]) + 3) % 256  # one-pixel perturbation
-        d = phash_pixels(base) ^ phash_pixels(noisy)
+        d = _phash(base) ^ _phash(noisy)
         # synthetic ramp images put many DCT coefficients AT the median, so
         # a one-pixel edit flips a handful of boundary bits (natural images
         # are gentler); "near" here means ≪ the ~32 expected for unrelated
         assert bin(d & ((1 << 64) - 1)).count("1") <= 10
 
-        rows = [(1, int(phash_pixels(base))), (2, int(phash_pixels(noisy)))]
+        rows = [(1, _phash(base)), (2, _phash(noisy))]
         sig = spark.createDataFrame(rows, "doc_id long, phash long")
         pairs = hamming_near_pairs(sig, "doc_id", "phash", max_hamming=10).collect()
         assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
@@ -332,16 +320,13 @@ class TestPhash:
     def test_phash_resize_invariance(self, spark):
         """The same ramp image rendered at 8×8 and 32×32 hashes nearby —
         the property that makes pHash a RESIZE-robust dedup key."""
-        from ml_feature_store_pipeline_spark.operators.multimodal import (
-            _fake_pixels,
-            phash_pixels,
-        )
+        from ml_feature_store_pipeline_spark.operators.multimodal import _fake_pixels
 
-        small = phash_pixels(_fake_pixels("scale-probe", 8, 8))
+        small = _phash(_fake_pixels("scale-probe", 8, 8))
         # same generator formula at higher resolution is not pixel-identical
         # content, so just assert both are valid and deterministic
-        big1 = phash_pixels(_fake_pixels("scale-probe", 32, 32))
-        big2 = phash_pixels(_fake_pixels("scale-probe", 32, 32))
+        big1 = _phash(_fake_pixels("scale-probe", 32, 32))
+        big2 = _phash(_fake_pixels("scale-probe", 32, 32))
         assert big1 == big2 and isinstance(small, int)
 
     def test_phash_independent_of_batch_composition(self):
@@ -356,11 +341,7 @@ class TestPhash:
 
         import numpy as np
 
-        from ml_feature_store_pipeline_spark.operators.multimodal import (
-            phash_many,
-            phash_pixels,
-            phash_pixels_batch,
-        )
+        from ml_feature_store_pipeline_spark.operators.multimodal import phash_many
 
         rng = np.random.default_rng(11)
         frames = [
@@ -369,9 +350,8 @@ class TestPhash:
             for _ in range(10)
         ]
         full = phash_many(frames).tolist()
-        singles = [phash_pixels(f) for f in frames]
+        singles = [_phash(f) for f in frames]
         assert full == singles
-        assert [int(phash_pixels_batch(f[None, ...])[0]) for f in frames] == singles
         idx = list(range(len(frames)))
         random.Random(9).shuffle(idx)
         assert phash_many([frames[i] for i in idx]).tolist() == [full[i] for i in idx]
@@ -442,26 +422,18 @@ class TestVideoFingerprint:
         assert len({next(iter(v)) for v in by_key.values()}) == 3
 
     def test_fingerprint_is_frame_order_insensitive(self, spark):
-        from ml_feature_store_pipeline_spark.operators.multimodal import (
-            _fake_frame_pixels,
-            vhash_frames,
-        )
+        from ml_feature_store_pipeline_spark.operators.multimodal import _fake_frame_pixels
 
         frames = [_fake_frame_pixels("order-probe", f, 4, 4) for f in range(5)]
-        assert vhash_frames(frames) == vhash_frames(list(reversed(frames)))
+        assert _vhash(frames) == _vhash(list(reversed(frames)))
 
     def test_index_level_sampling_never_decodes_skipped_frames(self, spark):
         """every_k sampling must yield the majority hash of the SAMPLED
         frames only (and by construction never PPM-decodes the rest)."""
-        from ml_feature_store_pipeline_spark.operators.multimodal import (
-            _fake_frame_pixels,
-            encode_frames,
-            vhash_frames,
-        )
-        from ml_feature_store_pipeline_spark.operators import multimodal
+        from ml_feature_store_pipeline_spark.operators.multimodal import _fake_frame_pixels
 
         frames = [_fake_frame_pixels("sample-probe", f, 4, 4) for f in range(6)]
         docs = spark.createDataFrame([(1, "sample-probe")], "doc_id long, k string")
         payloads = multimodal.attach_fake_video(docs, "doc_id", "k", n_frames=6)
         got = multimodal.vhash_video(payloads, "doc_id", every_k=2).collect()[0]["vhash"]
-        assert got == vhash_frames(frames[::2])
+        assert got == _vhash(frames[::2])

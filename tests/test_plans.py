@@ -167,30 +167,6 @@ def test_q18_topk_is_take_ordered(spark, registry):
     assert "TakeOrderedAndProject" in plans.executed_plan(df)
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-bucketed tables must join without ANY exchange — the layout that
-    replaces recurring join shuffles at scale."""
-    from ml_feature_store_pipeline_spark.sources.writers import write_bucketed
-
-    events = read_table(spark, SF, "events").select("event_id", "user_id", "value")
-    users = read_table(spark, SF, "events").groupBy("user_id").count()
-    write_bucketed(events, "ev_b", ["user_id"], 4, path=str(tmp_path / "ev"))
-    write_bucketed(users, "us_b", ["user_id"], 4, path=str(tmp_path / "us"))
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("ev_b").join(spark.table("us_b"), "user_id")
-        assert plans.count_exchanges(joined) == 0
-        assert joined.count() == events.count()
-        # same join WITHOUT bucketing shuffles both sides
-        plain = events.join(users.withColumnRenamed("count", "n"), "user_id")
-        assert plans.count_exchanges(plain) >= 2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS ev_b")
-        spark.sql("DROP TABLE IF EXISTS us_b")
-
-
 def test_aqe_splits_skewed_join_partition(spark):
     """SCALE.md's skew claim, executed: one hot key dominating the build
     side must trigger AQE's skew-join split (skew=true in the final

@@ -56,16 +56,6 @@ def test_salt_gives_independent_samples(spark, ids):
     assert len(a & b) < len(a) / 2
 
 
-def test_stratified_sample_respects_fractions(spark):
-    df = spark.range(0, 4000).select(
-        F.col("id"), (F.col("id") % 2 == 0).cast("string").alias("stratum")
-    )
-    out = sampling.stratified_sample(df, "stratum", {"true": 0.5, "false": 0.1})
-    counts = {r["stratum"]: r["n"] for r in out.groupBy("stratum").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert counts["true"] == pytest.approx(1000, rel=0.2)
-    assert counts["false"] == pytest.approx(200, rel=0.35)
-
-
 def test_fold_column_partitions_keys_evenly(spark, ids):
     from ml_feature_store_pipeline_spark.operators.sampling import fold_column
 

@@ -119,6 +119,26 @@ def test_ivf_topk_full_probe_equals_exact(spark, corpus):
     ]
 
 
+def test_ivf_build_skips_unusable_vectors(spark, vectors):
+    """A NULL vector and a zero vector normalize to NULL: the KMeans fit
+    skips them as the cell assignment does, so the index builds, and a
+    full probe returns the brute-force top-k over the usable vectors."""
+    rows = [(i, [float(x) for x in vectors[i]]) for i in range(30)]
+    corpus = spark.createDataFrame(
+        rows + [(900, None), (_ZERO_VEC[0], _ZERO_VEC[1])], "vec_id long, embedding array<float>"
+    )
+    usable = corpus.filter(F.col("vec_id") < 900)
+    queries = usable.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    exact = similarity.cosine_topk(queries, usable, k=5).collect()
+    ivf = similarity.ivf_topk(queries, corpus, k=5, n_cells=4, nprobe=4).collect()
+    key = lambda r: (r["query_id"], r["rank"])
+    assert [(r["query_id"], r["vec_id"], r["rank"]) for r in sorted(ivf, key=key)] == [
+        (r["query_id"], r["vec_id"], r["rank"]) for r in sorted(exact, key=key)
+    ]
+
+
 def test_ivf_topk_partial_probe_finds_self(spark, corpus):
     """A query vector always lands in the cell it was assigned to, so even
     nprobe=1 must find the vector itself at rank 1."""
@@ -342,15 +362,15 @@ def test_semantic_dedup_auto_n_cells(spark):
 
 
 def test_deterministic_centroids_stable_across_partitioning(spark):
-    from ml_feature_store_pipeline_spark.operators.similarity import deterministic_centroids
+    from ml_feature_store_pipeline_spark.operators.similarity import _centroid_pick
 
     emb = spark.range(100).select(
         F.col("id").alias("vec_id"),
         F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
     )
-    a = deterministic_centroids(emb, n_cells=8).collect()
-    b = deterministic_centroids(emb.repartition(13), n_cells=8).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    a = _centroid_pick(emb, "vec_id", "embedding", 8)
+    b = _centroid_pick(emb.repartition(13), "vec_id", "embedding", 8)
+    assert len(a) == 8 and a == b
 
 
 def test_semantic_dedup_cell_cap_bounds_pairwise(spark):
@@ -1621,41 +1641,6 @@ def test_pin_concurrent_first_failure_cancels_siblings(spark):
     assert time.time() - t0 < 15, "sibling build was not cancelled promptly"
 
 
-def test_ivf_query_collected_centers_one_collect_per_index(spark, corpus):
-    """r12 (r11 VERDICT item 5): a repeated-probe caller passes
-    ``collect_centers(centroids)`` once per index lifetime; each
-    subsequent ``ivf_query`` call is then fully LAZY at plan build (the
-    per-call centroid collect is gone) and bit-identical to the
-    collect-per-probe path."""
-    cent, lists = similarity.ivf_build(corpus, n_cells=8)
-    q1 = corpus.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    q2 = corpus.filter((F.col("vec_id") >= 5) & (F.col("vec_id") < 10)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    centers = similarity.collect_centers(cent)
-
-    sc = spark.sparkContext
-    sc.setJobGroup("ivf-probe-lazy", "pre-collected centers: no plan-build jobs")
-    try:
-        a1 = similarity.ivf_query(
-            q1, None, lists, k=3, nprobe=3, collected_centers=centers
-        )
-        a2 = similarity.ivf_query(
-            q2, None, lists, k=3, nprobe=3, collected_centers=centers
-        )
-        probe_jobs = sc.statusTracker().getJobIdsForGroup("ivf-probe-lazy")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(probe_jobs) == [], "pre-collected probe ran a job at plan build"
-
-    for q, got in ((q1, a1), (q2, a2)):
-        ref = similarity.ivf_query(q, cent, lists, k=3, nprobe=3)
-        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
-
-
 def test_ivf_query_empty_centroids_returns_empty(spark, corpus):
     """r11 ADVICE: an empty centroid table (e.g. read back from an empty
     parquet) must yield an empty result — the old crossJoin shape joined
@@ -1957,14 +1942,11 @@ def _pairwise_cosines(queries, corpus):
 def test_cosine_topk_cosines_bit_equal_per_pair_cosine(spark, vectors, ansi):
     """Norms are projected once per vector before the join; the cosines
     stay bit-identical to per-pair ``cosine_similarity``, NULL cases
-    included. A zero vector divides by zero: NULL without ANSI, and under
-    ANSI both forms raise."""
-    rows = [(i, [float(x) for x in vectors[i]]) for i in range(12)] + _EDGE_VECS
+    included. A zero vector's cosine is NULL in both ANSI modes."""
+    rows = [(i, [float(x) for x in vectors[i]]) for i in range(12)] + _EDGE_VECS + [_ZERO_VEC]
     prev = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", ansi)
     try:
-        if ansi == "false":
-            rows.append(_ZERO_VEC)
         corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         queries = corpus.filter((F.col("vec_id") % 3 == 0) | (F.col("vec_id") >= 900))
         queries = queries.withColumnRenamed("vec_id", "query_id")
@@ -1973,17 +1955,46 @@ def test_cosine_topk_cosines_bit_equal_per_pair_cosine(spark, vectors, ansi):
             for r in similarity.cosine_topk(queries, corpus, k=len(rows)).collect()
         }
         assert got == _pairwise_cosines(queries, corpus)
-        assert "None" in got.values()
-        if ansi == "true":
-            with_zero = corpus.unionByName(spark.createDataFrame([_ZERO_VEC], corpus.schema))
-            for frame in (
-                similarity.cosine_topk(queries, with_zero, k=3),
-                queries.crossJoin(with_zero.withColumnRenamed("embedding", "__cv")).select(
-                    cosine_similarity(F.col("embedding"), F.col("__cv"))
-                ),
-            ):
-                with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-                    frame.collect()
+        # against the NaN vector the norm product is NaN, not 0: NaN cosine
+        zero, nan = _ZERO_VEC[0], _EDGE_VECS[3][0]
+        assert {v for (q, c), v in got.items() if zero in (q, c) and nan not in (q, c)} == {"None"}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def test_zero_vector_cosine_is_null_under_ansi(spark, vectors):
+    """Under ANSI a zero vector's cosine is NULL, as without ANSI, instead
+    of a ``DIVIDE_BY_ZERO`` that fails the whole query: the LSH top-k
+    carries it as NULL, decontamination gives it no score, and near-dup
+    pairs leave it out (``cosine_topk``: the test above). Two zero
+    vectors share every LSH bucket, so the bucketed operators do reach
+    the division."""
+    zeros = [(904, [0.0] * DIM), (905, [0.0] * DIM)]
+    rows = [(i, [float(x) for x in vectors[i]]) for i in range(12)] + zeros
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        queries = corpus.filter(F.col("vec_id").isin(0, 904))
+        queries = queries.withColumnRenamed("vec_id", "query_id")
+        out = similarity.lsh_topk(queries, corpus, k=len(rows), dim=DIM)
+        got = {(r["query_id"], r["vec_id"]): r["cosine"] for r in out.collect()}
+        assert got[(904, 904)] is None and got[(904, 905)] is None
+        assert all((v is None) == (904 in p or 905 in p) for p, v in got.items())
+
+        ev = corpus.filter(F.col("vec_id").isin(1, 905))
+        dec = {
+            r["vec_id"]: r
+            for r in similarity.semantic_decontaminate(corpus, ev, threshold=0.9).collect()
+        }
+        assert dec[904]["max_eval_cosine"] is None and not dec[904]["contaminated"]
+        assert dec[1]["max_eval_cosine"] == pytest.approx(1.0) and dec[1]["contaminated"]
+
+        for exact in (False, True):
+            pairs = similarity.embedding_near_dup_pairs(
+                corpus, dim=DIM, threshold=0.5, exact=exact
+            ).collect()
+            assert not {904, 905} & {i for r in pairs for i in (r["id_a"], r["id_b"])}
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
 

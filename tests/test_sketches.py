@@ -209,20 +209,6 @@ def test_bloom_xxhash_variant_no_false_negatives(spark):
     assert state.exceptAll(md5_state).count() > 0
 
 
-def test_bloom_probe_dense_equals_join_probe(spark):
-    keys = spark.range(0, 400).select((F.col("id") * 7).alias("k"))
-    state = sketches.bloom_state(keys, "k")
-    probe = spark.range(0, 3000).select(F.col("id").alias("k"))
-    a = sketches.bloom_probe(probe, state, "k").collect()
-    b = sketches.bloom_probe_dense(probe, state, "k").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    # the guard refuses unbounded collects
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        sketches.bloom_probe_dense(probe, state, "k", n_bits=1 << 24)
-
-
 # ---------------------------------------------------------------------------
 # histogram percentile rank (the zero-sort percent_rank path; r7)
 # ---------------------------------------------------------------------------

@@ -193,29 +193,6 @@ def test_yaml_config_roundtrip(tmp_path):
     assert "cache" in flat and "quality" in flat
 
 
-def test_compact_partition_merges_small_files(spark, tmp_path):
-    from ml_feature_store_pipeline_spark.sources.writers import compact_partition
-
-    path = str(tmp_path / "v1")
-    spark.range(10_000).selectExpr("id", "id * 2 AS x").repartition(40).write.parquet(path)
-    import os
-
-    before = [n for n in os.listdir(path) if n.endswith(".parquet")]
-    assert len(before) == 40
-    data_before = sorted(r["id"] for r in spark.read.parquet(path).collect())
-
-    res = compact_partition(spark, path, target_file_bytes=64 * 1024 * 1024)
-    assert res["compacted"] and res["files_before"] == 40
-    after = [n for n in os.listdir(path) if n.endswith(".parquet")]
-    assert len(after) == res["files_after"] < 40
-    # data survives byte-for-byte (same ids, same projection)
-    assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == data_before
-
-    # idempotent: second run is a no-op
-    res2 = compact_partition(spark, path, target_file_bytes=64 * 1024 * 1024)
-    assert not res2["compacted"]
-
-
 def test_time_travel_read(spark, tmp_path, features):
     import time as _time
 

@@ -1,4 +1,4 @@
-"""Window operator tests: top-n, running aggregates, lag/lead, sessionize."""
+"""Window operator tests: top-n, sessionize and the rest of windows.py."""
 
 from __future__ import annotations
 
@@ -29,20 +29,6 @@ def test_top_n_tiebreak_deterministic(spark):
     df = spark.createDataFrame([("a", i, 1.0) for i in range(5)], "g string, id long, v double")
     out = windows.top_n_per_group(df, ["g"], "v", 2, tiebreak_cols=["id"])
     assert sorted(r["id"] for r in out.collect()) == [0, 1]
-
-
-def test_running_agg(spark):
-    df = spark.createDataFrame([("a", 1, 10.0), ("a", 2, 5.0), ("a", 3, 1.0)], "g string, o long, v double")
-    out = windows.running_agg(df, ["g"], "o", "v")
-    got = {r["o"]: r["running"] for r in out.collect()}
-    assert got == {1: 10.0, 2: 15.0, 3: 16.0}
-
-
-def test_lag_lead(spark):
-    df = spark.createDataFrame([("a", 1, 10.0), ("a", 2, 20.0)], "g string, o long, v double")
-    rows = {r["o"]: r for r in windows.with_lag_lead(df, ["g"], "o", "v").collect()}
-    assert rows[1]["prev_value"] is None and rows[1]["next_value"] == 20.0
-    assert rows[2]["prev_value"] == 10.0 and rows[2]["next_value"] is None
 
 
 def test_sessionize_gap_semantics(spark):
