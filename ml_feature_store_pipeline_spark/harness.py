@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .extractors import UserEventExtractor
-from .functions import davg_sql, dsum, dsum_sql
+from .functions import dsum, dsum_sql
 from .sources.readers import read_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]

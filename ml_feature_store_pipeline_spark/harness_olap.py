@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .functions import davg, davg_sql, dsum, dsum_sql
+from .functions import dsum, dsum_sql
 from .harness import register
 from .sources.readers import read_table
 

@@ -18,9 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .functions import davg, davg_sql, dsum, dsum_sql, local_frame, token_count, tokens
+from .functions import davg, davg_sql, dsum, dsum_sql, local_frame, token_count
 from .harness import register
-from .operators import dedup, joins, similarity, text, windows
+from .operators import joins, text, windows
 from .operators.sketches import hash_fraction_sql
 from .sources.readers import read_table
 

@@ -12,10 +12,12 @@ import time
 from typing import Any
 
 
+#: A registration scoring below this raises an alert (reference `:217`).
+ALERT_THRESHOLD = 0.8
+
+
 class FeatureMonitor:
-    def __init__(self, alert_threshold: float = 0.8) -> None:
-        # alert threshold is configurable here; hardcoded 0.8 in the reference `:217`
-        self.alert_threshold = alert_threshold
+    def __init__(self) -> None:
         self.access_counts: dict[str, int] = {}
         self.creation_records: list[dict[str, Any]] = []
         self.alerts: list[str] = []
@@ -34,7 +36,7 @@ class FeatureMonitor:
                 "logged_at": time.time(),
             }
         )
-        if quality_score < self.alert_threshold:
+        if quality_score < ALERT_THRESHOLD:
             self.alerts.append(
                 f"Low data quality score {quality_score:.3f} for version {version}"
             )

@@ -10,11 +10,13 @@ Pipeline.py:229-541`) on Spark:
   (`:277-278`) become partition pruning (version) + parquet row-group
   min/max stats (user_id, helped by sorting within partitions at write).
 - the reference's register (`:295-353`: validate, content-hash, insert)
-  → one observed write. The persisted frame is written into
+  → one observed write. The caller's frame is written into
   ``features/_staging-<uuid>/data`` under ``DataFrame.observe``, so that
-  single job also yields the content hash (the version id) and the
-  quality profile's first aggregate; the validator then runs one
-  aggregate for the distinct-row count and the outlier sums. The writer
+  single job, the one pass over the feature lineage, also yields the
+  content hash (the version id) and the quality profile's first
+  aggregate; the validator then runs one aggregate for the distinct-row
+  count and the outlier sums over the rows just written, read back from
+  the staging directory. The writer
   holds a ``flock`` on its staging directory while it works. Under the
   manifest lock the data directory is renamed to
   ``feature_version=<v>`` and the manifest entry is added; a version the
@@ -54,7 +56,6 @@ import uuid
 from collections.abc import Iterator
 from typing import Any
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -75,6 +76,13 @@ MANIFEST_NAME = "_manifest.json"
 #: Name prefix of a registration's staging directory under ``features/``;
 #: Spark's file listing skips ``_``-prefixed directories.
 STAGING_PREFIX = "_staging-"
+#: Seconds a version's serving index stays cached; the reference
+#: hardcodes 3600 (`:350, :412`).
+CACHE_TTL_S = 3600
+#: Rows are sorted by this column within each written file, so parquet
+#: row-group min/max stats let ``user_id`` point lookups skip row groups
+#: (the scalable stand-in for the reference's intended INDEX(user_id)).
+SORT_COLUMN = "user_id"
 
 
 def _utc_now_iso() -> str:
@@ -189,9 +197,6 @@ class FeatureStore:
         *,
         cache: CacheBackend | None = None,
         validator: DataQualityValidator | None = None,
-        cache_ttl: int = 3600,
-        alert_threshold: float = 0.8,
-        sort_within_partitions_by: str | None = "user_id",
         max_serving_index_rows: int = 5_000_000,
     ) -> None:
         self.spark = spark
@@ -200,9 +205,7 @@ class FeatureStore:
         self._manifest = _Manifest(os.path.join(path, MANIFEST_NAME))
         self.cache = cache or InMemoryTTLCache()
         self.validator = validator or DataQualityValidator()
-        self.cache_ttl = cache_ttl  # reference hardcodes 3600 (`:350, :412`)
-        self.monitor = FeatureMonitor(alert_threshold=alert_threshold)
-        self.sort_col = sort_within_partitions_by
+        self.monitor = FeatureMonitor()
         self.max_serving_index_rows = max_serving_index_rows
         os.makedirs(path, exist_ok=True)
 
@@ -224,22 +227,19 @@ class FeatureStore:
         (the write is what computes the version id), which is then
         dropped, and the existing entry (and ``latest_version()``) stays
         as it was.
+
+        The frame may not carry the columns the store stamps,
+        ``feature_version`` and ``created_at``: they would be hashed and
+        profiled as features, and overwritten on the stored rows.
         """
+        for name in (VERSION_COLUMN, CREATED_AT_COLUMN):
+            if name in features.columns:
+                raise ValueError(
+                    f"column {name!r} is stamped by the store; drop it before registering"
+                )
         if enforce_schema and metadata.features_config:
             self._check_schema(features, metadata)
-        # Register runs two actions over the same (often aggregate-shaped)
-        # feature lineage: the observed write and the validator's
-        # distinct/outlier aggregate. Unpersisted, each would re-compute
-        # the extractor from the source scan (guide §5). Persist for the
-        # register's duration only — a within-run pin of an intermediate
-        # (the ivf_build pattern), never a cross-run cache — and unpersist
-        # in finally so the store never holds storage memory past the call.
-        # A frame the caller already cached is used as it is and left
-        # cached: its storage level is the caller's to manage.
         staging, staging_fd = self._open_staging()
-        owned = features.storageLevel == StorageLevel.NONE
-        if owned:
-            features = features.persist()
         try:
             # one stamp for BOTH the feature rows and the metadata copy
             # below: a backfill's explicit metadata.created_at must also be
@@ -254,19 +254,18 @@ class FeatureStore:
             stamped = features.observe(
                 observation, *profile_aggregates(features), *content_aggregates(features)
             ).withColumn(CREATED_AT_COLUMN, F.lit(created_at))
-            if self.sort_col and self.sort_col in features.columns:
-                # sort within output files so parquet row-group min/max
-                # stats make later user_id point-lookups skip row groups
-                # (the scalable stand-in for the reference's intended
-                # INDEX(user_id))
-                stamped = stamped.sortWithinPartitions(self.sort_col)
+            if SORT_COLUMN in features.columns:
+                stamped = stamped.sortWithinPartitions(SORT_COLUMN)
             data = os.path.join(staging, "data")
             stamped.write.parquet(data)
             observed = observation.get
             version = version_from(observed)
             if self._entry(version) is not None:
                 return version
-            metrics, prof = self.validator.validate(features, observed)
+            # the validator's aggregate reads the rows just written, without
+            # the stamp, so the write stays the one pass over the lineage
+            written = self.spark.read.schema(features.schema).parquet(data)
+            metrics, prof = self.validator.validate(written, observed)
 
             # stamp a COPY — mutating the caller's object made a REUSED
             # FeatureMetadata carry the first registration's created_at into
@@ -305,8 +304,6 @@ class FeatureStore:
         finally:
             shutil.rmtree(staging, ignore_errors=True)
             os.close(staging_fd)  # after the removal: cleanup skips it until here
-            if owned:
-                features.unpersist()
 
     def _open_staging(self) -> tuple[str, int]:
         """A new staging directory and the open descriptor holding its
@@ -514,7 +511,7 @@ class FeatureStore:
             return self._serving_dict(rows[0]) if rows else {}
         rows = self.get_features(version=version).collect()
         index = {r["user_id"]: self._serving_dict(r) for r in rows}
-        self.cache.set(key, index, ttl=self.cache_ttl)
+        self.cache.set(key, index, ttl=CACHE_TTL_S)
         return index.get(int(user_id), {})
 
     def validate_serving_parity(
@@ -606,7 +603,10 @@ class FeatureStore:
         upsert) and staging directories whose writer is gone (no
         ``flock`` held on them). A crash in between leaves unlisted
         directories, never a listed version whose rows are gone, and the
-        next cleanup drops them. Returns the dropped listed versions."""
+        next cleanup drops them. ``keep_n=0`` drops every listed version.
+        Returns the dropped listed versions."""
+        if keep_n < 0:
+            raise ValueError(f"keep_n must be >= 0, got {keep_n}")
         with self._manifest.locked() as doc:
             newest_first = sorted(doc["versions"], key=_recency, reverse=True)
             doomed = [e[VERSION_COLUMN] for e in newest_first[keep_n:]]

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ml_feature_store_pipeline_spark.operators import cdc
 
 

@@ -5,8 +5,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql.utils import PythonException
 
 from ml_feature_store_pipeline_spark.operators import multimodal
 from ml_feature_store_pipeline_spark.streaming import streaming_feature_aggregation

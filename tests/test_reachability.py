@@ -9,6 +9,10 @@ Pure ``ast``: no Spark, no imports of the package. Names are matched by
 identifier, not by module, so a dead function that shares its name with
 a live one is missed; the scan errs towards keeping code, never towards
 a false failure.
+
+A second scan fails on a module-level import that its module, in the
+package or in ``tests/``, never uses. ``__init__.py`` re-exports are
+exempt, and so is a line marked ``# noqa: F401``.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "ml_feature_store_pipeline_spark"
+TESTS = ROOT / "tests"
 OUTSIDE_ROOTS = ["bench.py", "__spark_entry__.py", "perfbench", "tools", "examples"]
 IDENT = re.compile(r"[A-Za-z_]\w*\Z")
 
@@ -111,3 +116,37 @@ def test_every_package_definition_is_reachable():
     )
     stale = sorted(set(KEEP) - set(dead))
     assert not stale, f"KEEP entries that are reachable now or gone; drop them: {stale}"
+
+
+def unused_imports() -> list[str]:
+    """``module:line name`` for each module-level import that its module
+    never uses: not as a name, and not as an identifier string."""
+    out = []
+    for path in sorted(PACKAGE.rglob("*.py")) + sorted(TESTS.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        source = path.read_text()
+        lines = source.splitlines()
+        tree = ast.parse(source)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)} | {
+            n.value
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str) and IDENT.match(n.value)
+        }
+        for st in tree.body:
+            if not isinstance(st, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(st, "module", None) == "__future__":
+                continue
+            if any("# noqa: F401" in line for line in lines[st.lineno - 1 : st.end_lineno]):
+                continue
+            for a in st.names:
+                name = a.asname or a.name.split(".")[0]
+                if name not in used:
+                    out.append(f"{path.relative_to(ROOT).as_posix()}:{st.lineno} {name}")
+    return out
+
+
+def test_no_module_imports_a_name_it_never_uses():
+    unused = unused_imports()
+    assert not unused, "unused imports (remove them):\n" + "\n".join(f"  {u}" for u in unused)

@@ -521,12 +521,38 @@ def test_get_features_builds_with_no_spark_job(jobs_run_by, store, features):
     assert {r["feature_version"] for r in df.select("feature_version").collect()} == {v}
 
 
-def test_register_runs_at_most_seven_jobs(jobs_run_by, store, features):
-    # one observed write, then the validator's distinct/outlier aggregate;
-    # a separate validate, content hash and write ran 11
+def test_register_runs_at_most_six_jobs(jobs_run_by, store, features):
+    # one observed write, then the validator's distinct/outlier aggregate
+    # over the written files; persisting the frame for that aggregate ran
+    # 7, and a separate validate, content hash and write ran 11
     v, jobs = jobs_run_by(lambda: store.register_features(features, _meta()))
     assert store.latest_version() == v
-    assert jobs <= 7
+    assert jobs <= 6
+
+
+@pytest.mark.parametrize("column", ["feature_version", "created_at"])
+def test_register_rejects_the_stores_own_columns(store, features, column):
+    v = store.register_features(features, _meta())
+    again = store.get_features(v).drop(*{"feature_version", "created_at"} - {column})
+    with pytest.raises(ValueError, match=column):
+        store.register_features(again.withColumn("total_amount", F.col("total_amount") + 1), _meta())
+    own = features.withColumn(column, F.lit("2020-01-01T00:00:00"))
+    with pytest.raises(ValueError, match=column):
+        store.register_features(own, _meta())
+    assert [e["feature_version"] for e in store.list_feature_versions()] == [v]
+    assert sorted(os.listdir(store.features_path)) == [f"feature_version={v}"]
+
+
+def test_cleanup_rejects_a_negative_keep_n(store, features):
+    versions = [
+        store.register_features(features.withColumn("total_amount", F.col("total_amount") + i), _meta())
+        for i in range(2)
+    ]
+    with pytest.raises(ValueError, match="keep_n"):
+        store.cleanup_old_versions(keep_n=-1)
+    assert {e["feature_version"] for e in store.list_feature_versions()} == set(versions)
+    assert sorted(store.cleanup_old_versions(keep_n=0)) == sorted(versions)
+    assert store.list_feature_versions() == []
 
 
 def test_serve_of_an_unlisted_version_runs_no_spark_job(jobs_run_by, store, features):

@@ -7,7 +7,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from ml_feature_store_pipeline_spark.functions import token_count, tokens
+from ml_feature_store_pipeline_spark.functions import token_count
 from ml_feature_store_pipeline_spark.operators import text
 
 

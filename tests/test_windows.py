@@ -6,8 +6,6 @@ import datetime as dt
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from ml_feature_store_pipeline_spark.operators import windows
 
 
